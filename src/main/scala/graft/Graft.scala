@@ -342,7 +342,11 @@ object Graft {
     * operator persists carry no table names to target individually, so
     * a full clear is the only complete eviction — acceptable for the
     * intended use (refresh between corpus versions), not a per-query
-    * cache tool. */
+    * cache tool.
+    *
+    * Table metadata memoized by [[Tables]] (schemas, split and row-group
+    * counts) stays: it is keyed on each file's version, so a rewrite
+    * already misses it, and it holds no data. */
   def clearCaches(session: SparkSession): Unit = {
     ops.Similarity.clearSessionCaches(session)
     ops.Graph.clearSessionCaches(session)

@@ -627,15 +627,17 @@ object TextKernels {
   def packedPairs(ds: ArrayData): ArrayData = {
     val ids = ds.toLongArray()
     val n = ids.length
-    // loud failure, not corruption (ADVICE r18): C(n,2) in Int overflows
-    // past n = 65536 — a caller that bypasses the posting-df cap must
-    // die with a named bound, never a NegativeArraySizeException or a
-    // silently truncated pair set
-    require(n <= 65536,
-      s"packedPairs: posting list of $n ids exceeds the 65536 bound " +
-        "(C(n,2) overflows Int) — cap the group's df before emission")
+    // loud failure, not corruption (ADVICE r18/r19): n * (n - 1)
+    // overflows Int past n = 46341 — a caller that bypasses the
+    // posting-df cap must die with a named bound, never a
+    // NegativeArraySizeException or a silently truncated pair set
+    val size = n.toLong * (n - 1)
+    require(size <= Int.MaxValue,
+      s"packedPairs: posting list of $n ids exceeds the 46341 bound " +
+        "(n * (n - 1) must be at most Int.MaxValue) — cap the group's df " +
+        "before emission")
     java.util.Arrays.sort(ids)
-    val out = new Array[Long](n * (n - 1) / 2)
+    val out = new Array[Long]((size / 2).toInt)
     var k = 0
     var i = 0
     while (i < n) {

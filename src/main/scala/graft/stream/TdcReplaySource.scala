@@ -22,7 +22,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * {{{
   *   spark.readStream.format("graft-tdc-replay")
-  *     .option("path", "/root/reference/code/test/test_data.csv")
+  *     .option("path", "/data/tdc/test_data.csv") // golden CSV header
   *     .option("rowsPerBatch", 20)
   *     .load()
   * }}}

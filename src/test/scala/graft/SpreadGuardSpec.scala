@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * every map phase ran one task) is pinned here at unit scale, along
   * with the ADVICE-r14 refinements: the split-count bound (planner
   * packing), the overflow-safe fallback sentinel, and the short-circuit
-  * footer sweep.
+  * footer sweep, and the file-version key of both probe memos (a rewrite
+  * at the same path is probed again).
   *
   * The shared test session is local[4], so target = defaultParallelism
   * = 4 and the repartition threshold is "effective parallelism < 2".
@@ -28,6 +29,21 @@ class SpreadGuardSpec extends SparkSpec {
       .select(md5(col("id").cast("string")).as("s"))
       .coalesce(1).write.mode("overwrite").parquet(path)
 
+  /** Runs `body` under the given split confs, then restores whatever the
+    * shared session had — the TRUE prior state, not hardcoded Spark
+    * defaults (ADVICE r15). */
+  private def withSplitConfs[T](maxPartitionBytes: String,
+      openCostInBytes: String)(body: => T): T = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.zip(Seq(maxPartitionBytes, openCostInBytes))
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("r14 defect shape: single row group + many planned splits still spreads") {
     val dir = tmp("onerg")
     writeOneRowGroup(dir)
@@ -35,24 +51,58 @@ class SpreadGuardSpec extends SparkSpec {
     // of the one-row-group file — the exact sf10 lying-proxy shape: the
     // old split-count test read "healthy" while every split but one was
     // empty. The footer count must win.
-    // save whatever the shared session had so the finally block restores
-    // the TRUE prior state, not hardcoded Spark defaults (ADVICE r15)
-    val savedMax = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    val savedOpen = spark.conf.getOption("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try {
+    withSplitConfs("16384", "0") {
       val df = spark.read.parquet(dir)
       assert(df.rdd.getNumPartitions >= 2,
         "precondition: the planner must cut multiple splits")
       assert(Tables.rowGroups(spark, dir) === 1)
       val out = Tables.spread(spark, df, dir)
       assert(out.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
-    } finally {
-      def restore(k: String, v: Option[String]): Unit =
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      restore("spark.sql.files.maxPartitionBytes", savedMax)
-      restore("spark.sql.files.openCostInBytes", savedOpen)
+    }
+  }
+
+  test("a rewrite at the same path re-probes row groups: one to several") {
+    val dir = tmp("rewrite_rg")
+    withSplitConfs("16384", "0") {
+      writeOneRowGroup(dir)
+      val one = spark.read.parquet(dir)
+      assert(!(Tables.spread(spark, one, dir) eq one),
+        "one row group must be spread")
+      // same path, same data, now cut into many row groups: the decision
+      // must follow the new file, not the count probed from the old one
+      spark.range(50000)
+        .select(md5(col("id").cast("string")).as("s"))
+        .coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", "65536")
+        .parquet(dir)
+      assert(Tables.rowGroups(spark, dir) >= 2)
+      val many = spark.read.parquet(dir)
+      assert(many.rdd.getNumPartitions >= 2,
+        "precondition: the planner must cut multiple splits")
+      assert(Tables.spread(spark, many, dir) eq many,
+        "many row groups and many splits must be returned untouched")
+    }
+  }
+
+  test("a rewrite at the same path re-probes planned splits: many to one") {
+    val dir = tmp("rewrite_splits")
+    def write(rows: Long, blockSize: String): Unit =
+      spark.range(rows).select(md5(col("id").cast("string")).as("s"))
+        .coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", blockSize).parquet(dir)
+    withSplitConfs("65536", "4194304") {
+      write(50000, "65536")
+      val big = spark.read.parquet(dir)
+      assert(big.rdd.getNumPartitions >= 2 && Tables.rowGroups(spark, dir) >= 2)
+      assert(Tables.spread(spark, big, dir) eq big)
+      // a small rewrite fits one split (still several row groups): the
+      // old file's split count must not keep it unspread
+      write(1000, "4096")
+      val small = spark.read.parquet(dir)
+      assert(small.rdd.getNumPartitions === 1)
+      assert(Tables.rowGroups(spark, dir) >= 2)
+      assert(Tables.spread(spark, small, dir).rdd.getNumPartitions ===
+        spark.sparkContext.defaultParallelism)
     }
   }
 

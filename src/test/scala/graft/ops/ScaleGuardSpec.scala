@@ -199,6 +199,19 @@ class ScaleGuardSpec extends SparkSpec {
       "no posting-frame self-join below the pair-key exchange")
   }
 
+  test("packedPairs fails with its named bound where n * (n - 1) leaves Int") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import graft.functions.TextKernels
+    val small = TextKernels.packedPairs(
+      UnsafeArrayData.fromPrimitiveArray(Array(3L, 1L, 2L))).toLongArray()
+    assert(small.toSeq === Seq((1L << 32) | 2L, (1L << 32) | 3L, (2L << 32) | 3L))
+    // 46342 * 46341 is the first product past Int.MaxValue: the old
+    // n <= 65536 check admitted it and the Int size went negative
+    val ids = UnsafeArrayData.fromPrimitiveArray(Array.tabulate(46342)(_.toLong))
+    val e = intercept[IllegalArgumentException](TextKernels.packedPairs(ids))
+    assert(e.getMessage.contains("46341 bound"), e.getMessage)
+  }
+
   test("embedding near-dup blocks are bounded by maxBlock") {
     val s = spark
     import s.implicits._
