@@ -314,8 +314,10 @@ object Bench {
     parsed
   }
 
-  /** Minimal JSON string encoder for artifact fields that carry
-    * user-controlled text (env override values). */
+  /** Minimal JSON string encoder for text the engine does not control:
+    * env override values in the artifact and the oracle SQL in
+    * `Verify`'s oracle_sql.json. Every control char (<0x20) is escaped —
+    * a tab or CR left raw makes the reader's json.load fail. */
   private[graft] def jsonStr(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
@@ -326,7 +328,7 @@ object Bench {
 
   /** Every SPARK_GRAFT_* override in effect, as a JSON object — stamped
     * into the artifact so a diagnostics A/B run (INIT_PARTS,
-    * WINNOW_GROUPS, …) is distinguishable from a default close in the
+    * STREAM_PARTS, …) is distinguishable from a default close in the
     * recorded JSON (ADVICE r14: shuffle_partitions alone left the other
     * behavior-changing knobs invisible). */
   private[graft] def envOverridesJson(env: Map[String, String]): String =
@@ -461,43 +463,8 @@ object Bench {
     val (busy0, stall0, jtotal0) = hostJiffies()
     val self0 = selfJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // count-valued knobs are validated HERE so a typo fails the run with
-    // a clear message instead of emitting an invalid-JSON artifact
-    val cpus = parsePosInt("SPARK_GRAFT_CPUS",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val shuffleParts = parsePosInt("SPARK_GRAFT_SHUFFLE_PARTS",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString))
-    val initParts = parsePosInt("SPARK_GRAFT_INIT_PARTS",
-      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", shuffleParts.toString))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE_PARTS: diagnostics-only override of the
-      // session shuffle-partition count (default = cores, the value
-      // every recorded close uses). Exists for the winnow spill A/B
-      // (VERDICT r13 §3): more, smaller sort-fallback runs per
-      // partition vs more merge fan-in — measured, not guessed.
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      // AQE initial reducer count before runtime coalescing
-      // (SPARK_GRAFT_INIT_PARTS, diagnostics A/B): lets spill-heavy
-      // exchanges keep high fan-out while AQE coalesces small ones to
-      // ~advisory size — the per-shuffle provision decision a real
-      // cluster makes, here under measurement before any default moves.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initParts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        GraftConf.BypassMergeThreshold)
-      .config("spark.sql.optimizer.excludedRules", GraftConf.ExcludedRules)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // state-store maintenance runs on an async thread that can race
-      // spark.stop() after the last streaming probe and spew an
-      // RpcEnvStoppedException stack into stdout (it pushed round 8's
-      // JSON line out of the driver's 2000-char tail); the probes finish
-      // well inside 10 min, so maintenance simply never fires mid-bench
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "10min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val width = GraftConf.Width.fromEnv(defaultCpus = 32)
+    val spark = GraftConf.builder(width).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Pair-cardinality capture (VERDICT r15 #5): the two sf10-dominant
     // dedup queries carry a zero-cost observe() on their pair frame
@@ -714,7 +681,7 @@ object Bench {
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         import s.implicits._
-        graft.stream.Pipelines.sessionsWithStateV2(
+        graft.stream.Pipelines.sessionsWithState(
           df.select(col("user_id"), col("ts"))
             .as[graft.stream.Pipelines.SessionInput]).toDF()
       }))
@@ -886,14 +853,14 @@ object Bench {
     val pairCountsJson = pairCounts.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envOverrides = envOverridesJson(sys.env)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$shuffleParts,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":${width.shuffleParts},"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     // Compact summary: everything EXCEPT the per-query map. The driver
     // keeps only a ~2 KB tail of stdout, and the full line above is >6 KB
     // — its HEAD (including "metric" and "value") can never survive the
     // tail cut, which is why BENCH_r08/r09.json both carry parsed: null
     // (VERDICT r9 §1). This line is what the driver's tail parses; the
     // full line and the persisted file carry the per-query detail.
-    val compact = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","entries":${all.size},"nfailures":${all.count(!_._3)},"failures":$failures,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$shuffleParts,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","entries":${all.size},"nfailures":${all.count(!_._3)},"failures":$failures,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":${width.shuffleParts},"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     println(json)
     // The driver only keeps a 2000-char tail of stdout, which truncated
     // 61 of 121 entries (and the total) out of round 3's artifact. Persist

@@ -16,8 +16,64 @@ final case class Q(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])
 
-/** Session defaults shared by every entry point. */
+/** The engine's session factory: the one place engine-wide session conf
+  * is installed. Every main and the test session build through
+  * [[builder]], so a plan pinned by a spec describes the engine the
+  * bench runs. */
 object GraftConf {
+  /** Session width: `local[cpus]`, the session shuffle-partition count
+    * and AQE's initial reducer count before runtime coalescing. */
+  final case class Width(cpus: Int, shuffleParts: Int, initParts: Int)
+
+  object Width {
+    /** Every count at `cpus`, the width every recorded close uses. */
+    def apply(cpus: Int): Width = Width(cpus, cpus, cpus)
+
+    /** `SPARK_GRAFT_CPUS` (default `defaultCpus`),
+      * `SPARK_GRAFT_SHUFFLE_PARTS` (default cpus) and
+      * `SPARK_GRAFT_INIT_PARTS` (default shuffle parts). The two
+      * partition counts are diagnostics overrides: more, smaller
+      * sort-fallback runs per partition vs more merge fan-in, and
+      * spill-heavy exchanges keeping their fan-out while AQE coalesces
+      * small ones, each measured before any default moves. Each value
+      * is validated strictly, so a typo fails at session build instead
+      * of reaching the artifact line. */
+    def fromEnv(defaultCpus: Int, env: Map[String, String] = sys.env): Width = {
+      def read(k: String, dflt: Int) =
+        env.get(k).fold(dflt)(Bench.parsePosInt(k, _))
+      val cpus = read("SPARK_GRAFT_CPUS", defaultCpus)
+      val shuffleParts = read("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
+      Width(cpus, shuffleParts, read("SPARK_GRAFT_INIT_PARTS", shuffleParts))
+    }
+  }
+
+  /** Every engine-wide session key at width `w`, in install order. */
+  def engineConf(w: Width): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[${w.cpus}]",
+    "spark.sql.shuffle.partitions" -> w.shuffleParts.toString,
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      w.initParts.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.shuffle.sort.bypassMergeThreshold" -> BypassMergeThreshold,
+    "spark.sql.optimizer.excludedRules" -> ExcludedRules,
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // state-store maintenance runs on an async thread that can race
+    // spark.stop() after the last streaming query and spew an
+    // RpcEnvStoppedException stack into stdout, pushing Bench's JSON
+    // line out of the 2000-char stdout tail that is parsed; the bench's
+    // stream probes finish well inside 10 min, so maintenance simply
+    // never fires mid-run
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "10min",
+    "spark.ui.enabled" -> "false")
+
+  /** A session builder carrying [[engineConf]]; callers chain their own
+    * static confs (app name, warehouse dir) before `getOrCreate`. */
+  def builder(w: Width): SparkSession.Builder =
+    engineConf(w).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
   /** `InferFiltersFromGenerate` clones the generator's whole child
     * expression into a `size(...) > 0` filter and pushes it below
     * exchanges. Every generator input here is a computed, provably

@@ -269,36 +269,22 @@ object TextOps {
     })
 
   /** Winnowed rolling-hash near-dup candidates: explode each document's
-    * fingerprint set ([[graft.functions.Winnow]]), equi-join on the
-    * fingerprint, keep pairs sharing >= 10 — same linear join shape as
-    * minhash banding, but edit-position-robust. TextSpec pins the
-    * semantics; the DuckDB oracle (below) replays the hash itself. */
-  /** Winnow pair generation body — `maxDf` exposed for tests; the
-    * declared query runs at [[Dedup.MaxPostingDf]].
+    * fingerprint set ([[graft.functions.Winnow]]), group the postings by
+    * fingerprint, emit each group's C(df, 2) doc pairs and keep pairs
+    * sharing >= 10 fingerprints — the same linear posting-list shape as
+    * minhash banding, but edit-position-robust. ScaleGuardSpec pins the
+    * rows against a plain-Scala reference; the DuckDB oracle replays the
+    * hash itself.
     *
-    * `viaGroups` selects between two engine spellings of the same pair
-    * multiset (VERDICT r13 §3 measurement; the oracle is one spelling
-    * regardless):
-    *   - false: fp self-join — both sides shuffled on fp, SMJ/SHJ
-    *     machinery, pair rows flow join → (a,b) aggregation.
-    *   - true: group-emit — ONE shuffle of the exploded postings into
-    *     (fp → sorted doc list) groups, then the C(df,2) pairs of each
-    *     group emitted map-side by a nested-transform generator. The
-    *     df cap (≤ maxDf after the anti-join) bounds any group's
-    *     emission at C(cap,2) ≈ 500k structs — task-sized by
-    *     construction, which is what makes the single-task-per-fp
-    *     shape safe where the uncapped version would not be.
-    *     Removes one full shuffle of the exploded table plus the join
-    *     sorts; the final (a,b) aggregation is identical. */
-  /** The aggregated (a, b, n_shared >= 10) pair frame BEFORE the
-    * report checkpoint/sort — split out so specs can assert on the
-    * pair-stage plan, which the localCheckpoint in [[winnowPairs]]
-    * truncates to a Scan ExistingRDD. */
-  private[ops] def winnowPairsAgg(s: org.apache.spark.sql.SparkSession,
+    * This is the aggregated (a, b, n_shared >= 10) pair frame BEFORE the
+    * report checkpoint/sort — split out so specs (and `graft.Explain
+    * winnow_pairs_agg`) can see the pair-stage plan, which the
+    * localCheckpoint in [[winnowPairs]] truncates to a Scan ExistingRDD.
+    * `maxDf` and `pairTarget` are exposed for tests; the declared query
+    * runs at [[Dedup.MaxPostingDf]] and the default budget. */
+  private[graft] def winnowPairsAgg(s: org.apache.spark.sql.SparkSession,
       d: String, maxDf: Int,
-      viaGroups: Boolean = false,
-      pairTarget: Long = Dedup.PairStageTargetRawPerTask,
-      packing: Boolean = true)
+      pairTarget: Long = Dedup.PairStageTargetRawPerTask)
       : org.apache.spark.sql.DataFrame = {
     val fpAll = T.documents(s, d)
       .select(col("doc_id"),
@@ -316,10 +302,9 @@ object TextOps {
     // no localCheckpoint block traffic, no second steering job, and no
     // broadcast-exchange build; the hot set returns to the driver in
     // the same action that was already collecting the provisioning
-    // bound (the broadcast spelling ALSO staged the hot set through
-    // the driver, so driver state is unchanged — tiny by the stopword
-    // argument). The cap then applies as a map-side InSet filter on
-    // the re-exploded postings instead of an anti-join.
+    // bound (tiny by the stopword argument). The cap then applies as a
+    // map-side InSet filter on the re-exploded postings instead of an
+    // anti-join.
     //
     // EXACT raw pair cardinality of the df-capped pair stage: per-doc
     // fingerprints are distinct (winnow min-selection dedupes), so the
@@ -342,9 +327,9 @@ object TextOps {
     val hotFps = steer.getSeq[Long](1)
     // Packed-key guard: (a << 32) | b is a bijection on pairs iff every
     // doc_id sits in [0, 2^31) — true for every fixture and any corpus
-    // below two billion documents; an id space past that falls back to
-    // the two-long key, same results.
-    val packable = packing && !steer.isNullAt(2) && steer.getLong(2) >= 0L &&
+    // below two billion documents; an id space past that takes the
+    // struct-pair fallback below, same rows.
+    val packable = !steer.isNullAt(2) && steer.getLong(2) >= 0L &&
       steer.getLong(3) < (1L << 31)
     val sessionParts = s.sessionState.conf.numShufflePartitions
     val parts = Dedup.pairStageParts(rawPairs, sessionParts, pairTarget)
@@ -352,11 +337,9 @@ object TextOps {
     // (smaller) budget: an agg task holds a hash map over its DISTINCT
     // pairs, so raw-rows-per-task must keep that map inside a task's
     // execution-memory share — a tighter constraint than the emission
-    // stage's (state-free) one. SPARK_GRAFT_PAIR_AGG_TARGET overrides
-    // (diagnostics-only, width never changes the pair multiset).
+    // stage's (state-free) one.
     val aggParts = Dedup.pairStageParts(rawPairs, sessionParts,
-      sys.env.get("SPARK_GRAFT_PAIR_AGG_TARGET").map(_.toLong)
-        .getOrElse(Dedup.PairAggTargetRawPerTask))
+      Dedup.PairAggTargetRawPerTask)
     // Hot-key cap as a pure map-side filter: isInCollection over >10
     // elements plans an InSet (hash-set membership, whole-stage codegen)
     // — no broadcast exchange, no join operator, same surviving rows as
@@ -368,12 +351,11 @@ object TextOps {
     // moved from an env var into the engine): when the census bound
     // says the session-default stage would outrun per-task execution
     // memory (the sf20 ENOSPC regime), widen the pair-GENERATION stage
-    // — repartition on fp becomes the join/group exchange itself (both
-    // self-join sides reuse it), so the C(df,2) emission and its
-    // partial (a, b) aggregation run at `parts` tasks while every
-    // other exchange in the query keeps the session default. This is
-    // the scoped reproduction of the measured-good sf20@256 global
-    // override, minus its +40% whole-query dispatch tax at sf10.
+    // — repartition on fp becomes the group exchange itself, so the
+    // C(df,2) emission runs at `parts` tasks while every other exchange
+    // in the query keeps the session default. This is the scoped
+    // reproduction of the measured-good sf20@256 global override, minus
+    // its +40% whole-query dispatch tax at sf10.
     val fp = if (parts > sessionParts) fp0.repartition(parts, col("fp"))
              else fp0
     // Grouped emission (r18, guide §2.4 "remove shuffles outright" /
@@ -395,7 +377,37 @@ object TextOps {
     // expansion inside one task is ≤ ~500k longs — milliseconds, which
     // retires the "spread hot keys across tasks" argument the join
     // spelling was keeping alive.
-    if (packable && !viaGroups) {
+    //
+    // Shared-count aggregation — the query's dominant cost at scale.
+    // Measured shape before r18 (sf3, per-stage task metrics): the
+    // default partial+final aggregation spilled 42 GB to aggregate a
+    // 2.8 GB shuffle — 14 GB in the pair stage's partial agg and 28 GB
+    // in the 32-reducer final agg. The partial agg is STRUCTURALLY
+    // ineffective here: the pair rows are partitioned by fp, and a
+    // pair's duplicate rows (one per shared fingerprint) live in
+    // different fp-partitions, so map-side merging only catches the few
+    // copies that happen to share a partition (measured reduction 2.16x
+    // at sf3 — the map + sort-fallback cost far exceeds the shuffle
+    // bytes it saves). Two changes (guide §1.2 "fix the distributed
+    // algorithm first", §2.3 "shuffle fewer bytes"):
+    //
+    //  1. PACK the key: with doc ids under 2^31 the (a, b) pair packs
+    //     losslessly into ONE long — grouping/shuffle rows shrink
+    //     24 -> 16 bytes and key hashing halves. The bijection makes
+    //     groupBy(ab) produce exactly the groupBy(a, b) groups;
+    //     unpacking after the >= 10 filter touches only survivors.
+    //  2. Shuffle RAW pairs once, partitioned BY THE PAIR KEY, into a
+    //     census-provisioned number of agg tasks: the explicit
+    //     repartition on the key IS the aggregation exchange
+    //     (EnsureRequirements adds none), so the emission stage carries
+    //     no agg state at all — the ENOSPC regime's uncompressed
+    //     sort-fallback spill is gone by construction, replaced by
+    //     compressed shuffle files — and the agg runs where ALL copies
+    //     of a pair meet, with per-task groups sized by the budget to
+    //     fit execution memory. Measured (sf3, same session): 42 GB
+    //     spill -> 0, executor time 3640 s -> ~1100 s, wall 61.6 ->
+    //     ~35 s.
+    if (packable)
       fp.groupBy("fp")
         .agg(collect_list(col("doc_id")).as("ds"))
         .select(explode(
@@ -407,72 +419,24 @@ object TextOps {
         .select(shiftright(col("ab"), 32).as("a"),
           col("ab").bitwiseAND(lit(0xFFFFFFFFL)).as("b"),
           col("n_shared"))
-    } else {
-    val pairRows =
-      if (viaGroups)
-        // per-doc fingerprints are DISTINCT (the winnow min-selection
-        // dedupes), so each group's doc list has no repeats and the
-        // ascending sort makes every emitted struct satisfy a < b with
-        // the exact multiset the self-join would produce
-        fp.groupBy("fp")
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .select(explode(expr(
-            """flatten(transform(ds, (x, i) ->
-              |  transform(slice(ds, i + 2, size(ds)),
-              |            y -> struct(x AS a, y AS b))))""".stripMargin))
-            .as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-      else
-        fp.as("x").join(fp.as("y"),
-            col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-    // Shared-count aggregation — the query's dominant cost at scale.
-    // Measured shape before this round (sf3, per-stage task metrics):
-    // the default partial+final aggregation spilled 42 GB to aggregate
-    // a 2.8 GB shuffle — 14 GB in the pair stage's partial agg and
-    // 28 GB in the 32-reducer final agg. The partial agg is
-    // STRUCTURALLY ineffective here: the join output is partitioned by
-    // fp, and a pair's duplicate rows (one per shared fingerprint) live
-    // in different fp-partitions, so map-side merging only catches the
-    // few copies that happen to share a partition (measured reduction
-    // 2.16x at sf3 — the map + sort-fallback cost far exceeds the
-    // shuffle bytes it saves). Two changes (guide §1.2 "fix the
-    // distributed algorithm first", §2.3 "shuffle fewer bytes"):
-    //
-    //  1. PACK the key: with doc ids under 2^31 the (a, b) pair packs
-    //     losslessly into ONE long — grouping/shuffle rows shrink
-    //     24 -> 16 bytes and key hashing halves. The bijection makes
-    //     groupBy(ab) produce exactly the groupBy(a, b) groups;
-    //     unpacking after the >= 10 filter touches only survivors.
-    //  2. Shuffle RAW pairs once, partitioned BY THE PAIR KEY, into a
-    //     census-provisioned number of agg tasks (the same Σ C(df,2)
-    //     bound that provisions the emission stage, at its own
-    //     rows-per-task budget): the explicit repartition on ab IS the
-    //     aggregation exchange (EnsureRequirements adds none), so the
-    //     emission stage carries no agg state at all — the ENOSPC
-    //     regime's uncompressed sort-fallback spill is gone by
-    //     construction, replaced by compressed shuffle files — and the
-    //     agg runs where ALL copies of a pair meet, with per-task
-    //     groups sized by the budget to fit execution memory.
-    //     Measured (sf3, same session): 42 GB spill -> 0, executor time
-    //     3640 s -> ~1100 s, wall 61.6 -> ~35 s.
-    if (packable)
-      pairRows
-        .select((shiftleft(col("a"), 32).bitwiseOR(col("b"))).as("ab"))
-        .repartition(aggParts, col("ab"))
-        .groupBy(col("ab"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 10)
-        .select(shiftright(col("ab"), 32).as("a"),
-          col("ab").bitwiseAND(lit(0xFFFFFFFFL)).as("b"),
-          col("n_shared"))
     else
-      pairRows
+      // Doc ids outside [0, 2^31): the same grouped emission with a
+      // struct pair instead of the packed long. Per-doc fingerprints
+      // are DISTINCT, so each group's doc list has no repeats and the
+      // ascending sort makes every emitted struct satisfy a < b — the
+      // packed path's exact pair multiset, aggregated on (a, b).
+      fp.groupBy("fp")
+        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+        .select(explode(expr(
+          """flatten(transform(ds, (x, i) ->
+            |  transform(slice(ds, i + 2, size(ds)),
+            |            y -> struct(x AS a, y AS b))))""".stripMargin))
+          .as("p"))
+        .select(col("p.a").as("a"), col("p.b").as("b"))
         .repartition(aggParts, col("a"), col("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 10)
-    }
   }
 
   /** [[winnowPairsAgg]] plus the report boundary. Materialization
@@ -493,11 +457,9 @@ object TextOps {
     * blocks, and the sort pass reads them. */
   private[ops] def winnowPairs(s: org.apache.spark.sql.SparkSession,
       d: String, maxDf: Int,
-      viaGroups: Boolean = false,
-      pairTarget: Long = Dedup.PairStageTargetRawPerTask,
-      packing: Boolean = true)
+      pairTarget: Long = Dedup.PairStageTargetRawPerTask)
       : org.apache.spark.sql.DataFrame =
-    winnowPairsAgg(s, d, maxDf, viaGroups, pairTarget, packing)
+    winnowPairsAgg(s, d, maxDf, pairTarget)
       .localCheckpoint(false)
       .orderBy("a", "b")
       // Pair-cardinality stamp (VERDICT r15 #5): near-dup pairs (the
@@ -519,21 +481,7 @@ object TextOps {
     * byte handling, window edges, or the tie rule would flip rows. */
   val qTextWinnowPairs = Q(
     "q_text_winnow_pairs",
-    // SPARK_GRAFT_WINNOW_GROUPS=1 selects the group-emit spelling for
-    // the declared query — diagnostics-only A/B knob (same pattern as
-    // SPARK_GRAFT_STREAM_PARTS): both spellings produce the identical
-    // pair multiset (TextSpec pins it), so the oracle is untouched.
-    // SPARK_GRAFT_PAIR_TARGET overrides the pair-stage raw-rows-per-
-    // task budget (diagnostics-only, same policy): the provision
-    // changes only stage widths, never the pair multiset.
-    // SPARK_GRAFT_WINNOW_PACK=0 disables the packed pair key
-    // (diagnostics-only; packed and two-long groupings are the same
-    // multiset by bijection, TextSpec pins it).
-    (s, d) => winnowPairs(s, d, Dedup.MaxPostingDf,
-      viaGroups = sys.env.get("SPARK_GRAFT_WINNOW_GROUPS").contains("1"),
-      pairTarget = sys.env.get("SPARK_GRAFT_PAIR_TARGET").map(_.toLong)
-        .getOrElse(Dedup.PairStageTargetRawPerTask),
-      packing = !sys.env.get("SPARK_GRAFT_WINNOW_PACK").contains("0")),
+    (s, d) => winnowPairs(s, d, Dedup.MaxPostingDf),
     // Oracle hash construction, r16 respelling: the old hs CTE expanded
     // every character row against the 16-power table and re-aggregated
     // (ch × pows → GROUP BY doc,p — ~2.8G intermediate rows at sf10's

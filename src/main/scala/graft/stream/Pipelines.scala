@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** Event-time streaming pipelines (SURVEY.md §2b streaming row + §7.2
   * step 5). Each takes an unbounded DataFrame (from MemoryStream, rate,
@@ -59,10 +59,12 @@ object Pipelines {
   final case class SessionOut(
       user_id: Long, sess_start: Long, sess_end: Long, n_events: Long)
 
-  /** Custom-state sessionization via flatMapGroupsWithState — the shape to
-    * reach for when session semantics outgrow `session_window` (e.g.
-    * per-session running features). Demonstrates the state-store API the
-    * SURVEY mandates; `sessionCounts` is the built-in route.
+  /** Custom-state sessionization through Spark 4's `transformWithState`
+    * — the shape to reach for when session semantics outgrow
+    * `session_window` (e.g. per-session running features), with typed
+    * state handles and event-time timers. `sessionCounts` is the
+    * built-in route. Requires the RocksDB state store provider
+    * (transformWithState's backing store; rocksdbjni ships with Spark).
     *
     * State holds ALL of a user's open sessions, and a session emits only
     * once the WATERMARK passes its close (end + gap) — the point at
@@ -71,57 +73,6 @@ object Pipelines {
     * out-of-order data: an early event would emit immediately as its
     * own session, and a later event within its gap — still above the
     * watermark, so legal — could no longer merge with it. */
-  def sessionsWithState(events: Dataset[SessionInput],
-      gapMs: Long = 30L * 60 * 1000): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionsState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state: GroupState[SessionsState]) =>
-          // Interval-merge the open sessions WITH the batch's events,
-          // sorted by start, bridging any pair within gapMs. Uniform in
-          // every arrival order: an event inside / within-gap of an open
-          // session extends it (min-start/max-end), one beyond every
-          // session's gap opens its own. The timed-out invocation is the
-          // same fold with zero new events.
-          val wm = state.getCurrentWatermarkMs()
-          val ivs: List[SessionState] =
-            (state.getOption.map(_.open).getOrElse(Nil) ++
-              rows.map(r => { val t = r.ts.getTime; SessionState(t, t, 1L) }))
-              .sortBy(v => (v.start, v.end))
-          val merged = ivs.foldLeft(List.empty[SessionState]) {
-            case (h :: tl, v) if v.start - h.end <= gapMs =>
-              SessionState(h.start, math.max(h.end, v.end), h.n + v.n) :: tl
-            case (acc, v) => v :: acc
-          }
-          // A session is final once the watermark passes its close: no
-          // admissible (above-watermark) event can touch it again.
-          val (open, expired) = merged.partition(s => s.end + gapMs > wm)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(SessionsState(open))
-            // wake when the OLDEST open session's close passes; Spark
-            // rejects a timeout at/below the current watermark — clamp
-            // just above it for late-but-accepted data.
-            state.setTimeoutTimestamp(
-              math.max(open.map(_.end).min + gapMs, wm + 1))
-          }
-          expired.reverse
-            .map(s => SessionOut(user, s.start, s.end, s.n)).iterator
-      }
-  }
-
-  /** The same interval-merge sessionization through Spark 4's
-    * `transformWithState` — the successor API to
-    * [[sessionsWithState]]'s flatMapGroupsWithState, with typed state
-    * handles and first-class event-time timers instead of the single
-    * GroupState blob. Kept semantically identical (same fold, same
-    * watermark-close rule) and asserted output-equal in StreamingSpec,
-    * so the engine carries both API generations side by side. Requires
-    * the RocksDB state store provider (transformWithState's backing
-    * store; rocksdbjni ships with Spark). */
   class SessionProcessor(gapMs: Long)
       extends StatefulProcessor[Long, SessionInput, SessionOut] {
     @transient private var open: org.apache.spark.sql.streaming.ValueState[SessionsState] = _
@@ -138,9 +89,15 @@ object Pipelines {
         info: ExpiredTimerInfo): Iterator[SessionOut] =
       fold(user, Nil, tv.getCurrentWatermarkInMs())
 
-    /** Identical merge fold to [[sessionsWithState]]: open sessions +
-      * batch events interval-merge; a session emits once the watermark
-      * passes its close. */
+    /** Interval-merge the open sessions WITH the batch's events, sorted
+      * by start, bridging any pair within gapMs. Uniform in every
+      * arrival order: an event inside / within-gap of an open session
+      * extends it (min-start/max-end), one beyond every session's gap
+      * opens its own. The expired-timer call is the same fold with zero
+      * new events. A session emits once the watermark passes its close;
+      * the timer wakes the key when the OLDEST open session's close
+      * passes, clamped just above the watermark for late-but-accepted
+      * data. */
     private def fold(user: Long, newRows: List[SessionInput],
         wm: Long): Iterator[SessionOut] = {
       val ivs: List[SessionState] =
@@ -153,10 +110,9 @@ object Pipelines {
         case (acc, v) => v :: acc
       }
       val (stillOpen, expired) = merged.partition(s => s.end + gapMs > wm)
-      // registerTimer ADDS a timer (unlike GroupState's
-      // setTimeoutTimestamp, which replaces) — drop the stale wake-ups
-      // first or an active key accumulates one pending timer per batch
-      // and replays a cascade of no-op expirations
+      // registerTimer ADDS a timer rather than replacing one — drop the
+      // stale wake-ups first or an active key accumulates one pending
+      // timer per batch and replays a cascade of no-op expirations
       getHandle.listTimers().foreach(t =>
         getHandle.deleteTimer(t.asInstanceOf[Long]))
       if (stillOpen.isEmpty) open.clear()
@@ -170,8 +126,8 @@ object Pipelines {
     }
   }
 
-  /** [[sessionsWithState]] through the transformWithState API. */
-  def sessionsWithStateV2(events: Dataset[SessionInput],
+  /** [[SessionProcessor]] keyed by user, under a 2-hour watermark. */
+  def sessionsWithState(events: Dataset[SessionInput],
       gapMs: Long = 30L * 60 * 1000): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch measurement main (dev only, round 18): run one or more
   * declared queries through the noop sink and print the SUMMED task
@@ -13,25 +12,14 @@ import org.apache.spark.sql.SparkSession
   * clock reported only as context. Not part of the driver contract.
   *
   * Usage: runMain graft.tools.MetricsProbe <sfDir> <query>[,query...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SHUFFLE_PARTS.
+  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SHUFFLE_PARTS,
+  * SPARK_GRAFT_INIT_PARTS.
   */
 object MetricsProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.GraftConf.BypassMergeThreshold)
-      .config("spark.sql.optimizer.excludedRules", graft.GraftConf.ExcludedRules)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftConf.builder(
+      graft.GraftConf.Width.fromEnv(defaultCpus = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var run = 0L; @volatile var cpu = 0L; @volatile var gc = 0L

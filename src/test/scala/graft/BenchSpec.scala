@@ -143,21 +143,34 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parsePosInt("X", " 8 ") === 8)
     for (bad <- Seq("auto", "", "0", "-4", "3.5", "1e3"))
       assertThrows[IllegalArgumentException](Bench.parsePosInt("X", bad))
+    // the session width reads the same knobs through the same parser
+    import GraftConf.Width
+    assert(Width.fromEnv(4, Map.empty) === Width(4, 4, 4))
+    assert(Width.fromEnv(4, Map("SPARK_GRAFT_CPUS" -> "8")) === Width(8))
+    assert(Width.fromEnv(4, Map("SPARK_GRAFT_SHUFFLE_PARTS" -> "16")) ===
+      Width(4, 16, 16))
+    assert(Width.fromEnv(4, Map("SPARK_GRAFT_INIT_PARTS" -> "64")) ===
+      Width(4, 4, 64))
+    assertThrows[IllegalArgumentException](
+      Width.fromEnv(4, Map("SPARK_GRAFT_CPUS" -> "auto")))
   }
 
   test("env_overrides stamp: SPARK_GRAFT_* only, sorted, JSON-escaped") {
     val env = Map(
       "SPARK_GRAFT_SHUFFLE_PARTS" -> "512",
-      "SPARK_GRAFT_WINNOW_GROUPS" -> "1",
+      "SPARK_GRAFT_STREAM_PARTS" -> "8",
       "SPARK_GRAFT_INIT_PARTS" -> "256",
       "PATH" -> "/usr/bin",
       "HOME" -> "/root")
     assert(Bench.envOverridesJson(env) ===
-      """{"SPARK_GRAFT_INIT_PARTS":"256","SPARK_GRAFT_SHUFFLE_PARTS":"512","SPARK_GRAFT_WINNOW_GROUPS":"1"}""")
+      """{"SPARK_GRAFT_INIT_PARTS":"256","SPARK_GRAFT_SHUFFLE_PARTS":"512","SPARK_GRAFT_STREAM_PARTS":"8"}""")
     assert(Bench.envOverridesJson(Map("HOME" -> "/root")) === "{}")
     // a hostile value cannot break the artifact's JSON
     assert(Bench.envOverridesJson(Map("SPARK_GRAFT_X" -> "a\"b\\c\nd"))
       === "{\"SPARK_GRAFT_X\":\"a\\\"b\\\\c\\u000ad\"}")
+    // tab and CR too: a raw control char makes json.load fail
+    assert(Bench.envOverridesJson(Map("SPARK_GRAFT_X" -> "a\tb\rc"))
+      === "{\"SPARK_GRAFT_X\":\"a\\u0009b\\u000dc\"}")
   }
 
   test("close retry: once, only on uncertified, only when enabled (VERDICT r14 #5)") {

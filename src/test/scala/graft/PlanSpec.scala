@@ -18,6 +18,12 @@ class PlanSpec extends SparkSpec {
   private def count(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).size
 
+  test("the test session carries every engine-wide key from the factory") {
+    // the plan pins here must describe the engine the bench runs
+    for ((k, v) <- GraftConf.engineConf(GraftConf.Width(4)))
+      assert(spark.conf.getOption(k) === Some(v), k)
+  }
+
   test("q_filter_pred: predicates reach the parquet scan, columns pruned") {
     val p = plan("q_filter_pred")
     assert(p.contains("PushedFilters:"), p)

@@ -21,6 +21,17 @@ class StreamingSpec extends SparkSpec {
     q.stop()
   }
 
+  /** Runs `body` on the RocksDB state store (transformWithState's
+    * backing store), restoring the session's provider afterwards. */
+  private def withRocksDb(body: => Unit): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("tumbling windows drop events later than the watermark") {
     val s = spark
     import s.implicits._
@@ -70,44 +81,17 @@ class StreamingSpec extends SparkSpec {
     assert(rows.filter(_._1 == 2L).map(_._2).toSeq === Seq(1L))
   }
 
-  test("flatMapGroupsWithState sessionization matches session_window") {
+  test("transformWithState sessionization splits at the gap with exact bounds") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val in = MemoryStream[Pipelines.SessionInput]
-    val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
-      .writeStream.format("memory").queryName("fmgws").outputMode("append")
-      .start()
-    in.addData(
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")),
-      Pipelines.SessionInput(1L, ts("2026-01-01 11:00:00")))
-    q.processAllAvailable()
-    in.addData(Pipelines.SessionInput(9L, ts("2026-01-01 23:00:00")))
-    q.processAllAvailable()
-    in.addData(Pipelines.SessionInput(9L, ts("2026-01-02 10:00:00")))
-    runToCompletion(q)
-    val rows = s.sql("SELECT user_id, n_events FROM fmgws WHERE user_id = 1")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows === Set((1L, 2L), (1L, 1L)),
-      s"expected sessions {2 events, 1 event}, got $rows")
-  }
-
-  test("transformWithState sessionization matches flatMapGroupsWithState") {
-    val s = spark
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      // transformWithState is backed by the RocksDB state store
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb {
       val in = MemoryStream[Pipelines.SessionInput]
-      val q = Pipelines.sessionsWithStateV2(in.toDS(), gapMs = 30L * 60 * 1000)
+      val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
         .writeStream.format("memory").queryName("tws").outputMode("append")
         .start()
-      // same scenario as the fMGWS test: two sessions for user 1, the
-      // second batch's far-future events advance the watermark past them
+      // two sessions for user 1 (the 11:00 event is past the 30min gap);
+      // the later batches' far-future events advance the watermark past them
       in.addData(
         Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
         Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")),
@@ -122,18 +106,12 @@ class StreamingSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
-      // identical sessions to the fMGWS path: (09:00-09:10, 2 events)
-      // and (11:00-11:00, 1 event)
+      // (09:00-09:10, 2 events) and (11:00-11:00, 1 event)
       assert(rows === Set(
         (1L, ts("2026-01-01 09:00:00").getTime,
           ts("2026-01-01 09:10:00").getTime, 2L),
         (1L, ts("2026-01-01 11:00:00").getTime,
           ts("2026-01-01 11:00:00").getTime, 1L)), rows.toString)
-    } finally prev match {
-      case Some(v) =>
-        s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -141,64 +119,68 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val in = MemoryStream[Pipelines.SessionInput]
-    val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
-      .writeStream.format("memory").queryName("fmgws_ooo").outputMode("append")
-      .start()
-    // batch 1: open session [09:00, 09:10]
-    in.addData(
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")))
-    q.processAllAvailable()
-    // batch 2: out-of-order events above the 2h watermark — one inside
-    // the open span, one before its start. The merge must take
-    // min(start)/max(end): end stays 09:10 (s.copy(end = t) would drag
-    // it back to 08:55 and emit a shrunken session).
-    in.addData(
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:05:00")),
-      Pipelines.SessionInput(1L, ts("2026-01-01 08:55:00")))
-    q.processAllAvailable()
-    // flush: advance the watermark far past the session close
-    in.addData(Pipelines.SessionInput(9L, ts("2026-01-01 23:00:00")))
-    runToCompletion(q)
-    val rows = s.sql(
-        "SELECT sess_start, sess_end, n_events FROM fmgws_ooo WHERE user_id = 1")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows === Set((
-      ts("2026-01-01 08:55:00").getTime,
-      ts("2026-01-01 09:10:00").getTime, 4L)), s"got $rows")
+    withRocksDb {
+      val in = MemoryStream[Pipelines.SessionInput]
+      val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
+        .writeStream.format("memory").queryName("tws_ooo").outputMode("append")
+        .start()
+      // batch 1: open session [09:00, 09:10]
+      in.addData(
+        Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
+        Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")))
+      q.processAllAvailable()
+      // batch 2: out-of-order events above the 2h watermark — one inside
+      // the open span, one before its start. The merge must take
+      // min(start)/max(end): end stays 09:10 (s.copy(end = t) would drag
+      // it back to 08:55 and emit a shrunken session).
+      in.addData(
+        Pipelines.SessionInput(1L, ts("2026-01-01 09:05:00")),
+        Pipelines.SessionInput(1L, ts("2026-01-01 08:55:00")))
+      q.processAllAvailable()
+      // flush: advance the watermark far past the session close
+      in.addData(Pipelines.SessionInput(9L, ts("2026-01-01 23:00:00")))
+      runToCompletion(q)
+      val rows = s.sql(
+          "SELECT sess_start, sess_end, n_events FROM tws_ooo WHERE user_id = 1")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows === Set((
+        ts("2026-01-01 08:55:00").getTime,
+        ts("2026-01-01 09:10:00").getTime, 4L)), s"got $rows")
+    }
   }
 
   test("an event a full gap before the open session opens its OWN session") {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    val in = MemoryStream[Pipelines.SessionInput]
-    val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
-      .writeStream.format("memory").queryName("fmgws_early")
-      .outputMode("append").start()
-    // batch 1: open session [09:00, 09:10]
-    in.addData(
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
-      Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")))
-    q.processAllAvailable()
-    // batch 2: out-of-order event at 08:00 — above the 2h watermark so
-    // it is NOT dropped, but more than the 30min gap before the open
-    // session's start: folding it against the session END alone
-    // (t - end <= gap, trivially true for early events) would swallow
-    // it into one [08:00, 09:10] session; correct semantics are two.
-    in.addData(Pipelines.SessionInput(1L, ts("2026-01-01 08:00:00")))
-    q.processAllAvailable()
-    in.addData(Pipelines.SessionInput(9L, ts("2026-01-01 23:00:00")))
-    runToCompletion(q)
-    val rows = s.sql(
-        "SELECT sess_start, sess_end, n_events FROM fmgws_early WHERE user_id = 1")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows === Set(
-      (ts("2026-01-01 08:00:00").getTime,
-       ts("2026-01-01 08:00:00").getTime, 1L),
-      (ts("2026-01-01 09:00:00").getTime,
-       ts("2026-01-01 09:10:00").getTime, 2L)), s"got $rows")
+    withRocksDb {
+      val in = MemoryStream[Pipelines.SessionInput]
+      val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
+        .writeStream.format("memory").queryName("tws_early")
+        .outputMode("append").start()
+      // batch 1: open session [09:00, 09:10]
+      in.addData(
+        Pipelines.SessionInput(1L, ts("2026-01-01 09:00:00")),
+        Pipelines.SessionInput(1L, ts("2026-01-01 09:10:00")))
+      q.processAllAvailable()
+      // batch 2: out-of-order event at 08:00 — above the 2h watermark so
+      // it is NOT dropped, but more than the 30min gap before the open
+      // session's start: folding it against the session END alone
+      // (t - end <= gap, trivially true for early events) would swallow
+      // it into one [08:00, 09:10] session; correct semantics are two.
+      in.addData(Pipelines.SessionInput(1L, ts("2026-01-01 08:00:00")))
+      q.processAllAvailable()
+      in.addData(Pipelines.SessionInput(9L, ts("2026-01-01 23:00:00")))
+      runToCompletion(q)
+      val rows = s.sql(
+          "SELECT sess_start, sess_end, n_events FROM tws_early WHERE user_id = 1")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows === Set(
+        (ts("2026-01-01 08:00:00").getTime,
+         ts("2026-01-01 08:00:00").getTime, 1L),
+        (ts("2026-01-01 09:00:00").getTime,
+         ts("2026-01-01 09:10:00").getTime, 2L)), s"got $rows")
+    }
   }
 
   test("dropDuplicatesWithinWatermark emits each key once") {

@@ -3,6 +3,7 @@ package graft.ops
 import graft.SparkSpec
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Hot-key / hot-block guards that keep the dedup family linear at corpus
   * scale: document-frequency caps on posting lists and fingerprint joins,
@@ -56,25 +57,66 @@ class ScaleGuardSpec extends SparkSpec {
     assert(full === Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
-  test("winnow group-emit spelling is row-identical to the self-join") {
-    // VERDICT r13 §3: the group-emit variant (one shuffle into
-    // fp-groups, C(df,2) pairs emitted map-side under the df cap)
-    // must produce the exact (a, b, n_shared) set of the self-join
-    // spelling on real corpus data — same multiset of pairs per shared
-    // fingerprint, so the >= 10 filter bites identically. Checked on
-    // the sf0.001 documents table, which has genuine near-dup clusters.
-    val sf = SparkSpec.Sf0001
-    def rows(viaGroups: Boolean): Set[(Long, Long, Long)] =
-      TextOps.winnowPairs(spark, sf, graft.ops.Dedup.MaxPostingDf,
-          viaGroups = viaGroups)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    val joined = rows(viaGroups = false)
-    val grouped = rows(viaGroups = true)
-    assert(grouped.nonEmpty, "fixture produced no winnow pairs at all")
-    assert(grouped === joined,
-      s"group-emit diverged: only-grouped=${(grouped -- joined).take(5)} " +
-        s"only-joined=${(joined -- grouped).take(5)}")
+  /** Plain-Scala winnow pair reference, with no Spark operator and no
+    * packedPairs: each document's [[graft.functions.Winnow.kernel]]
+    * fingerprints, grouped by fingerprint with groups over maxDf
+    * dropped, each pair's shared-fingerprint count, pairs sharing >= 10
+    * kept. */
+  private def winnowReference(dir: String,
+      maxDf: Int = Dedup.MaxPostingDf): Set[(Long, Long, Long)] = {
+    val postings = graft.Tables.documents(spark, dir)
+      .select("doc_id", "text").collect().toSeq
+      .filterNot(_.isNullAt(1))
+      .flatMap { r =>
+        graft.functions.Winnow.kernel(UTF8String.fromString(r.getString(1)),
+          16, 8).toLongArray().toSeq.map(_ -> r.getLong(0))
+      }
+    postings.groupBy(_._1).values.map(_.map(_._2).sorted)
+      .filter(_.size <= maxDf)
+      .flatMap(_.combinations(2).map { case Seq(a, b) => (a, b) })
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+      .collect { case ((a, b), n) if n >= 10 => (a, b, n) }.toSet
+  }
+
+  private def winnowRows(dir: String): Set[(Long, Long, Long)] =
+    TextOps.winnowPairs(spark, dir, Dedup.MaxPostingDf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("winnow pairs equal a plain-Scala reference on sf0.001") {
+    // checked on the sf0.001 documents table, which has genuine
+    // near-dup clusters, so the >= 10 filter and the df cap both bite
+    val engine = winnowRows(SparkSpec.Sf0001)
+    val ref = winnowReference(SparkSpec.Sf0001)
+    assert(ref.nonEmpty, "fixture produced no winnow pairs at all")
+    assert(engine === ref, s"engine diverged: only-engine=${
+      (engine -- ref).take(5)} only-reference=${(ref -- engine).take(5)}")
+  }
+
+  test("winnow doc ids past 2^31 take the struct-pair fallback, same rows " +
+      "as the reference") {
+    // (a << 32) | b is no bijection once an id leaves [0, 2^31): the
+    // ids here start at 2^31 and one sits past 2^32, so a packed key
+    // would corrupt every pair
+    val body = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed " +
+      "do eiusmod tempor incididunt ut labore et dolore magna aliqua ut " +
+      "enim ad minim veniam quis nostrud exercitation ullamco laboris")
+    val base = 1L << 31
+    writeDocs(base -> body, (base + 1) -> (body + " nisi ut aliquip"),
+      ((1L << 32) + 7) -> ("lorem ipsum dolor sit amet but then " +
+        "something else entirely, with no further overlap to speak of"),
+      ((1L << 32) + 9) -> body.reverse)
+    val engine = winnowRows(tmp)
+    val ref = winnowReference(tmp)
+    assert(ref.map(r => (r._1, r._2)) === Set((base, base + 1)),
+      s"fixture must yield exactly the planted pair, got $ref")
+    assert(engine === ref)
+    val plan = TextOps.winnowPairsAgg(spark, tmp, Dedup.MaxPostingDf)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("graft_packed_pairs"),
+      "ids past 2^31 must not reach the packed-key emission")
+    assert(plan.linesIterator.exists(l => l.contains("REPARTITION_BY_NUM") &&
+      l.contains("hashpartitioning(a")),
+      "fallback pairs must shuffle by (a, b) before aggregating")
   }
 
   test("a hot band beyond the DECLARED cap never reaches pair expansion") {
@@ -165,13 +207,12 @@ class ScaleGuardSpec extends SparkSpec {
   test("packed pair key (r18): groupBy((a<<32)|b) is row-identical to " +
       "groupBy(a, b), and the agg exchange is the explicit ab repartition") {
     val sf = SparkSpec.Sf0001
-    def rows(packing: Boolean) =
-      TextOps.winnowPairs(spark, sf, Dedup.MaxPostingDf, packing = packing)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val (packed, twoLong) = (rows(true), rows(false))
+    // the reference counts shared fingerprints per (a, b) tuple, so the
+    // equality is the packed key against groupBy(a, b)
+    val (packed, twoLong) = (winnowRows(sf), winnowReference(sf))
     assert(packed.nonEmpty, "fixture produced no winnow pairs at all")
     assert(packed === twoLong, s"packed key diverged: only-packed=${
-      (packed -- twoLong).take(5)} only-two-long=${(twoLong -- packed).take(5)}")
+      (packed -- twoLong).take(5)} only-reference=${(twoLong -- packed).take(5)}")
     // plan shape: the aggregation's exchange is the census-provisioned
     // explicit repartition on the packed key (raw pairs shuffle BY THE
     // PAIR KEY; no partial agg runs before the exchange — the r18
