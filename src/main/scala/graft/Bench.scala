@@ -20,6 +20,13 @@ object Bench {
     * regression of the benched surface. */
   val Controls: Set[String] = Set("q_join_theta_range")
 
+  /** State partitions of every stream probe; [[streamProbe]] has the
+    * sizing rule and the A/B that set it. */
+  private[graft] val StreamParts = 8
+
+  private[graft] val StateStoreProvider =
+    "spark.sql.streaming.stateStore.providerClass"
+
   /** Streaming throughput probe: the events table replayed through a
     * [[graft.stream.Pipelines]] transform as a bounded stream
     * (Trigger.AvailableNow), so state-store / watermark regressions show
@@ -44,8 +51,10 @@ object Bench {
     * planning, offset WAL) is ~1-2 s. So this probe now returns the
     * finalization batch separately and "setup" means ONLY the fixed
     * remainder: (elapsed, per-data-batch seconds in order, finalize
-    * seconds summed over 0-row batches). */
-  private def streamProbe(spark: SparkSession, sfDir: String,
+    * seconds summed over 0-row batches). The state partition count and
+    * a transform's state-store provider are restored when the probe
+    * ends, so probes run in any order and leak no conf into batch work. */
+  private[graft] def streamProbe(spark: SparkSession, sfDir: String,
       mode: String,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       batches: Int = 1): (Double, Seq[Double], Double) = {
@@ -107,15 +116,9 @@ object Bench {
     // 4.1 -> 0.9 s. At 100 TB the same sizing rule provisions MORE
     // partitions (state grows with the workload); what it never does is
     // pay 32 partitions' fixed costs to host 8 MB.
-    // SPARK_GRAFT_STREAM_PARTS overrides for A/B reproduction;
-    // SPARK_GRAFT_STREAM_PROVIDER=rocksdb forces the RocksDB store on
-    // every probe instead of only the transformWithState one.
     val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val priorProvider = spark.conf.get(StateStoreProvider)
+    spark.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
     try {
       val t0 = System.nanoTime()
       val reader = spark.readStream.schema(rawSchema)
@@ -157,8 +160,8 @@ object Bench {
         }
       (total, perBatch, finalize)
     } finally {
-      // the stream-sized partition count must not leak into batch queries
       spark.conf.set("spark.sql.shuffle.partitions", priorParts)
+      spark.conf.set(StateStoreProvider, priorProvider)
       // a staged table copy + checkpoint per probe per run adds up fast
       // in /tmp — delete both (bottom-up) once the probe is done
       Seq(dir, ckpt).foreach { root =>
@@ -170,6 +173,74 @@ object Bench {
       }
     }
   }
+
+  /** The stream probes, each (name, output mode, staged batches,
+    * transform) over the events stream; `sfDir` feeds the enrichment
+    * probe's batch side. */
+  private[graft] def streamDefs(sfDir: String): Seq[(String, String, Int,
+      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+    ("q_stream_tumbling", "append", 1,
+      df => graft.stream.Pipelines.tumblingCounts(df)),
+    // the SAME windowed aggregation through update output mode — the
+    // dashboard-facing sink path where changed aggregates re-emit per
+    // micro-batch instead of waiting for watermark finalization; a
+    // distinct sink/state interaction the append probes never touch
+    ("q_stream_tumbling_update", "update", 1,
+      df => graft.stream.Pipelines.tumblingCounts(df)),
+    // session_window exercises the merging-state path — the heavier
+    // state-store shape tumbling windows never touch
+    ("q_stream_sessions", "append", 1,
+      df => graft.stream.Pipelines.sessionCounts(df)),
+    // dropDuplicatesWithinWatermark exercises the state-store dedup
+    // path — the streaming twin of q_dedup_exact
+    ("q_stream_dedup", "append", 1,
+      df => graft.stream.Pipelines.dedupKeyed(df, Seq("user_id", "ts"))),
+    // watermarked stream-stream time-range join — double the state
+    // stores plus the interval condition; the heaviest streaming shape
+    // the engine declares
+    ("q_stream_join", "append", 2, df => {
+      val base = df.select(col("user_id").as("key"), col("ts"),
+        col("event_type"))
+      graft.stream.Pipelines.coincidence(
+        base.filter(col("event_type") === "click"),
+        base.filter(col("event_type") === "purchase"),
+        toleranceSec = 60, watermark = "1 hour")
+    }),
+    // LEFT-OUTER stream-stream join — the unmatched-detection shape:
+    // clicks with no purchase in tolerance are emitted null-padded at
+    // state eviction, a different state-store path from the inner
+    // join's match-time output
+    ("q_stream_join_outer", "append", 2, df => {
+      val base = df.select(col("user_id").as("key"), col("ts"),
+        col("event_type"))
+      graft.stream.Pipelines.coincidence(
+        base.filter(col("event_type") === "click"),
+        base.filter(col("event_type") === "purchase"),
+        toleranceSec = 60, watermark = "1 hour",
+        joinType = "left_outer")
+    }),
+    // stream-static broadcast enrichment — the stateless shape (no
+    // watermark, no state store); the dim side is a batch aggregate
+    // of the same table, broadcast into every micro-batch
+    ("q_stream_enrich", "append", 1, df => {
+      val dim = Tables.events(df.sparkSession, sfDir)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"))
+      graft.stream.Pipelines.enrichStatic(
+        df.select("event_id", "user_id", "event_type", "value"),
+        dim, "user_id")
+    }),
+    // transformWithState sessionization on the RocksDB store — the
+    // Spark 4 state-API path; streamProbe restores the provider after
+    ("q_stream_sessions_tws", "append", 1, df => {
+      val s = df.sparkSession
+      s.conf.set(StateStoreProvider,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      import s.implicits._
+      graft.stream.Pipelines.sessionsWithState(
+        df.select(col("user_id"), col("ts"))
+          .as[graft.stream.Pipelines.SessionInput]).toDF()
+    }))
 
   /** (busy, total) jiffies from the aggregate `cpu` line of /proc/stat.
     * busy = user+nice+system ONLY — the same accounting basis as a
@@ -302,17 +373,35 @@ object Bench {
     }
 
   /** Parse a count-valued SPARK_GRAFT_* override as a positive Int,
-    * failing LOUDLY at session-build time: interpolating a raw env
-    * string into the artifact line meant a typo'd override produced an
-    * invalid-JSON artifact instead of a clear error (ADVICE r14). */
-  private[graft] def parsePosInt(name: String, v: String): Int = {
-    val parsed = try v.trim.toInt catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"$name must be a positive integer, got '$v'") }
-    if (parsed <= 0) throw new IllegalArgumentException(
-      s"$name must be a positive integer, got '$v'")
-    parsed
-  }
+    * failing LOUDLY at startup: interpolating a raw env string into the
+    * artifact line meant a typo'd override produced an invalid-JSON
+    * artifact instead of a clear error (ADVICE r14). */
+  private[graft] def parsePosInt(name: String, v: String): Int =
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw
+      new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
+
+  /** `SPARK_GRAFT_PASSES`, the timed passes per entry (default 2). */
+  private[graft] def passesFromEnv(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_PASSES").fold(2)(
+      parsePosInt("SPARK_GRAFT_PASSES", _))
+
+  /** `SPARK_GRAFT_ONLY`, the comma-separated entry filter shared by
+    * Bench and Verify; None runs every entry. Each name must be a
+    * declared query, a stream probe or `ivf_lloyd`: a filter matching
+    * nothing would otherwise run zero entries and close as a
+    * valid-looking `"value":0.0`, so it fails before any query runs. */
+  private[graft] def onlyFromEnv(
+      env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get("SPARK_GRAFT_ONLY").map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val known = SparkEntry.queries.keySet ++
+        streamDefs("").map(_._1) + "ivf_lloyd"
+      val unknown = (names -- known).toSeq.sorted
+      require(names.nonEmpty, "SPARK_GRAFT_ONLY names no entry")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names unknown entries: ${unknown.mkString(", ")}")
+      names
+    }
 
   /** Minimal JSON string encoder for text the engine does not control:
     * env override values in the artifact and the oracle SQL in
@@ -327,9 +416,9 @@ object Bench {
     }.mkString("\"", "", "\"")
 
   /** Every SPARK_GRAFT_* override in effect, as a JSON object — stamped
-    * into the artifact so a diagnostics A/B run (INIT_PARTS,
-    * STREAM_PARTS, …) is distinguishable from a default close in the
-    * recorded JSON (ADVICE r14: shuffle_partitions alone left the other
+    * into the artifact so a filtered or reduced run (ONLY, PASSES, …)
+    * is distinguishable from a default close in the recorded JSON
+    * (ADVICE r14: shuffle_partitions alone left the other
     * behavior-changing knobs invisible). */
   private[graft] def envOverridesJson(env: Map[String, String]): String =
     env.toSeq.filter(_._1.startsWith("SPARK_GRAFT_")).sortBy(_._1)
@@ -406,24 +495,30 @@ object Bench {
     } catch { case _: Throwable => -1.0 }
 
   def main(args: Array[String]): Unit = {
+    // validated before the settle loop, which can wait up to 3 min:
+    // a typo fails at once instead of after the wait
+    val cpus = GraftConf.cpusFromEnv(defaultCpus = 32)
+    val passes = passesFromEnv()
+    val only = onlyFromEnv()
     // SPARK_GRAFT_CLOSE_RETRY=0 opts out (single-query iteration and
     // diagnostics runs don't need the re-settle machinery).
     val retryEnabled =
       sys.env.getOrElse("SPARK_GRAFT_CLOSE_RETRY", "1") != "0"
     var attempt = 1
-    var quality = runSweep(attempt)
+    var quality = runSweep(attempt, cpus, passes, only)
     while (shouldRetry(quality, attempt, retryEnabled)) {
       System.err.println(s"[bench] close attempt $attempt uncertified " +
         "(host-noise gates); re-settling and re-running once")
       attempt += 1
-      quality = runSweep(attempt)
+      quality = runSweep(attempt, cpus, passes, only)
     }
   }
 
   /** One full sweep: settle, run every declared query + streaming
     * probe, emit and persist the artifact. Returns the close_quality
     * grade so [[main]] can decide on the single bounded retry. */
-  private def runSweep(attempt: Int): String = {
+  private def runSweep(attempt: Int, cpus: Int, passes: Int,
+      only: Option[Set[String]]): String = {
     // Host-contamination accounting (VERDICT r8 §4). Pre-run 1-min
     // loadavg flags ambient load at start; the END-of-run loadavg is
     // stamped too but NOT gated on — it mostly measures the bench's own
@@ -463,8 +558,7 @@ object Bench {
     val (busy0, stall0, jtotal0) = hostJiffies()
     val self0 = selfJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val width = GraftConf.Width.fromEnv(defaultCpus = 32)
-    val spark = GraftConf.builder(width).getOrCreate()
+    val spark = GraftConf.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Pair-cardinality capture (VERDICT r15 #5): the two sf10-dominant
     // dedup queries carry a zero-cost observe() on their pair frame
@@ -496,15 +590,12 @@ object Bench {
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // Optional comma-separated name filter for single-query iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Noise immunity: one sample per query lets an unrelated host-load
     // spike destroy the round's only perf artifact (it did, in round 2 —
     // 9-48x phantom slowdowns on untouched plans). Each query runs
     // `passes` times and reports the MIN: the second pass is warm (plans
     // and code cached), so the floor it finds is the query's real cost,
     // and a spike must hit BOTH passes to survive into the number.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     def minOf(run: () => Unit): Double =
       (1 to passes).map { _ =>
         val t0 = System.nanoTime()
@@ -513,8 +604,8 @@ object Bench {
       }.min
     // A failed query must not masquerade as a fast one: it reports -1 in
     // `queries`, lands in `failures`, and contributes nothing to `value`.
-    // Per-query cache isolation, ON by default (SPARK_GRAFT_EVICT=0
-    // opts out): without it, frames persisted by earlier queries
+    // Per-query cache isolation:
+    // without it, frames persisted by earlier queries
     // accumulate for the whole run and poison later entries — measured
     // 2026-08-14: q_mm_features read 0.98 s freshly-evicted vs 6.3-28.4 s
     // when run after q_mm_dedup's persist, and the stream probes (which
@@ -524,14 +615,13 @@ object Bench {
     // spikes BASELINE.md has documented all round. Index memoizations
     // (IVF cells) are rebuilt per query but still amortize across the
     // min-of-N passes inside one query.
-    val evict = sys.env.getOrElse("SPARK_GRAFT_EVICT", "1") != "0"
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
         try {
-          if (evict) graft.Graft.clearCaches(spark)
-          // Driver GC between queries (r13, default ON; SPARK_GRAFT_GC=0
-          // opts out): Spark's ContextCleaner reclaims shuffle files,
+          graft.Graft.clearCaches(spark)
+          // Driver GC between queries (r13):
+          // Spark's ContextCleaner reclaims shuffle files,
           // broadcasts, and checkpoint blocks only when the driver GC
           // collects their references, and a long sweep can run for
           // minutes without an old-gen collection, so dead shuffle data
@@ -550,7 +640,7 @@ object Bench {
           // sorter spills 50 GB of RAW pair rows — the partial agg it
           // skipped was net protective). BASELINE.md r13 has the full
           // attribution.
-          if (sys.env.getOrElse("SPARK_GRAFT_GC", "1") != "0") System.gc()
+          System.gc()
           (name, minOf(() =>
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()), true)
         } catch { case e: Throwable =>
@@ -619,86 +709,19 @@ object Bench {
     // the probe built two IVF indexes (persisted cells frames) — evict
     // them so the streaming probes start from the same cache state the
     // per-query eviction discipline guarantees everywhere else
-    if (evict) graft.Graft.clearCaches(spark)
-    val streamDefs: Seq[(String, String,
-        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
-      ("q_stream_tumbling", "append",
-        df => graft.stream.Pipelines.tumblingCounts(df)),
-      // the SAME windowed aggregation through update output mode — the
-      // dashboard-facing sink path where changed aggregates re-emit per
-      // micro-batch instead of waiting for watermark finalization; a
-      // distinct sink/state interaction the append probes never touch
-      ("q_stream_tumbling_update", "update",
-        df => graft.stream.Pipelines.tumblingCounts(df)),
-      // session_window exercises the merging-state path — the heavier
-      // state-store shape tumbling windows never touch
-      ("q_stream_sessions", "append",
-        df => graft.stream.Pipelines.sessionCounts(df)),
-      // dropDuplicatesWithinWatermark exercises the state-store dedup
-      // path — the streaming twin of q_dedup_exact
-      ("q_stream_dedup", "append",
-        df => graft.stream.Pipelines.dedupKeyed(df, Seq("user_id", "ts"))),
-      // watermarked stream-stream time-range join — double the state
-      // stores plus the interval condition; the heaviest streaming shape
-      // the engine declares
-      ("q_stream_join", "append", df => {
-        val base = df.select(col("user_id").as("key"), col("ts"),
-          col("event_type"))
-        graft.stream.Pipelines.coincidence(
-          base.filter(col("event_type") === "click"),
-          base.filter(col("event_type") === "purchase"),
-          toleranceSec = 60, watermark = "1 hour")
-      }),
-      // LEFT-OUTER stream-stream join — the unmatched-detection shape:
-      // clicks with no purchase in tolerance are emitted null-padded at
-      // state eviction, a different state-store path from the inner
-      // join's match-time output
-      ("q_stream_join_outer", "append", df => {
-        val base = df.select(col("user_id").as("key"), col("ts"),
-          col("event_type"))
-        graft.stream.Pipelines.coincidence(
-          base.filter(col("event_type") === "click"),
-          base.filter(col("event_type") === "purchase"),
-          toleranceSec = 60, watermark = "1 hour",
-          joinType = "left_outer")
-      }),
-      // stream-static broadcast enrichment — the stateless shape (no
-      // watermark, no state store); the dim side is a batch aggregate
-      // of the same table, broadcast into every micro-batch
-      ("q_stream_enrich", "append", df => {
-        val dim = Tables.events(df.sparkSession, sfDir)
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("n_events"))
-        graft.stream.Pipelines.enrichStatic(
-          df.select("event_id", "user_id", "event_type", "value"),
-          dim, "user_id")
-      }),
-      // transformWithState sessionization on the RocksDB store — the
-      // Spark 4 state-API path. LAST probe: the provider conf applies to
-      // every stream started after it, and the bench session ends here.
-      ("q_stream_sessions_tws", "append", df => {
-        val s = df.sparkSession
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        import s.implicits._
-        graft.stream.Pipelines.sessionsWithState(
-          df.select(col("user_id"), col("ts"))
-            .as[graft.stream.Pipelines.SessionInput]).toDF()
-      }))
+    graft.Graft.clearCaches(spark)
     // The two stream-stream join probes run TWO-batch (time-split input)
     // so the bench can report the marginal per-batch cost beside the
     // total; only the warm second batch moves when the state store
     // itself regresses (VERDICT r8 §6). Per-probe tuple: (name, elapsed,
     // ok, per-data-batch seconds, finalize seconds — the 0-row
     // watermark-finalization batch's state work, see streamProbe doc).
-    val twoBatch = Set("q_stream_join", "q_stream_join_outer")
     val streaming: Seq[(String, Double, Boolean, Seq[Double], Double)] =
-      streamDefs.filter { case (n, _, _) => only.forall(_.contains(n)) }
-        .map { case (n, mode, tf) =>
+      streamDefs(sfDir).filter { case (n, _, _, _) => only.forall(_.contains(n)) }
+        .map { case (n, mode, nb, tf) =>
           // each streamProbe call stages its own table copy + fresh
           // checkpoint, so min-of-N is a genuine cold-state re-run
           try {
-            val nb = if (twoBatch(n)) 2 else 1
             val (t, perBatch, fin) = (1 to passes)
               .map(_ => streamProbe(spark, sfDir, mode, tf, nb))
               .minBy(_._1)
@@ -779,23 +802,18 @@ object Bench {
     // that normalized (transient) — round 12's 17-flag artifact would
     // have read "17 transient" instead of sending the judge on a
     // re-measurement expedition. Cost: zero when nothing is flagged.
-    val retimes: Map[String, Double] = {
-      // the tws probe set the session-wide RocksDB provider; retested
-      // HDFS-state probes must run on the provider they were timed on
-      if (flagged.exists(_.startsWith("q_stream")))
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val retimes: Map[String, Double] =
       flagged.map { k =>
         k -> (try {
-          if (evict) graft.Graft.clearCaches(spark)
+          graft.Graft.clearCaches(spark)
           SparkEntry.queries.get(k) match {
             case Some(fn) =>
               val t0 = System.nanoTime()
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               (System.nanoTime() - t0) / 1e9
-            case None => streamDefs.find(_._1 == k) match {
-              case Some((n, mode, tf)) =>
-                streamProbe(spark, sfDir, mode, tf,
-                  if (twoBatch(n)) 2 else 1)._1
+            case None => streamDefs(sfDir).find(_._1 == k) match {
+              case Some((_, mode, nb, tf)) =>
+                streamProbe(spark, sfDir, mode, tf, nb)._1
               case None => -1.0
             }
           }
@@ -804,7 +822,6 @@ object Bench {
           -1.0
         })
       }.toMap
-    }
     val (outConfirmed, outTransient) =
       classifyOutliers(flagged, priorQueries, retimes)
     val outliers = flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -853,14 +870,14 @@ object Bench {
     val pairCountsJson = pairCounts.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envOverrides = envOverridesJson(sys.env)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":${width.shuffleParts},"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     // Compact summary: everything EXCEPT the per-query map. The driver
     // keeps only a ~2 KB tail of stdout, and the full line above is >6 KB
     // — its HEAD (including "metric" and "value") can never survive the
     // tail cut, which is why BENCH_r08/r09.json both carry parsed: null
     // (VERDICT r9 §1). This line is what the driver's tail parses; the
     // full line and the persisted file carry the per-query detail.
-    val compact = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","entries":${all.size},"nfailures":${all.count(!_._3)},"failures":$failures,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":${width.shuffleParts},"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","entries":${all.size},"nfailures":${all.count(!_._3)},"failures":$failures,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     println(json)
     // The driver only keeps a 2000-char tail of stdout, which truncated
     // 61 of 121 entries (and the total) out of round 3's artifact. Persist

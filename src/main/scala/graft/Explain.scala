@@ -21,8 +21,8 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftConf.builder(GraftConf.Width.fromEnv(defaultCpus = 4))
-      .getOrCreate()
+    val spark =
+      GraftConf.builder(GraftConf.cpusFromEnv(defaultCpus = 4)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

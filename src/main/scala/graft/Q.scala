@@ -21,38 +21,21 @@ final case class Q(
   * [[builder]], so a plan pinned by a spec describes the engine the
   * bench runs. */
 object GraftConf {
-  /** Session width: `local[cpus]`, the session shuffle-partition count
-    * and AQE's initial reducer count before runtime coalescing. */
-  final case class Width(cpus: Int, shuffleParts: Int, initParts: Int)
+  /** `SPARK_GRAFT_CPUS` (default `defaultCpus`), validated strictly, so
+    * a typo fails at startup instead of reaching the artifact line. */
+  def cpusFromEnv(defaultCpus: Int, env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(
+      Bench.parsePosInt("SPARK_GRAFT_CPUS", _))
 
-  object Width {
-    /** Every count at `cpus`, the width every recorded close uses. */
-    def apply(cpus: Int): Width = Width(cpus, cpus, cpus)
-
-    /** `SPARK_GRAFT_CPUS` (default `defaultCpus`),
-      * `SPARK_GRAFT_SHUFFLE_PARTS` (default cpus) and
-      * `SPARK_GRAFT_INIT_PARTS` (default shuffle parts). The two
-      * partition counts are diagnostics overrides: more, smaller
-      * sort-fallback runs per partition vs more merge fan-in, and
-      * spill-heavy exchanges keeping their fan-out while AQE coalesces
-      * small ones, each measured before any default moves. Each value
-      * is validated strictly, so a typo fails at session build instead
-      * of reaching the artifact line. */
-    def fromEnv(defaultCpus: Int, env: Map[String, String] = sys.env): Width = {
-      def read(k: String, dflt: Int) =
-        env.get(k).fold(dflt)(Bench.parsePosInt(k, _))
-      val cpus = read("SPARK_GRAFT_CPUS", defaultCpus)
-      val shuffleParts = read("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-      Width(cpus, shuffleParts, read("SPARK_GRAFT_INIT_PARTS", shuffleParts))
-    }
-  }
-
-  /** Every engine-wide session key at width `w`, in install order. */
-  def engineConf(w: Width): Seq[(String, String)] = Seq(
-    "spark.master" -> s"local[${w.cpus}]",
-    "spark.sql.shuffle.partitions" -> w.shuffleParts.toString,
+  /** Every engine-wide session key on `cpus` cores, in install order.
+    * The session shuffle width and AQE's initial reducer count are both
+    * `cpus`; the pair stages provision their own width from a census
+    * (`Dedup.pairStageParts`). */
+  def engineConf(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-      w.initParts.toString,
+      cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.shuffle.sort.bypassMergeThreshold" -> BypassMergeThreshold,
     "spark.sql.optimizer.excludedRules" -> ExcludedRules,
@@ -69,8 +52,8 @@ object GraftConf {
 
   /** A session builder carrying [[engineConf]]; callers chain their own
     * static confs (app name, warehouse dir) before `getOrCreate`. */
-  def builder(w: Width): SparkSession.Builder =
-    engineConf(w).foldLeft(SparkSession.builder()) {
+  def builder(cpus: Int): SparkSession.Builder =
+    engineConf(cpus).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }
 
@@ -96,10 +79,10 @@ object GraftConf {
     * the threshold to that cap bounds the bypass writer's cost at 1024
     * open-file buffers (~32 MB) per map task — the trade the default
     * guards against is M×R tiny blocks, and both M and R stay
-    * engine-bounded here. Env-overridable for A/B and for deployments
-    * whose shuffle service prefers merged outputs. */
-  val BypassMergeThreshold: String =
-    sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESH", "1024")
+    * engine-bounded here. Whole-surface A/B at sf1 (round 19,
+    * `bench/bench_r19_sf1_bypass200.json`): 1024 beat the default 200
+    * by 1.106× geomean over 171 entries. */
+  val BypassMergeThreshold: String = "1024"
 }
 
 /** Parquet table loaders. One file per table under sfDir (TESTDATA.md).

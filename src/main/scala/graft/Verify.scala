@@ -5,16 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // same width knobs as Bench: big-sf dumps (sf3+) need more reducers
-    // than cores or the pair-family aggregations sort-spill tens of GB
-    // (BASELINE.md r14 provisioning study)
-    val spark = GraftConf.builder(GraftConf.Width.fromEnv(defaultCpus = 4))
-      .getOrCreate()
+    // Optional name filter, same parse and contract as Bench: re-dump a
+    // single query into an existing outDir when iterating.
+    val only = Bench.onlyFromEnv()
+    val spark =
+      GraftConf.builder(GraftConf.cpusFromEnv(defaultCpus = 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated name filter (same contract as Bench):
-    // re-dump a single query into an existing outDir when iterating.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

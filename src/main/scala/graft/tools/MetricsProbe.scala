@@ -12,14 +12,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * clock reported only as context. Not part of the driver contract.
   *
   * Usage: runMain graft.tools.MetricsProbe <sfDir> <query>[,query...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SHUFFLE_PARTS,
-  * SPARK_GRAFT_INIT_PARTS.
+  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_THREAD_DUMP_AT,
+  * SPARK_GRAFT_STAGE_DETAIL (both off by default).
   */
 object MetricsProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
     val spark = graft.GraftConf.builder(
-      graft.GraftConf.Width.fromEnv(defaultCpus = 32)).getOrCreate()
+      graft.GraftConf.cpusFromEnv(defaultCpus = 32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var run = 0L; @volatile var cpu = 0L; @volatile var gc = 0L

@@ -143,27 +143,45 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parsePosInt("X", " 8 ") === 8)
     for (bad <- Seq("auto", "", "0", "-4", "3.5", "1e3"))
       assertThrows[IllegalArgumentException](Bench.parsePosInt("X", bad))
-    // the session width reads the same knobs through the same parser
-    import GraftConf.Width
-    assert(Width.fromEnv(4, Map.empty) === Width(4, 4, 4))
-    assert(Width.fromEnv(4, Map("SPARK_GRAFT_CPUS" -> "8")) === Width(8))
-    assert(Width.fromEnv(4, Map("SPARK_GRAFT_SHUFFLE_PARTS" -> "16")) ===
-      Width(4, 16, 16))
-    assert(Width.fromEnv(4, Map("SPARK_GRAFT_INIT_PARTS" -> "64")) ===
-      Width(4, 4, 64))
+    // the session's core count reads its knob through the same parser
+    assert(GraftConf.cpusFromEnv(4, Map.empty) === 4)
+    assert(GraftConf.cpusFromEnv(4, Map("SPARK_GRAFT_CPUS" -> "8")) === 8)
     assertThrows[IllegalArgumentException](
-      Width.fromEnv(4, Map("SPARK_GRAFT_CPUS" -> "auto")))
+      GraftConf.cpusFromEnv(4, Map("SPARK_GRAFT_CPUS" -> "auto")))
+    // and so does the pass count: 0 and negatives no longer clamp to 1
+    assert(Bench.passesFromEnv(Map.empty) === 2)
+    assert(Bench.passesFromEnv(Map("SPARK_GRAFT_PASSES" -> "3")) === 3)
+    for (bad <- Seq("0", "-3", "two"))
+      assertThrows[IllegalArgumentException](
+        Bench.passesFromEnv(Map("SPARK_GRAFT_PASSES" -> bad)))
+  }
+
+  test("SPARK_GRAFT_ONLY: unknown entries fail before any query runs") {
+    assert(Bench.onlyFromEnv(Map.empty) === None)
+    // a declared query, a stream probe and the IVF recall probe
+    assert(Bench.onlyFromEnv(Map("SPARK_GRAFT_ONLY" ->
+      "q_agg_group,q_stream_sessions_tws,ivf_lloyd")) ===
+      Some(Set("q_agg_group", "q_stream_sessions_tws", "ivf_lloyd")))
+    def unknown(v: String) = intercept[IllegalArgumentException](
+      Bench.onlyFromEnv(Map("SPARK_GRAFT_ONLY" -> v))).getMessage
+    assert(unknown("q_agg_gruop").contains("q_agg_gruop"))
+    // a mixed list names every unknown entry, and only those
+    val mixed = unknown("q_agg_group,q_nope,q_scan_project,q_also_nope")
+    assert(mixed.contains("q_also_nope, q_nope"), mixed)
+    assert(!mixed.contains("q_agg_group") && !mixed.contains("q_scan_project"))
+    // an empty filter would run nothing as well
+    assert(unknown(",").contains("names no entry"))
   }
 
   test("env_overrides stamp: SPARK_GRAFT_* only, sorted, JSON-escaped") {
     val env = Map(
-      "SPARK_GRAFT_SHUFFLE_PARTS" -> "512",
-      "SPARK_GRAFT_STREAM_PARTS" -> "8",
-      "SPARK_GRAFT_INIT_PARTS" -> "256",
+      "SPARK_GRAFT_PASSES" -> "1",
+      "SPARK_GRAFT_ONLY" -> "q_agg_group",
+      "SPARK_GRAFT_CPUS" -> "8",
       "PATH" -> "/usr/bin",
       "HOME" -> "/root")
     assert(Bench.envOverridesJson(env) ===
-      """{"SPARK_GRAFT_INIT_PARTS":"256","SPARK_GRAFT_SHUFFLE_PARTS":"512","SPARK_GRAFT_STREAM_PARTS":"8"}""")
+      """{"SPARK_GRAFT_CPUS":"8","SPARK_GRAFT_ONLY":"q_agg_group","SPARK_GRAFT_PASSES":"1"}""")
     assert(Bench.envOverridesJson(Map("HOME" -> "/root")) === "{}")
     // a hostile value cannot break the artifact's JSON
     assert(Bench.envOverridesJson(Map("SPARK_GRAFT_X" -> "a\"b\\c\nd"))
@@ -192,6 +210,25 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.gradeClose(certified = true, confirmed = true, attempt = 2) === "degraded")
     // and ok-retry never triggers another retry
     assert(!Bench.shouldRetry("ok-retry", 2, enabled = true))
+  }
+
+  test("README's Environment list names exactly the SPARK_GRAFT_* knobs src/main reads") {
+    import scala.jdk.CollectionConverters._
+    val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    def names(text: String) = knob.findAllIn(text).toSet
+    val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val read = try main.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => names(java.nio.file.Files.readString(f))).toSet
+    finally main.close()
+    val readme = java.nio.file.Files.readString(java.nio.file.Paths.get("README.md"))
+    val section = readme.linesIterator
+      .dropWhile(_ != "### Environment").drop(1)
+      .takeWhile(!_.startsWith("#")).mkString("\n")
+    assert(section.nonEmpty, "README.md has no '### Environment' section")
+    assert(names(section) === read,
+      s"README lists ${(names(section) -- read).toSeq.sorted}, " +
+      s"src/main reads unlisted ${(read -- names(section)).toSeq.sorted}")
   }
 
   test("the committed BENCH_BASELINE.json round-trips through the parser") {

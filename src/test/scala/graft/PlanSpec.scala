@@ -20,7 +20,7 @@ class PlanSpec extends SparkSpec {
 
   test("the test session carries every engine-wide key from the factory") {
     // the plan pins here must describe the engine the bench runs
-    for ((k, v) <- GraftConf.engineConf(GraftConf.Width(4)))
+    for ((k, v) <- GraftConf.engineConf(4))
       assert(spark.conf.getOption(k) === Some(v), k)
   }
 

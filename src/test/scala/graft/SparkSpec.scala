@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM — Test/fork := true). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = GraftConf.builder(GraftConf.Width(4))
+    val s = GraftConf.builder(4)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)

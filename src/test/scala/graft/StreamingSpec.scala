@@ -426,4 +426,23 @@ class StreamingSpec extends SparkSpec {
     // first emission n=1, re-emission n=2 — both sink rows present
     assert(afterFirst === 1L && rows.toSeq === Seq(1L, 2L))
   }
+
+  test("the tws bench probe scopes its partitions and provider to itself") {
+    val keys = Seq("spark.sql.shuffle.partitions", Bench.StateStoreProvider)
+    val before = keys.map(spark.conf.get)
+    val (_, mode, _, tf) =
+      Bench.streamDefs(sf).find(_._1 == "q_stream_sessions_tws").get
+    var during = Seq.empty[String]
+    val (elapsed, _, _) = Bench.streamProbe(spark, sf, mode, df => {
+      val out = tf(df)
+      during = keys.map(spark.conf.get)
+      out
+    })
+    assert(elapsed > 0)
+    // the probe really ran on its own width and the RocksDB store ...
+    assert(during === Seq(Bench.StreamParts.toString,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    // ... and left the session exactly as it found it
+    assert(keys.map(spark.conf.get) === before)
+  }
 }
