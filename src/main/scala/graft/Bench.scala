@@ -40,7 +40,7 @@ object Bench {
     * per-batch cost (batch 2, warm state) — the number a real
     * state-store regression moves.
     *
-    * Attribution (VERDICT r10 §5, measured via SPARK_GRAFT_STREAM_DEBUG):
+    * Attribution (VERDICT r10 §5, measured from each batch's durationMs):
     * the old "setup ~8 s" premise — fixed checkpoint/state-store init
     * landing on batch 1 — was WRONG. The durationMs breakdown shows
     * batch 1's addBatch ≈ batch 2's (3.9 vs 3.5 s: both do the same
@@ -51,13 +51,14 @@ object Bench {
     * planning, offset WAL) is ~1-2 s. So this probe now returns the
     * finalization batch separately and "setup" means ONLY the fixed
     * remainder: (elapsed, per-data-batch seconds in order, finalize
-    * seconds summed over 0-row batches). The state partition count and
-    * a transform's state-store provider are restored when the probe
-    * ends, so probes run in any order and leak no conf into batch work. */
+    * seconds summed over 0-row batches, [[batchPhases]] of every batch).
+    * The state partition count and a transform's state-store provider
+    * are restored when the probe ends, so probes run in any order and
+    * leak no conf into batch work. */
   private[graft] def streamProbe(spark: SparkSession, sfDir: String,
       mode: String,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      batches: Int = 1): (Double, Seq[Double], Double) = {
+      batches: Int = 1): (Double, Seq[Double], Double, String) = {
     val path = s"$sfDir/events.parquet"
     val raw = spark.read.parquet(path)
     val rawSchema = raw.schema
@@ -108,8 +109,15 @@ object Bench {
     // session's batch-oriented 32 partitions are a ~100x over-provision.
     // The waste is a fixed per-partition-per-batch cost (task dispatch +
     // the stream-stream join's 4 state stores' commit + maintenance,
-    // measured ~130 ms/partition/batch on this host), so it scales with
-    // partitions, not with data. Same-host A/B on the two join probes
+    // measured ~130 ms/partition/batch at r13), so it scales with
+    // partitions, not with data. Most of that commit cost was Hadoop's
+    // local filesystem forking a `chmod` per file create and a
+    // `readlink` per rename check (no libhadoop); the `file:`
+    // FileContext is now [[graft.stream.LocalCheckpointFs]], which forks
+    // neither. Re-timed at 8 partitions on 4 cores, sf0.1, with the
+    // forks -> without: elapsed 5.52/5.46 -> 2.97/2.62 s, warm batch
+    // 1.60/1.64 -> 0.90/0.87 s, summed state commit per batch
+    // ~2.4-2.9 s -> 0.13-0.27 s. The r13 A/B on the two join probes
     // (elapsed, 2 data batches + finalize): 32 parts 13.5/11.8 s;
     // RocksDB at 32 parts 11.4/11.1 s (the store engine is not the
     // lever); 8 parts 4.1/3.8 s — batches 4.3 -> 1.2 s, finalize
@@ -145,20 +153,7 @@ object Bench {
         .flatMap(p => Option(p.durationMs.get("triggerExecution"))
           .map(_.longValue / 1e3))
         .sum
-      // Setup-floor attribution (VERDICT r10 §5): with
-      // SPARK_GRAFT_STREAM_DEBUG=1 dump each micro-batch's full
-      // durationMs breakdown (addBatch / walCommit / stateStore commit /
-      // getBatch / latestOffset ...) to stderr, so "where do the ~8 s of
-      // probe setup go" is a measurement, not a guess. Off by default —
-      // diagnostics only, never part of the artifact.
-      if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-        q.recentProgress.toSeq.foreach { p =>
-          System.err.println(s"[stream-debug] batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-            s"stateOps=${p.stateOperators.toSeq.map(so =>
-              s"(commit=${so.commitTimeMs}ms mem=${so.memoryUsedBytes})")}")
-        }
-      (total, perBatch, finalize)
+      (total, perBatch, finalize, batchPhases(q.recentProgress.toSeq))
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", priorParts)
       spark.conf.set(StateStoreProvider, priorProvider)
@@ -173,6 +168,21 @@ object Bench {
       }
     }
   }
+
+  /** Each micro-batch's `durationMs` phases (addBatch, walCommit,
+    * commitOffsets, latestOffset ...) and each stateful operator's
+    * state-store commit time, as a JSON array: the artifact's
+    * `stream_phases` entry for one probe (VERDICT r10 §5: where a
+    * probe's fixed time goes is a measurement, not a guess). */
+  private[graft] def batchPhases(
+      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+      : String = progress.map { p =>
+    import scala.jdk.CollectionConverters._
+    val phases = p.durationMs.asScala.toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val commits = p.stateOperators.map(_.commitTimeMs).mkString("[", ",", "]")
+    s"""{"batch":${p.batchId},"rows":${p.numInputRows},"duration_ms":$phases,"state_commit_ms":$commits}"""
+  }.mkString("[", ",", "]")
 
   /** The stream probes, each (name, output mode, staged batches,
     * transform) over the events stream; `sfDir` feeds the enrichment
@@ -715,25 +725,32 @@ object Bench {
     // total; only the warm second batch moves when the state store
     // itself regresses (VERDICT r8 §6). Per-probe tuple: (name, elapsed,
     // ok, per-data-batch seconds, finalize seconds — the 0-row
-    // watermark-finalization batch's state work, see streamProbe doc).
-    val streaming: Seq[(String, Double, Boolean, Seq[Double], Double)] =
+    // watermark-finalization batch's state work, see streamProbe doc,
+    // then the min pass's batchPhases JSON, or None on failure).
+    val streaming: Seq[(String, Double, Boolean, Seq[Double], Double,
+        Option[String])] =
       streamDefs(sfDir).filter { case (n, _, _, _) => only.forall(_.contains(n)) }
         .map { case (n, mode, nb, tf) =>
           // each streamProbe call stages its own table copy + fresh
           // checkpoint, so min-of-N is a genuine cold-state re-run
           try {
-            val (t, perBatch, fin) = (1 to passes)
+            val (t, perBatch, fin, phases) = (1 to passes)
               .map(_ => streamProbe(spark, sfDir, mode, tf, nb))
               .minBy(_._1)
             (n, t, true, if (nb > 1) perBatch else Nil,
-              if (nb > 1) fin else 0.0)
+              if (nb > 1) fin else 0.0, Some(phases))
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $n failed: ${e.getMessage}")
-            (n, -1.0, false, Nil, 0.0)
+            (n, -1.0, false, Nil, 0.0, None)
           }
         }
+    // per probe, every micro-batch's durationMs phases and state-store
+    // commit times; full line and BENCH_LAST.json only
+    val streamPhases = streaming.collect { case (k, _, _, _, _, Some(ph)) =>
+      "\"" + k + "\":" + ph }.mkString("{", ",", "}")
     val all = results.map { case (k, v, ok) =>
-      (k, v, ok, Seq.empty[Double], 0.0) } ++ streaming
+      (k, v, ok, Seq.empty[Double], 0.0) } ++
+      streaming.map { case (k, v, ok, bs, fin, _) => (k, v, ok, bs, fin) }
     // All numeric formatting goes through Locale.ROOT: the f"" interpolator
     // uses the JVM default locale, so on a comma-decimal host (de_DE) it
     // would emit "0,562" and the artifact would stop being JSON (ADVICE r9).
@@ -870,7 +887,7 @@ object Bench {
     val pairCountsJson = pairCounts.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envOverrides = envOverridesJson(sys.env)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"stream_phases":$streamPhases,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     // Compact summary: everything EXCEPT the per-query map. The driver
     // keeps only a ~2 KB tail of stdout, and the full line above is >6 KB
     // — its HEAD (including "metric" and "value") can never survive the

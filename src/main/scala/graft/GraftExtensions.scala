@@ -16,15 +16,23 @@ import org.apache.spark.sql.graftbridge.Bridge
   * `spark.sql("SELECT graft_cosine(a, b) ...")` works — the preference
   * order the design follows is built-in function > custom Expression >
   * UDF, and this class is what makes the middle tier first-class.
+  *
+  * The session-build install also maps the context's `file:` FileContext
+  * to [[graft.stream.LocalCheckpointFs]], so streaming checkpoints of
+  * every session that lists this extension (the engine's own and any
+  * other) write without forking `chmod`/`readlink`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    Bridge.activeContext.foreach(sc =>
+      graft.stream.LocalCheckpointFs.install(sc.hadoopConfiguration))
     GraftExtensions.builders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
+  }
 }
 
 object GraftExtensions {

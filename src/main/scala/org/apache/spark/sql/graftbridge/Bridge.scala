@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{classic, Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionColumnNode}
@@ -9,9 +10,10 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * Spark 4 made `new Column(expr: Expression)` private[sql]; the sanctioned
   * ways to use a custom Catalyst Expression are SQL function registration
   * (SparkSessionExtensions) or a private[sql]-scoped shim. This package
-  * lives under org.apache.spark.sql purely to host that shim — the same
-  * pattern extension libraries in the Spark ecosystem use. Nothing else in
-  * the engine reaches into Spark internals.
+  * lives under org.apache.spark.sql to host that shim — the same pattern
+  * extension libraries in the Spark ecosystem use — and the
+  * private[spark] active-context lookup `graft.GraftExtensions` needs. Nothing
+  * else in the engine reaches into Spark internals.
   */
 object Bridge {
   def column(e: Expression): Column = Column(ExpressionColumnNode(e))
@@ -26,4 +28,8 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The running SparkContext. Spark applies session extensions right
+    * after creating it, before any session state exists. */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
 }

@@ -433,12 +433,16 @@ class StreamingSpec extends SparkSpec {
     val (_, mode, _, tf) =
       Bench.streamDefs(sf).find(_._1 == "q_stream_sessions_tws").get
     var during = Seq.empty[String]
-    val (elapsed, _, _) = Bench.streamProbe(spark, sf, mode, df => {
+    val (elapsed, _, _, phases) = Bench.streamProbe(spark, sf, mode, df => {
       val out = tf(df)
       during = keys.map(spark.conf.get)
       out
     })
     assert(elapsed > 0)
+    // every batch's phases and its one operator's state commit time
+    assert(phases.startsWith("[{\"batch\":0,") &&
+      phases.contains("\"addBatch\":") && phases.contains("\"state_commit_ms\":["),
+      phases)
     // the probe really ran on its own width and the RocksDB store ...
     assert(during === Seq(Bench.StreamParts.toString,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
