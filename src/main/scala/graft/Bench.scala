@@ -1,7 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-round benchmark: run every declared query at SPARK_GRAFT_SF_DIR and
   * print one JSON line. Each query is forced through the `noop` sink so the
@@ -27,6 +32,118 @@ object Bench {
   private[graft] val StateStoreProvider =
     "spark.sql.streaming.stateStore.providerClass"
 
+  /** Task metrics summed over tasks. Wall clock here swings ±40% with host
+    * noise (r18: 64.2 s vs 116.0 s back to back); CPU time and bytes do not. */
+  private[graft] final case class Sums(tasks: Long = 0, runMs: Long = 0,
+      cpuNs: Long = 0, gcMs: Long = 0, shufR: Long = 0, shufW: Long = 0,
+      spillMem: Long = 0, spillDisk: Long = 0) {
+    def +(o: Sums): Sums = Sums(tasks + o.tasks, runMs + o.runMs,
+      cpuNs + o.cpuNs, gcMs + o.gcMs, shufR + o.shufR, shufW + o.shufW,
+      spillMem + o.spillMem, spillDisk + o.spillDisk)
+    def json: String =
+      s""""tasks":$tasks,"run_s":${fmt(runMs / 1e3, 3)},"cpu_s":${fmt(cpuNs / 1e9, 3)},"gc_s":${fmt(gcMs / 1e3, 3)},"shuf_r":$shufR,"shuf_w":$shufW,"spill":{"mem":$spillMem,"disk":$spillDisk}"""
+  }
+
+  /** What one timed pass caused, from [[Meter]], and what measuring it
+    * cost. `heavy_stages` in [[json]]: stages over 1 s of task time or
+    * with spill. */
+  private[graft] final case class Counters(jobs: Int, stages: Map[Int, Sums],
+      planMs: Map[String, Long], pairs: Map[String, Long],
+      drainMs: Double, listenerMs: Double) {
+    def total: Sums = stages.values.foldLeft(Sums())(_ + _)
+    def json: String = {
+      def obj(m: Map[String, Long]) = m.toSeq.sorted
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val heavy = stages.toSeq.sortBy(_._1).collect {
+        case (id, s) if s.runMs > 1000 || s.spillMem > 0 =>
+          s"""{"stage":$id,${s.json}}"""
+      }.mkString("[", ",", "]")
+      s"""{"jobs":$jobs,"stages":${stages.size},${total.json},"plan_ms":${obj(planMs)},"pairs":${obj(pairs)},"heavy_stages":$heavy,"drain_ms":${fmt(drainMs, 3)},"listener_ms":${fmt(listenerMs, 3)}}"""
+    }
+  }
+
+  /** Bench's one listener, attached to `spark` until [[close]]: jobs and
+    * task metrics from the SparkContext's bus, plan phases and the
+    * `graft_pairs_*` observations (VERDICT r15 #5: pairs per close) from
+    * the session's query executions. Callbacks run on Spark's listener
+    * threads, under this lock, and their time is the listener's cost. */
+  private[graft] final class Meter(spark: SparkSession)
+      extends SparkListener with QueryExecutionListener {
+    private var jobs = 0
+    private var stages = Map.empty[Int, Sums]
+    private var planMs = Map.empty[String, Long]
+    private var pairs = Map.empty[String, Long]
+    private var listenerNs = 0L
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+
+    private def record(f: => Unit): Unit = synchronized {
+      val t0 = System.nanoTime()
+      f
+      listenerNs += System.nanoTime() - t0
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = record(jobs += 1)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach(m => record {
+        stages = stages.updated(e.stageId, stages.getOrElse(e.stageId, Sums()) +
+          Sums(1, m.executorRunTime, m.executorCpuTime, m.jvmGCTime,
+            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+            m.memoryBytesSpilled, m.diskBytesSpilled))
+      })
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = record {
+      qe.tracker.phases.foreach { case (p, s) =>
+        planMs = planMs.updated(p, planMs.getOrElse(p, 0L) + s.durationMs) }
+      pairs ++= qe.observedMetrics.collect { case (n, row)
+        if n.startsWith("graft_pairs_") =>
+          n.stripPrefix("graft_pairs_") -> row.getLong(0) }
+    }
+
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    def close(): Unit = {
+      spark.listenerManager.unregister(this)
+      spark.sparkContext.removeSparkListener(this)
+    }
+
+    /** Everything recorded since the last take, and a reset. */
+    private def take(drainMs: Double): Counters = synchronized {
+      val c = Counters(jobs, stages, planMs, pairs, drainMs, listenerNs / 1e6)
+      jobs = 0; stages = Map.empty; planMs = Map.empty; pairs = Map.empty
+      listenerNs = 0
+      c
+    }
+
+    /** `body`'s seconds, result and the counters of exactly the events it
+      * caused: the bus is drained before the clock starts (and the
+      * counters reset) and after it stops, both outside the timed region. */
+    def pass[T](body: => T): (Double, T, Counters) = {
+      Bridge.drainListenerBus(spark.sparkContext)
+      take(0.0)
+      val t0 = System.nanoTime()
+      val out = body
+      val t1 = System.nanoTime()
+      Bridge.drainListenerBus(spark.sparkContext)
+      ((t1 - t0) / 1e9, out, take((System.nanoTime() - t1) / 1e6))
+    }
+  }
+
+  /** One declared query through the `noop` sink: the fastest of `passes`
+    * passes and that pass's counters. The MIN is noise immunity (round 2's
+    * single samples carried 9-48x phantom slowdowns on untouched plans):
+    * later passes are warm, and a host spike must hit every pass. */
+  private[graft] def runEntry(spark: SparkSession, sfDir: String,
+      meter: Meter, passes: Int,
+      fn: (SparkSession, String) => DataFrame): (Double, Counters) = {
+    val (secs, _, counters) = (1 to passes).map(_ => meter.pass(
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
+      .minBy(_._1)
+    (secs, counters)
+  }
+
   /** Streaming throughput probe: the events table replayed through a
     * [[graft.stream.Pipelines]] transform as a bounded stream
     * (Trigger.AvailableNow), so state-store / watermark regressions show
@@ -51,14 +168,15 @@ object Bench {
     * planning, offset WAL) is ~1-2 s. So this probe now returns the
     * finalization batch separately and "setup" means ONLY the fixed
     * remainder: (elapsed, per-data-batch seconds in order, finalize
-    * seconds summed over 0-row batches, [[batchPhases]] of every batch).
+    * seconds summed over 0-row batches, [[batchPhases]] of every batch,
+    * the timed region's [[Meter]] counters).
     * The state partition count and a transform's state-store provider
     * are restored when the probe ends, so probes run in any order and
     * leak no conf into batch work. */
   private[graft] def streamProbe(spark: SparkSession, sfDir: String,
       mode: String,
-      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      batches: Int = 1): (Double, Seq[Double], Double, String) = {
+      transform: DataFrame => DataFrame, meter: Meter,
+      batches: Int = 1): (Double, Seq[Double], Double, String, Counters) = {
     val path = s"$sfDir/events.parquet"
     val raw = spark.read.parquet(path)
     val rawSchema = raw.schema
@@ -128,20 +246,21 @@ object Bench {
     val priorProvider = spark.conf.get(StateStoreProvider)
     spark.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
     try {
-      val t0 = System.nanoTime()
-      val reader = spark.readStream.schema(rawSchema)
-      val src =
-        if (batches <= 1) reader.parquet(dir.toString)
-        else reader.option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      val q = transform(Tables.normalizeEventTs(src))
-        .writeStream
-        .format("noop")
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      q.awaitTermination()
-      val total = (System.nanoTime() - t0) / 1e9
+      val (total, q, counters) = meter.pass {
+        val reader = spark.readStream.schema(rawSchema)
+        val src =
+          if (batches <= 1) reader.parquet(dir.toString)
+          else reader.option("maxFilesPerTrigger", "1").parquet(dir.toString)
+        val q = transform(Tables.normalizeEventTs(src))
+          .writeStream
+          .format("noop")
+          .outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt.toString)
+          .start()
+        q.awaitTermination()
+        q
+      }
       val perBatch = q.recentProgress.toSeq
         .filter(_.numInputRows > 0)
         .flatMap(p => Option(p.durationMs.get("triggerExecution"))
@@ -153,7 +272,7 @@ object Bench {
         .flatMap(p => Option(p.durationMs.get("triggerExecution"))
           .map(_.longValue / 1e3))
         .sum
-      (total, perBatch, finalize, batchPhases(q.recentProgress.toSeq))
+      (total, perBatch, finalize, batchPhases(q.recentProgress.toSeq), counters)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", priorParts)
       spark.conf.set(StateStoreProvider, priorProvider)
@@ -188,7 +307,7 @@ object Bench {
     * transform) over the events stream; `sfDir` feeds the enrichment
     * probe's batch side. */
   private[graft] def streamDefs(sfDir: String): Seq[(String, String, Int,
-      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      DataFrame => DataFrame)] = Seq(
     ("q_stream_tumbling", "append", 1,
       df => graft.stream.Pipelines.tumblingCounts(df)),
     // the SAME windowed aggregation through update output mode — the
@@ -425,6 +544,13 @@ object Bench {
       case c             => c.toString
     }.mkString("\"", "", "\"")
 
+  /** All numeric formatting goes through Locale.ROOT: the f"" interpolator
+    * uses the JVM default locale, so on a comma-decimal host (de_DE) it
+    * would emit "0,562" and the artifact would stop being JSON (ADVICE r9).
+    * Raw Double interpolation ($v) is already locale-safe (Double.toString). */
+  private[graft] def fmt(d: Double, prec: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(d))
+
   /** Every SPARK_GRAFT_* override in effect, as a JSON object — stamped
     * into the artifact so a filtered or reduced run (ONLY, PASSES, …)
     * is distinguishable from a default close in the recorded JSON
@@ -570,29 +696,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftConf.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Pair-cardinality capture (VERDICT r15 #5): the two sf10-dominant
-    // dedup queries carry a zero-cost observe() on their pair frame
-    // ("graft_pairs_<query>"); this listener collects the observed
-    // counts so the artifact stamps pairs-per-close — the denominator
-    // that lets the next scale point check seconds/pair stays flat
-    // mechanically instead of via the hand-drawn C(n,2) clone curve.
-    val pairCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
     // bound to a val so the retry path can unregister it (ADVICE r16:
     // getOrCreate may hand attempt 2 the same session, and attempt 1's
-    // listener would keep writing into a dead map)
-    val pairListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith("graft_pairs_"))
-            pairCounts.put(name.stripPrefix("graft_pairs_"), row.getLong(0))
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(pairListener)
+    // listener would keep recording into a dead sweep)
+    val meter = new Meter(spark)
     // Untimed warm-up: exercises the parquet reader, whole-stage codegen,
     // shuffle, and the noop sink once so JVM/class-loading cost doesn't
     // land on whichever query happens to run first.
@@ -600,18 +707,6 @@ object Bench {
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // Noise immunity: one sample per query lets an unrelated host-load
-    // spike destroy the round's only perf artifact (it did, in round 2 —
-    // 9-48x phantom slowdowns on untouched plans). Each query runs
-    // `passes` times and reports the MIN: the second pass is warm (plans
-    // and code cached), so the floor it finds is the query's real cost,
-    // and a spike must hit BOTH passes to survive into the number.
-    def minOf(run: () => Unit): Double =
-      (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e9
-      }.min
     // A failed query must not masquerade as a fast one: it reports -1 in
     // `queries`, lands in `failures`, and contributes nothing to `value`.
     // Per-query cache isolation:
@@ -651,11 +746,11 @@ object Bench {
           // skipped was net protective). BASELINE.md r13 has the full
           // attribution.
           System.gc()
-          (name, minOf(() =>
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()), true)
+          val (secs, counters) = runEntry(spark, sfDir, meter, passes, fn)
+          (name, secs, true, Some(counters))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          (name, -1.0, false)
+          (name, -1.0, false, Option.empty[Counters])
         }
       }
     // Lloyd-refined IVF recall probe (VERDICT r9 §5): the production
@@ -726,19 +821,20 @@ object Bench {
     // itself regresses (VERDICT r8 §6). Per-probe tuple: (name, elapsed,
     // ok, per-data-batch seconds, finalize seconds — the 0-row
     // watermark-finalization batch's state work, see streamProbe doc,
-    // then the min pass's batchPhases JSON, or None on failure).
+    // then the min pass's batchPhases JSON and counters, or None on
+    // failure).
     val streaming: Seq[(String, Double, Boolean, Seq[Double], Double,
-        Option[String])] =
+        Option[(String, Counters)])] =
       streamDefs(sfDir).filter { case (n, _, _, _) => only.forall(_.contains(n)) }
         .map { case (n, mode, nb, tf) =>
           // each streamProbe call stages its own table copy + fresh
           // checkpoint, so min-of-N is a genuine cold-state re-run
           try {
-            val (t, perBatch, fin, phases) = (1 to passes)
-              .map(_ => streamProbe(spark, sfDir, mode, tf, nb))
+            val (t, perBatch, fin, phases, counters) = (1 to passes)
+              .map(_ => streamProbe(spark, sfDir, mode, tf, meter, nb))
               .minBy(_._1)
             (n, t, true, if (nb > 1) perBatch else Nil,
-              if (nb > 1) fin else 0.0, Some(phases))
+              if (nb > 1) fin else 0.0, Some((phases, counters)))
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $n failed: ${e.getMessage}")
             (n, -1.0, false, Nil, 0.0, None)
@@ -746,17 +842,16 @@ object Bench {
         }
     // per probe, every micro-batch's durationMs phases and state-store
     // commit times; full line and BENCH_LAST.json only
-    val streamPhases = streaming.collect { case (k, _, _, _, _, Some(ph)) =>
+    val streamPhases = streaming.collect { case (k, _, _, _, _, Some((ph, _))) =>
       "\"" + k + "\":" + ph }.mkString("{", ",", "}")
-    val all = results.map { case (k, v, ok) =>
+    // per entry, the counters of the pass whose seconds are reported
+    val entryCounters = results.collect { case (k, _, _, Some(c)) => k -> c } ++
+      streaming.collect { case (k, _, _, _, _, Some((_, c))) => k -> c }
+    val countersJson = entryCounters.map { case (k, c) =>
+      "\"" + k + "\":" + c.json }.mkString("{", ",", "}")
+    val all = results.map { case (k, v, ok, _) =>
       (k, v, ok, Seq.empty[Double], 0.0) } ++
       streaming.map { case (k, v, ok, bs, fin, _) => (k, v, ok, bs, fin) }
-    // All numeric formatting goes through Locale.ROOT: the f"" interpolator
-    // uses the JVM default locale, so on a comma-decimal host (de_DE) it
-    // would emit "0,562" and the artifact would stop being JSON (ADVICE r9).
-    // Raw Double interpolation ($v) is already locale-safe (Double.toString).
-    def fmt(d: Double, prec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(d))
     val qs = all.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failures = all.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
@@ -824,13 +919,10 @@ object Bench {
         k -> (try {
           graft.Graft.clearCaches(spark)
           SparkEntry.queries.get(k) match {
-            case Some(fn) =>
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
+            case Some(fn) => runEntry(spark, sfDir, meter, 1, fn)._1
             case None => streamDefs(sfDir).find(_._1 == k) match {
               case Some((_, mode, nb, tf)) =>
-                streamProbe(spark, sfDir, mode, tf, nb)._1
+                streamProbe(spark, sfDir, mode, tf, meter, nb)._1
               case None => -1.0
             }
           }
@@ -880,14 +972,12 @@ object Bench {
     val closeQuality = gradeClose(certified, outConfirmed.nonEmpty, attempt)
     val retestJson = retimes.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + fmt(v, 3) }.mkString("{", ",", "}")
-    // The observe() counts land on an async listener bus; by artifact
-    // time the last batch query finished minutes ago (streaming probes
-    // run after), so the map is settled. Empty when the instrumented
-    // queries were filtered out by SPARK_GRAFT_ONLY.
-    val pairCountsJson = pairCounts.toSeq.sortBy(_._1).map { case (k, v) =>
+    // Empty when the instrumented queries were filtered out by
+    // SPARK_GRAFT_ONLY.
+    val pairCountsJson = entryCounters.flatMap(_._2.pairs).sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val envOverrides = envOverridesJson(sys.env)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"stream_phases":$streamPhases,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$failures,"controls":$controls,"stream_batches":$streamBatches,"stream_finalize":$streamFinalize,"stream_setup":$streamSetup,"stream_phases":$streamPhases,"counters":$countersJson,"outliers":$outliers,"outliers_confirmed":$outliersConfirmed,"outliers_transient":$outliersTransient,"retest_secs":$retestJson,"pair_counts":$pairCountsJson,"ivf_lloyd":$ivfLloyd,"passes":$passes,"shuffle_partitions":$cpus,"env_overrides":$envOverrides,"attempt":$attempt,"loadavg":$loadavg,"loadavg_end":$loadavgEnd,"settle_wait":${fmt(settleWait, 1)},"ext_cpu_frac":${fmt(extCpuFrac, 4)},"iowait_frac":${fmt(iowaitFrac, 4)},"certified":$certified,"close_quality":"$closeQuality","sf":"$sfDir"}"""
     // Compact summary: everything EXCEPT the per-query map. The driver
     // keeps only a ~2 KB tail of stdout, and the full line above is >6 KB
     // — its HEAD (including "metric" and "value") can never survive the
@@ -912,7 +1002,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist $outPath: ${e.getMessage}")
     }
-    spark.listenerManager.unregister(pairListener)
+    meter.close()
     spark.stop()
     // Re-print AFTER spark.stop() returns, so the JSON lands past any
     // async shutdown noise (state-store maintenance, RPC teardown):

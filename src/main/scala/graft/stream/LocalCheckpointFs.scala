@@ -6,7 +6,7 @@ import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+  FSDataInputStream, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.{LocalConfigKeys, LocalFs}
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -71,7 +71,13 @@ class RawLocalCheckpointFs(conf: Configuration) extends DelegateToFileSystem(
   * are written and verified) over [[RawLocalCheckpointFs]]. Hadoop builds
   * it by reflection from `fs.AbstractFileSystem.file.impl`. */
 class LocalCheckpointFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new RawLocalCheckpointFs(conf))
+    extends ChecksumFs(new RawLocalCheckpointFs(conf)) {
+
+  /** Spark's checkpoint file manager reads through this call, which
+    * `FilterFs` sends to the raw stream, past `ChecksumFs`'s check. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalCheckpointFs {
   val Key = "fs.AbstractFileSystem.file.impl"

@@ -11,8 +11,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * ways to use a custom Catalyst Expression are SQL function registration
   * (SparkSessionExtensions) or a private[sql]-scoped shim. This package
   * lives under org.apache.spark.sql to host that shim — the same pattern
-  * extension libraries in the Spark ecosystem use — and the
-  * private[spark] active-context lookup `graft.GraftExtensions` needs. Nothing
+  * extension libraries in the Spark ecosystem use — and the private[spark]
+  * context calls `graft.GraftExtensions` and `graft.Bench` need. Nothing
   * else in the engine reaches into Spark internals.
   */
 object Bridge {
@@ -32,4 +32,7 @@ object Bridge {
   /** The running SparkContext. Spark applies session extensions right
     * after creating it, before any session state exists. */
   def activeContext: Option[SparkContext] = SparkContext.getActive
+
+  /** Block until every event posted to `sc`'s listener bus so far is delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -212,6 +212,37 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.shouldRetry("ok-retry", 2, enabled = true))
   }
 
+  test("per-entry counters: each entry's tasks, plan phases and shuffle bytes, no other's") {
+    // q_scan_project orders its output (a range-partitioned exchange) and
+    // q_agg_group hash-partitions its groups, so both shuffle
+    val spark = SparkSpec.spark
+    val meter = new Bench.Meter(spark)
+    // holds the shared listener queue up after every job, as a busy driver
+    // does, so a pass's last events are still queued when its query returns
+    val lag = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd)
+          : Unit = Thread.sleep(200)
+    }
+    spark.sparkContext.addSparkListener(lag)
+    val Seq(scan, agg) = try Seq("q_scan_project", "q_agg_group").map(q =>
+      Bench.runEntry(spark, SparkSpec.Sf0001, meter, 1, SparkEntry.queries(q))._2)
+    finally {
+      spark.sparkContext.removeSparkListener(lag)
+      meter.close()
+    }
+    for (c <- Seq(scan, agg)) {
+      assert(c.jobs > 0 && c.total.tasks > 0 && c.total.shufW > 0 &&
+        c.planMs.nonEmpty, c)
+      // each counted stage holds all of its tasks, by Spark's own count
+      c.stages.foreach { case (id, s) =>
+        assert(spark.sparkContext.statusTracker.getStageInfo(id)
+          .map(_.numCompletedTasks.toLong) === Some(s.tasks), c)
+      }
+    }
+    // no stage, so no task, is counted in both entries
+    assert(scan.stages.keySet.intersect(agg.stages.keySet).isEmpty, (scan, agg))
+  }
+
   test("README's Environment list names exactly the SPARK_GRAFT_* knobs src/main reads") {
     import scala.jdk.CollectionConverters._
     val knob = "SPARK_GRAFT_[A-Z0-9_]+".r

@@ -433,12 +433,17 @@ class StreamingSpec extends SparkSpec {
     val (_, mode, _, tf) =
       Bench.streamDefs(sf).find(_._1 == "q_stream_sessions_tws").get
     var during = Seq.empty[String]
-    val (elapsed, _, _, phases) = Bench.streamProbe(spark, sf, mode, df => {
-      val out = tf(df)
-      during = keys.map(spark.conf.get)
-      out
-    })
+    val meter = new Bench.Meter(spark)
+    val (elapsed, _, _, phases, counters) = try Bench.streamProbe(spark, sf,
+      mode, df => {
+        val out = tf(df)
+        during = keys.map(spark.conf.get)
+        out
+      }, meter)
+    finally meter.close()
     assert(elapsed > 0)
+    // the counters cover the micro-batches' tasks
+    assert(counters.jobs > 0 && counters.total.tasks > 0, counters)
     // every batch's phases and its one operator's state commit time
     assert(phases.startsWith("[{\"batch\":0,") &&
       phases.contains("\"addBatch\":") && phases.contains("\"state_commit_ms\":["),

@@ -42,11 +42,12 @@ class LocalCheckpointFsSpec extends AnyFunSuite {
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Reads through the checksummed stream. `FileContext.open(path)`
-    * without a buffer size goes to the raw stream (`FilterFs.open`
-    * skips `ChecksumFs`), on stock `LocalFs` as well. */
-  private def read(fc: FileContext, p: java.nio.file.Path): String = {
-    val in = fc.open(path(p), 4096)
+  /** Reads with a buffer size, the call stock `LocalFs` checksums.
+    * Without one (`bufferSize = None`), stock `LocalFs` hands back the raw
+    * stream (`FilterFs.open` skips `ChecksumFs`). */
+  private def read(fc: FileContext, p: java.nio.file.Path,
+      bufferSize: Option[Int] = Some(4096)): String = {
+    val in = bufferSize.fold(fc.open(path(p)))(fc.open(path(p), _))
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
@@ -133,6 +134,10 @@ class LocalCheckpointFsSpec extends AnyFunSuite {
       try { raf.seek(100); val b = raf.read(); raf.seek(100); raf.write(b ^ 1) }
       finally raf.close()
       intercept[ChecksumException](read(fc, f))
+      // on the engine, also through the one-argument open that Spark's
+      // checkpoint file manager calls (stock LocalFs does not check it)
+      if (fc.getDefaultFileSystem.isInstanceOf[LocalCheckpointFs])
+        intercept[ChecksumException](read(fc, f, None))
     }
   }
 }

@@ -2,6 +2,7 @@
 """Per-query ratio report between two bench artifacts.
 
 Usage: bench_ratio.py SMALL.json BIG.json [--flag=4.0]
+       bench_ratio.py A.json B.json --counters
 
 Prints every query's seconds in both artifacts and the big/small ratio,
 sorted by ratio descending, then a summary (sum of matched entries,
@@ -10,6 +11,14 @@ sub-linearity series (sf0.1 -> sf1 -> sf3): with 3x the data, any query
 growing more than --flag x (default 4.0) needs a named plan explanation
 or a fix (VERDICT r12 item 2 done-criterion). Entries at -1 (failed) or
 missing on either side are listed separately, never silently dropped.
+
+--counters diffs the per-entry counters instead (the `counters` map of
+the full line): seconds, executor CPU seconds, shuffle MB (read +
+written) and spill MB (memory + disk) on each side, per entry present in
+both, then their sums. Wall time on a shared host drifts, while CPU time
+and byte counts are properties of the work, so an A/B reads these first.
+Artifacts written before Bench stamped counters have none; that prints a
+"no counters" line and exits 1.
 
 Reads the full artifact line via json.loads — these files are written
 by Bench.scala itself, so unlike the in-engine baseline parser there is
@@ -28,9 +37,11 @@ def main(argv):
     for a in argv:
         if a.startswith("--flag="):
             flag = float(a.split("=", 1)[1])
-        elif a.startswith("--"):
-            print(f"unknown option: {a} (expected --flag=N)")
+        elif a != "--counters" and a.startswith("--"):
+            print(f"unknown option: {a} (expected --flag=N or --counters)")
             return 2
+    if "--counters" in argv:
+        return counters(*args)
     small = json.load(open(args[0]))["queries"]
     big = json.load(open(args[1]))["queries"]
     common = sorted(set(small) & set(big))
@@ -61,6 +72,38 @@ def main(argv):
     nflag = sum(1 for r, *_ in rows if r > flag)
     print(f"matched={len(rows)} sum {ssum:.1f}s -> {bsum:.1f}s "
           f"overall {bsum / ssum:.2f}x; {nflag} entries above {flag}x")
+    return 0
+
+
+def counters(path_a, path_b):
+    arts = [json.load(open(p)) for p in (path_a, path_b)]
+    for p, art in zip((path_a, path_b), arts):
+        if not art.get("counters"):
+            print(f"no counters in {p}: it predates per-entry counters; "
+                  "only the seconds ratio (without --counters) applies")
+            return 1
+    (qa, ca), (qb, cb) = [(art["queries"], art["counters"]) for art in arts]
+
+    def row(q, c, k):
+        e = c[k]
+        return (q[k], e["cpu_s"],
+                (e["shuf_r"] + e["shuf_w"]) / 1e6,
+                (e["spill"]["mem"] + e["spill"]["disk"]) / 1e6)
+
+    common = sorted(set(ca) & set(cb))
+    names = ("secs", "cpu_s", "shuf_mb", "spill_mb")
+    print(f"{'entry':40} " + " ".join(f"{n + '_a':>10} {n + '_b':>10}"
+                                       for n in names))
+    sums = [0.0] * 8
+    for k in common:
+        vals = [v for pair in zip(row(qa, ca, k), row(qb, cb, k))
+                for v in pair]
+        sums = [s + v for s, v in zip(sums, vals)]
+        print(f"{k:40} " + " ".join(f"{v:10.3f}" for v in vals))
+    for k in sorted(set(ca) ^ set(cb)):
+        print(f"   only-one-side  {k}")
+    print(f"{'sum (' + str(len(common)) + ' entries)':40} "
+          + " ".join(f"{v:10.3f}" for v in sums))
     return 0
 
 
