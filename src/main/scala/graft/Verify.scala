@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,10 +32,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => Bench.jsonStr(k) + ": " + Bench.jsonStr(v) }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Bench.jsonLine(
+      JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })))
     spark.stop()
   }
 }

@@ -83,11 +83,11 @@ object Pipelines {
 
     override def handleInputRows(user: Long, rows: Iterator[SessionInput],
         tv: TimerValues): Iterator[SessionOut] =
-      fold(user, rows.toList, tv.getCurrentWatermarkInMs())
+      fold(user, rows.toList, tv.getCurrentWatermarkInMs(), None)
 
     override def handleExpiredTimer(user: Long, tv: TimerValues,
         info: ExpiredTimerInfo): Iterator[SessionOut] =
-      fold(user, Nil, tv.getCurrentWatermarkInMs())
+      fold(user, Nil, tv.getCurrentWatermarkInMs(), Some(info.getExpiryTimeInMs()))
 
     /** Interval-merge the open sessions WITH the batch's events, sorted
       * by start, bridging any pair within gapMs. Uniform in every
@@ -99,7 +99,7 @@ object Pipelines {
       * passes, clamped just above the watermark for late-but-accepted
       * data. */
     private def fold(user: Long, newRows: List[SessionInput],
-        wm: Long): Iterator[SessionOut] = {
+        wm: Long, fired: Option[Long]): Iterator[SessionOut] = {
       val ivs: List[SessionState] =
         ((if (open.exists()) open.get().open else Nil) ++
           newRows.map(r => { val t = r.ts.getTime; SessionState(t, t, 1L) }))
@@ -112,9 +112,10 @@ object Pipelines {
       val (stillOpen, expired) = merged.partition(s => s.end + gapMs > wm)
       // registerTimer ADDS a timer rather than replacing one — drop the
       // stale wake-ups first or an active key accumulates one pending
-      // timer per batch and replays a cascade of no-op expirations
-      getHandle.listTimers().foreach(t =>
-        getHandle.deleteTimer(t.asInstanceOf[Long]))
+      // timer per batch and replays a cascade of no-op expirations; the
+      // `fired` timer is Spark's to remove
+      getHandle.listTimers().map(_.asInstanceOf[Long])
+        .filterNot(fired.contains).foreach(getHandle.deleteTimer)
       if (stillOpen.isEmpty) open.clear()
       else {
         open.update(SessionsState(stillOpen))
@@ -137,13 +138,6 @@ object Pipelines {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Stream-stream coincidence join — the streaming twin of the batch
-    * theta/range query (and the TDC trigger-matching shape): hits join
-    * triggers of the same key within ±`toleranceSec` of event time. Both
-    * sides carry watermarks and the join condition bounds event-time
-    * distance, so Spark can evict state on both sides — nothing
-    * accumulates unboundedly. Expects (key, ts) on both inputs; hit
-    * columns prefixed h_, trigger columns t_. */
   /** Stream-static enrichment — the stateless streaming shape the
     * stateful probes don't cover: every micro-batch equi-joins a BATCH
     * dimension frame on `key` (no watermark, no state store; Spark
@@ -158,7 +152,14 @@ object Pipelines {
     events.join(org.apache.spark.sql.functions.broadcast(dim),
       Seq(key), "left")
 
-  /** `joinType = "left_outer"` turns the coincidence join into the
+  /** Stream-stream coincidence join — the streaming twin of the batch
+    * theta/range query (and the TDC trigger-matching shape): hits join
+    * triggers of the same key within ±`toleranceSec` of event time. Both
+    * sides carry watermarks and the join condition bounds event-time
+    * distance, so Spark can evict state on both sides — nothing
+    * accumulates unboundedly. Expects (key, ts) on both inputs; hit
+    * columns prefixed h_, trigger columns t_.
+    * `joinType = "left_outer"` turns the coincidence join into the
     * unmatched-detection shape: a hit with NO trigger in its tolerance
     * window is still emitted (null t_ columns) — but only once the
     * watermark has passed its whole candidate interval, i.e. the state

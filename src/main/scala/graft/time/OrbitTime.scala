@@ -29,12 +29,10 @@ object OrbitTime {
   def tNs(orbit: Column, bx: Column, tdc: Column): Column =
     tdcCounts(orbit, bx, tdc) * lit(25.0 / 30.0)
 
-  /** Inverse of [[tdcCounts]]: decompose counts back to (orbit, bx, tdc).
-    * Alias of [[orbitFromCounts]] — exact integer floor-division all the
-    * way down (a double division here would go fractional and lose
-    * exactness above 2^53 counts, which real runs reach). */
-  def orbitOf(counts: Column): Column = orbitFromCounts(counts)
-
+  /** Inverse of [[tdcCounts]]: decompose counts back to (orbit, bx, tdc)
+    * — exact integer floor-division all the way down (a double division
+    * here would go fractional and lose exactness above 2^53 counts, which
+    * real runs reach). */
   def orbitFromCounts(counts: Column): Column =
     floorDiv(floorDiv(counts, lit(TdcPerBx)), lit(BxPerOrbit))
 

@@ -45,9 +45,12 @@ class BenchSpec extends AnyFunSuite {
 
   test("garbage entries are skipped, numeric ones survive") {
     val noisy =
-      """{"queries":{"q_a":0.5,"q_bad":oops,"q_c":1.5},"sf":"d"}"""
+      """{"queries":{"q_a":0.5,"q_bad":"oops","q_c":1.5},"sf":"d"}"""
     assert(Bench.parseBaselineQueries(noisy, "d")
       === Map("q_a" -> 0.5, "q_c" -> 1.5))
+    // malformed JSON is no baseline at all
+    assert(Bench.parseBaselineQueries(noisy.replace("\"oops\"", "oops"), "d")
+      === Map.empty)
   }
 
   test("outlier retest classifies transient vs confirmed (VERDICT r12)") {
@@ -180,15 +183,16 @@ class BenchSpec extends AnyFunSuite {
       "SPARK_GRAFT_CPUS" -> "8",
       "PATH" -> "/usr/bin",
       "HOME" -> "/root")
-    assert(Bench.envOverridesJson(env) ===
+    def line(env: Map[String, String]) = Bench.jsonLine(Bench.envOverrides(env))
+    assert(line(env) ===
       """{"SPARK_GRAFT_CPUS":"8","SPARK_GRAFT_ONLY":"q_agg_group","SPARK_GRAFT_PASSES":"1"}""")
-    assert(Bench.envOverridesJson(Map("HOME" -> "/root")) === "{}")
-    // a hostile value cannot break the artifact's JSON
-    assert(Bench.envOverridesJson(Map("SPARK_GRAFT_X" -> "a\"b\\c\nd"))
-      === "{\"SPARK_GRAFT_X\":\"a\\\"b\\\\c\\u000ad\"}")
-    // tab and CR too: a raw control char makes json.load fail
-    assert(Bench.envOverridesJson(Map("SPARK_GRAFT_X" -> "a\tb\rc"))
-      === "{\"SPARK_GRAFT_X\":\"a\\u0009b\\u000dc\"}")
+    assert(line(Map("HOME" -> "/root")) === "{}")
+    // a hostile value, control chars included, cannot break the
+    // artifact's JSON: it parses back to itself
+    val hostile = "a\"b\\c\nd\te\rf\u0001"
+    val back = org.json4s.jackson.JsonMethods.parse(
+      line(Map("SPARK_GRAFT_X" -> hostile)))
+    assert(back === org.json4s.JObject("SPARK_GRAFT_X" -> org.json4s.JString(hostile)))
   }
 
   test("close retry: once, only on uncertified, only when enabled (VERDICT r14 #5)") {
@@ -270,5 +274,66 @@ class BenchSpec extends AnyFunSuite {
     val m = Bench.parseBaselineQueries(s, "/root/testdata/sf0.1")
     assert(m.size > 100, s"baseline parse collapsed: ${m.size} entries")
     assert(m.values.forall(v => v > 0 && v < 600))
+  }
+
+  test("the compact line keeps the driver contract on a full synthetic close") {
+    import org.json4s.JObject
+    import org.json4s.jackson.JsonMethods.parse
+    val stage = Bench.Sums(tasks = 12, runMs = 1500, cpuNs = 1234567890L,
+      gcMs = 7, shufR = 2048, shufW = 1024)
+    val counters = Bench.Counters(jobs = 3,
+      stages = Map(1 -> stage, 2 -> Bench.Sums(tasks = 4, runMs = 10)),
+      planMs = Map("analysis" -> 1L, "optimization" -> 14L, "planning" -> 6L),
+      pairs = Map.empty, drainMs = 10.1234, listenerMs = 0.4256)
+    val pairs = Map("q_dedup_editdist" -> 283L, "q_text_winnow_pairs" -> 248L)
+    val batch = SparkEntry.queries.keys.toSeq.sorted.map(n => Bench.Entry(n,
+      1.5, Some(counters.copy(pairs = pairs.filter(_._1 == n)))))
+    val stream = Bench.streamDefs("").map { case (n, _, nb, _) =>
+      Bench.Entry(n, 3.25, Some(counters), nb) }
+    // one failed entry, one confirmed and one transient outlier
+    val entries = (batch ++ stream).updated(0, Bench.Entry(batch.head.name, -1.0, None))
+    val close = Bench.Close(entries, flagged = Seq("q_agg_group", "q_join_inner"),
+      confirmed = Seq("q_agg_group"), transient = Seq("q_join_inner"),
+      retimes = Map("q_agg_group" -> 9.87654, "q_join_inner" -> 1.2),
+      ivfLloyd = Bench.ivfLloydStamp(30, 16, 18, 19, 24,
+        Seq((2, 24L, 2.7219), (3, 23L, 2.72849))),
+      passes = 2, cpus = 4, env = Map("SPARK_GRAFT_CPUS" -> "4",
+        "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.1",
+        "SPARK_GRAFT_BENCH_OUT" -> "bench/bench_r20_sf01.json"),
+      attempt = 1, loadavg = 0.52, loadavgEnd = 3.1, settleWait = 0.04,
+      extCpuFrac = 0.0123456, iowaitFrac = 0.00004, certified = true,
+      sf = "/root/testdata/sf0.1")
+    // a comma-decimal default locale must not reach the artifact
+    val prior = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val (full, compact) =
+      try (Bench.jsonLine(close.full), Bench.jsonLine(close.compact))
+      finally java.util.Locale.setDefault(prior)
+    def keys(line: String) = parse(line) match {
+      case JObject(fs) => fs.map(_._1)
+      case v => fail(s"not a JSON object: $v")
+    }
+    assert(keys(compact) === Seq("metric", "value", "unit", "entries",
+      "nfailures", "failures", "outliers", "outliers_confirmed",
+      "outliers_transient", "pair_counts", "ivf_lloyd", "passes",
+      "shuffle_partitions", "env_overrides", "attempt", "loadavg",
+      "loadavg_end", "settle_wait", "ext_cpu_frac", "iowait_frac",
+      "certified", "close_quality", "sf"))
+    assert(keys(full) === Seq("metric", "value", "unit", "queries",
+      "failures", "controls", "stream_batches", "stream_finalize",
+      "stream_setup", "stream_phases", "counters", "outliers",
+      "outliers_confirmed", "outliers_transient", "retest_secs",
+      "pair_counts", "ivf_lloyd", "passes", "shuffle_partitions",
+      "env_overrides", "attempt", "loadavg", "loadavg_end", "settle_wait",
+      "ext_cpu_frac", "iowait_frac", "certified", "close_quality", "sf"))
+    // the driver parses a 2000-character tail of stdout
+    assert(compact.length < 2000, compact.length)
+    assert(entries.size === 182)
+    // fixed-precision stamps keep their trailing zeros
+    assert(compact.contains(""""entries":182,"nfailures":1,"""), compact)
+    assert(compact.contains(""""settle_wait":0.0,"ext_cpu_frac":0.0123,"iowait_frac":0.0000,"""), compact)
+    assert(compact.contains(""""lloyd_sweep":[{"iters":2,"hits":24,"secs":2.722},{"iters":3,"hits":23,"secs":2.728}]"""), compact)
+    assert(full.contains(""""retest_secs":{"q_agg_group":9.877,"q_join_inner":1.200}"""), full)
+    assert(full.contains(""""run_s":1.510,"cpu_s":1.235,"gc_s":0.007,"""), full)
   }
 }

@@ -32,6 +32,36 @@ class StreamingSpec extends SparkSpec {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** The messages Spark's transformWithState timer store logs at WARN
+    * or above while `body` runs. */
+  private def timerWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.config.Configurator
+    val name = "org.apache.spark.sql.execution.streaming.operators.stateful." +
+      "transformwithstate.timers.TimerStateImpl"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-timer-warnings", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val prior = logger.getLevel
+    appender.start()
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, prior)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
   test("tumbling windows drop events later than the watermark") {
     val s = spark
     import s.implicits._
@@ -85,7 +115,9 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sq = s.sqlContext
-    withRocksDb {
+    // the expired-timer path leaves the timer that fired to Spark: deleting
+    // it too logged a "Failed to delete timer" WARN per fired timer
+    val warnings = timerWarnings(withRocksDb {
       val in = MemoryStream[Pipelines.SessionInput]
       val q = Pipelines.sessionsWithState(in.toDS(), gapMs = 30L * 60 * 1000)
         .writeStream.format("memory").queryName("tws").outputMode("append")
@@ -112,7 +144,9 @@ class StreamingSpec extends SparkSpec {
           ts("2026-01-01 09:10:00").getTime, 2L),
         (1L, ts("2026-01-01 11:00:00").getTime,
           ts("2026-01-01 11:00:00").getTime, 1L)), rows.toString)
-    }
+    })
+    assert(warnings.filter(_.contains("Failed to delete timer")) === Nil,
+      warnings.mkString("\n"))
   }
 
   test("out-of-order cross-batch event extends a session, never shrinks it") {
@@ -257,6 +291,77 @@ class StreamingSpec extends SparkSpec {
     runOnce()
     val got = s.read.parquet(out).select("event_id").as[Long].collect().sorted
     assert(got.toSeq === (1L to 6L), s"expected exactly-once 1..6, got ${got.toSeq}")
+  }
+
+  /** `sessionsWithState` over the staged files in `dir`, one file per
+    * micro-batch, into `out` by a foreachBatch sink. With `crashOn` the
+    * sink throws on that batch once its rows are computed: after its
+    * offsets are in the WAL and its state is written, before its commit. */
+  private def sessionsRun(dir: String, ckpt: String,
+      out: scala.collection.mutable.ArrayBuffer[Pipelines.SessionOut],
+      crashOn: Long = -1L): Unit = {
+    val s = spark
+    import s.implicits._
+    val in = s.readStream.schema("user_id LONG, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", 1).json(dir).as[Pipelines.SessionInput]
+    val q = Pipelines.sessionsWithState(in)
+      .writeStream
+      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Pipelines.SessionOut],
+          id: Long) =>
+        val rows = ds.collect()
+        if (id == crashOn)
+          throw new IllegalStateException(s"injected crash in batch $id")
+        out ++= rows
+        ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .start()
+    q.awaitTermination(60000)
+  }
+
+  test("transformWithState sessions: a crash between the offsets WAL and the commit log restarts exactly once") {
+    // four time-ordered files, oldest mtime first: user 1's session spans
+    // batches 0 and 1, and batch 2 is the first whose watermark (10:00)
+    // fires timers — user 1's session and user 2's first
+    val dir = java.nio.file.Files.createTempDirectory("graft_tws_in")
+    Seq(
+      Seq(1 -> "2026-01-01T09:00:00Z", 1 -> "2026-01-01T09:10:00Z",
+        2 -> "2026-01-01T09:05:00Z"),
+      Seq(1 -> "2026-01-01T09:30:00Z", 2 -> "2026-01-01T12:00:00Z"),
+      Seq(3 -> "2026-01-01T14:00:00Z"),
+      Seq(9 -> "2026-01-02T10:00:00Z")).zipWithIndex.foreach { case (rows, i) =>
+      val f = dir.resolve(s"$i.json")
+      java.nio.file.Files.writeString(f, rows.map { case (u, t) =>
+        s"""{"user_id":$u,"ts":"$t"}""" }.mkString("\n"))
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - (4 - i) * 60000L))
+    }
+    def ckptDir() =
+      java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString
+    val clean, restarted =
+      scala.collection.mutable.ArrayBuffer.empty[Pipelines.SessionOut]
+    val ckpt = ckptDir()
+    withRocksDb {
+      sessionsRun(dir.toString, ckptDir(), clean)
+      val crash = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        sessionsRun(dir.toString, ckpt, restarted, crashOn = 2L))
+      assert(crash.getMessage.contains("injected crash in batch 2"))
+      def exists(rel: String) = java.nio.file.Files.exists(
+        java.nio.file.Paths.get(ckpt, rel))
+      assert(exists("offsets/2") && !exists("commits/2"),
+        "the crash did not land between the WAL entry and the commit")
+      sessionsRun(dir.toString, ckpt, restarted)
+    }
+    def ms(t: String) = java.time.Instant.parse(t).toEpochMilli
+    assert(clean.contains(Pipelines.SessionOut(1L,
+      ms("2026-01-01T09:00:00Z"), ms("2026-01-01T09:30:00Z"), 3L)), clean)
+    assert(clean.contains(Pipelines.SessionOut(2L,
+      ms("2026-01-01T09:05:00Z"), ms("2026-01-01T09:05:00Z"), 1L)), clean)
+    val order = Ordering.by((o: Pipelines.SessionOut) =>
+      (o.user_id, o.sess_start, o.sess_end, o.n_events))
+    assert(restarted.sorted(order) === clean.sorted(order))
   }
 
   test("stream-stream coincidence join matches within tolerance only") {
@@ -434,7 +539,7 @@ class StreamingSpec extends SparkSpec {
       Bench.streamDefs(sf).find(_._1 == "q_stream_sessions_tws").get
     var during = Seq.empty[String]
     val meter = new Bench.Meter(spark)
-    val (elapsed, _, _, phases, counters) = try Bench.streamProbe(spark, sf,
+    val (elapsed, progress, counters) = try Bench.streamProbe(spark, sf,
       mode, df => {
         val out = tf(df)
         during = keys.map(spark.conf.get)
@@ -445,6 +550,8 @@ class StreamingSpec extends SparkSpec {
     // the counters cover the micro-batches' tasks
     assert(counters.jobs > 0 && counters.total.tasks > 0, counters)
     // every batch's phases and its one operator's state commit time
+    val phases = Bench.jsonLine(
+      Bench.Entry("q_stream_sessions_tws", elapsed, Some(counters), 1, progress).phases)
     assert(phases.startsWith("[{\"batch\":0,") &&
       phases.contains("\"addBatch\":") && phases.contains("\"state_commit_ms\":["),
       phases)

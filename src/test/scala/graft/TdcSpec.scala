@@ -113,13 +113,26 @@ class TdcSpec extends SparkSpec {
       bx <- Gen.choose(0, 3563)
       tdc <- Gen.choose(0, 29)
     } yield (orbit, bx, tdc)
+    val seen = scala.collection.mutable.ArrayBuffer((0L, 0, 0),
+      (3000000000L, 3563, 29))
     val prop = Prop.forAll(gen) { case (orbit, bx, tdc) =>
+      seen += ((orbit, bx, tdc))
       val counts = (orbit * BxPerOrbit + bx) * TdcPerBx + tdc
       counts / TdcPerBx / BxPerOrbit == orbit &&
         counts / TdcPerBx % BxPerOrbit == bx &&
         counts % TdcPerBx == tdc
     }
     assert(ScTest.check(ScTest.Parameters.default, prop).passed)
+    // the engine's columns decompose the same counts, in one job
+    val s = spark
+    import s.implicits._
+    val got = seen.toSeq
+      .map { case (o, b, t) => (o * BxPerOrbit + b) * TdcPerBx + t }
+      .toDF("c")
+      .select(orbitFromCounts(col("c")), bxFromCounts(col("c")).cast("int"),
+        tdcFromCounts(col("c")).cast("int"))
+      .as[(Long, Int, Int)].collect()
+    assert(got.sorted.toSeq === seen.sorted.toSeq)
   }
 
   test("tdcCounts column expression matches the scalar formula") {
