@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -51,9 +53,11 @@ object Bench {
 
   /** What one timed pass caused, from [[Meter]], and what measuring it
     * cost. `heavy_stages` in [[jvalue]]: stages over 1 s of task time or
-    * with spill. */
+    * with spill. `compiles` and `compileMs` are the generated classes
+    * Janino compiled during the pass and the time it took. */
   private[graft] final case class Counters(jobs: Int, stages: Map[Int, Sums],
       planMs: Map[String, Long], pairs: Map[String, Long],
+      compiles: Long, compileMs: Double,
       drainMs: Double, listenerMs: Double) {
     def total: Sums = stages.values.foldLeft(Sums())(_ + _)
     def jvalue: JObject = {
@@ -63,7 +67,9 @@ object Bench {
       }
       JObject(List("jobs" -> JInt(jobs), "stages" -> JInt(stages.size)) ++
         total.fields ++ List("plan_ms" -> longs(planMs), "pairs" -> longs(pairs),
-        "heavy_stages" -> JArray(heavy), "drain_ms" -> dec(drainMs, 3),
+        "heavy_stages" -> JArray(heavy), "codegen" -> JObject(
+          "compiles" -> JInt(compiles), "compile_ms" -> dec(compileMs, 3)),
+        "drain_ms" -> dec(drainMs, 3),
         "listener_ms" -> dec(listenerMs, 3)))
     }
   }
@@ -193,8 +199,9 @@ object Bench {
   /** Bench's one listener, attached to `spark` until [[close]]: jobs and
     * task metrics from the SparkContext's bus, plan phases and the
     * `graft_pairs_*` observations (VERDICT r15 #5: pairs per close) from
-    * the session's query executions. Callbacks run on Spark's listener
-    * threads, under this lock, and their time is the listener's cost. */
+    * the session's query executions, and the JVM's codegen compiles.
+    * Callbacks run on Spark's listener threads, under this lock, and
+    * their time is the listener's cost. */
   private[graft] final class Meter(spark: SparkSession)
       extends SparkListener with QueryExecutionListener {
     private var jobs = 0
@@ -221,6 +228,11 @@ object Bench {
             m.memoryBytesSpilled, m.diskBytesSpilled))
       })
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case m: Meter.Mark => m.delivered.countDown()
+      case _ =>
+    }
+
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = record {
       qe.tracker.phases.foreach { case (p, s) =>
@@ -237,26 +249,55 @@ object Bench {
       spark.sparkContext.removeSparkListener(this)
     }
 
-    /** Everything recorded since the last take, and a reset. */
-    private def take(drainMs: Double): Counters = synchronized {
-      val c = Counters(jobs, stages, planMs, pairs, drainMs, listenerNs / 1e6)
-      jobs = 0; stages = Map.empty; planMs = Map.empty; pairs = Map.empty
-      listenerNs = 0
-      c
+    /** Block until every event posted so far has reached this listener.
+      * This listener and the session's query-execution callbacks share
+      * one queue of the bus, which delivers in order, so the marker
+      * arrives after everything posted before it. */
+    private def drain(): Unit = {
+      val m = new Meter.Mark
+      Bridge.post(spark.sparkContext, m)
+      if (!m.delivered.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        throw new java.util.concurrent.TimeoutException(
+          "listener bus did not deliver the drain marker within 10 s")
     }
+
+    /** Everything recorded since the last take, and a reset. */
+    private def take(compiles: Long, compileNs: Long, drainMs: Double): Counters =
+      synchronized {
+        val c = Counters(jobs, stages, planMs, pairs, compiles, compileNs / 1e6,
+          drainMs, listenerNs / 1e6)
+        jobs = 0; stages = Map.empty; planMs = Map.empty; pairs = Map.empty
+        listenerNs = 0
+        c
+      }
 
     /** `body`'s seconds, result and the counters of exactly the events it
       * caused: the bus is drained before the clock starts (and the
       * counters reset) and after it stops, both outside the timed region. */
     def pass[T](body: => T): (Double, T, Counters) = {
-      Bridge.drainListenerBus(spark.sparkContext)
-      take(0.0)
+      drain()
+      take(0L, 0L, 0.0)
+      val (n0, ns0) = Meter.codegen()
       val t0 = System.nanoTime()
       val out = body
       val t1 = System.nanoTime()
-      Bridge.drainListenerBus(spark.sparkContext)
-      ((t1 - t0) / 1e9, out, take((System.nanoTime() - t1) / 1e6))
+      val (n1, ns1) = Meter.codegen()
+      drain()
+      ((t1 - t0) / 1e9, out,
+        take(n1 - n0, ns1 - ns0, (System.nanoTime() - t1) / 1e6))
     }
+  }
+
+  private[graft] object Meter {
+    /** The event [[Meter.drain]] posts and waits for. */
+    private final class Mark extends SparkListenerEvent {
+      val delivered = new java.util.concurrent.CountDownLatch(1)
+    }
+
+    /** Generated classes Janino has compiled in this JVM so far, and
+      * their compile nanoseconds. */
+    private def codegen(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
   }
 
   /** One declared query through the `noop` sink: the fastest of `passes`

@@ -17,15 +17,26 @@ import org.apache.spark.sql.graftbridge.Bridge
   * order the design follows is built-in function > custom Expression >
   * UDF, and this class is what makes the middle tier first-class.
   *
-  * The session-build install also maps the context's `file:` FileContext
-  * to [[graft.stream.LocalCheckpointFs]], so streaming checkpoints of
-  * every session that lists this extension (the engine's own and any
-  * other) write without forking `chmod`/`readlink`.
+  * The session-build install also sets two things on the running
+  * SparkContext, for every session that lists this extension (the
+  * engine's own and any other):
+  *  - its `file:` FileContext maps to [[graft.stream.LocalCheckpointFs]],
+  *    so streaming checkpoints write without forking `chmod`/`readlink`;
+  *  - `spark.sql.codegen.cache.maxEntries` is [[GraftConf.CodegenCacheEntries]]
+  *    unless the application set it, so a generated class is compiled
+  *    once, not on every query. The extension runs before the session's
+  *    shared state exists, so the value reaches the static SQL conf.
+  *    Spark sizes its JVM-wide cache of compiled classes once, from
+  *    `SQLConf.get` at the JVM's first codegen: a JVM that generated code
+  *    before its first session with this extension keeps the old size.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    Bridge.activeContext.foreach(sc =>
-      graft.stream.LocalCheckpointFs.install(sc.hadoopConfiguration))
+    Bridge.activeContext.foreach { sc =>
+      graft.stream.LocalCheckpointFs.install(sc.hadoopConfiguration)
+      Bridge.sparkConf(sc).setIfMissing(GraftConf.CodegenCacheKey,
+        GraftConf.CodegenCacheEntries.toString)
+    }
     GraftExtensions.builders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),

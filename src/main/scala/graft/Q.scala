@@ -83,6 +83,29 @@ object GraftConf {
     * `bench/bench_r19_sf1_bypass200.json`): 1024 beat the default 200
     * by 1.106× geomean over 171 entries. */
   val BypassMergeThreshold: String = "1024"
+
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * ([[CodegenCacheKey]], Spark's default 100). [[GraftExtensions]] sets
+    * it on the SparkContext unless the application did; it takes effect
+    * only if that happens before the JVM's first codegen.
+    *
+    * The cache is keyed on (context class loader, code). In local mode
+    * the driver and the task threads load through different class
+    * loaders, so one generated class takes two entries. A working set
+    * past the cap, cycled query after query, defeats the LRU cache, and
+    * Janino recompiles classes it has already compiled.
+    *
+    * Census (4 cores, sf0.1, one full-surface Bench pass on a fresh JVM,
+    * `SPARK_GRAFT_PASSES=1`, cache unbounded): 2,270 compiles, each a
+    * distinct key, 38.2 s of compile time inside the timed passes. The
+    * cap is twice that, rounded up. The same pass at Spark's default
+    * compiled 4,706 classes (56.2 s inside the timed passes). The cost
+    * of keeping every class, measured on those two runs: committed
+    * metaspace 184 -> 204 MiB, classes loaded at exit 32,507 -> 36,587,
+    * peak RSS 3,751 -> 3,507 MiB (one run each: no RSS cost shows). */
+  val CodegenCacheEntries: Int = 4600
+
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 }
 
 /** Parquet table loaders. One file per table under sfDir (TESTDATA.md).

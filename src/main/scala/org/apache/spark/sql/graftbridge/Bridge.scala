@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkConf, SparkContext}
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{classic, Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionColumnNode}
@@ -33,6 +34,9 @@ object Bridge {
     * after creating it, before any session state exists. */
   def activeContext: Option[SparkContext] = SparkContext.getActive
 
-  /** Block until every event posted to `sc`'s listener bus so far is delivered. */
-  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** `sc`'s own conf, not the copy `getConf` returns. */
+  def sparkConf(sc: SparkContext): SparkConf = sc.conf
+
+  /** Post `e` to `sc`'s listener bus, behind every event posted so far. */
+  def post(sc: SparkContext, e: SparkListenerEvent): Unit = sc.listenerBus.post(e)
 }

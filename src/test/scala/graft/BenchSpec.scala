@@ -284,7 +284,8 @@ class BenchSpec extends AnyFunSuite {
     val counters = Bench.Counters(jobs = 3,
       stages = Map(1 -> stage, 2 -> Bench.Sums(tasks = 4, runMs = 10)),
       planMs = Map("analysis" -> 1L, "optimization" -> 14L, "planning" -> 6L),
-      pairs = Map.empty, drainMs = 10.1234, listenerMs = 0.4256)
+      pairs = Map.empty, compiles = 5, compileMs = 12.3456, drainMs = 10.1234,
+      listenerMs = 0.4256)
     val pairs = Map("q_dedup_editdist" -> 283L, "q_text_winnow_pairs" -> 248L)
     val batch = SparkEntry.queries.keys.toSeq.sorted.map(n => Bench.Entry(n,
       1.5, Some(counters.copy(pairs = pairs.filter(_._1 == n)))))
@@ -335,5 +336,7 @@ class BenchSpec extends AnyFunSuite {
     assert(compact.contains(""""lloyd_sweep":[{"iters":2,"hits":24,"secs":2.722},{"iters":3,"hits":23,"secs":2.728}]"""), compact)
     assert(full.contains(""""retest_secs":{"q_agg_group":9.877,"q_join_inner":1.200}"""), full)
     assert(full.contains(""""run_s":1.510,"cpu_s":1.235,"gc_s":0.007,"""), full)
+    assert(full.contains(""""codegen":{"compiles":5,"compile_ms":12.346}"""), full)
+    assert(!compact.contains("codegen"), compact)
   }
 }

@@ -98,4 +98,21 @@ class ExtensionsSpec extends SparkSpec {
       "SELECT graft_vec_avg(va) AS m FROM ext_t").head().getSeq[Double](0)
     assert(avg === Seq(0.5, 1.5, 3.0))
   }
+
+  test("the codegen cache holds a cycle of queries past Spark's default 100 classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each literal is inlined into its query's generated code, so each i
+    // is a class of its own, compiled once on the driver and once on a
+    // task thread (another class loader, another cache key): 128 keys
+    def cycle(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 64).foreach(i => spark.range(10).select(col("id") + i).collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = cycle()
+    assert(first > 100, s"the cycle compiled only $first classes")
+    assert(cycle() === 0L)
+    assert(spark.conf.get(GraftConf.CodegenCacheKey) ===
+      GraftConf.CodegenCacheEntries.toString)
+  }
 }

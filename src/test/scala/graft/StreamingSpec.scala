@@ -4,6 +4,7 @@ import graft.stream.Pipelines
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,7 +24,7 @@ class StreamingSpec extends SparkSpec {
 
   /** Runs `body` on the RocksDB state store (transformWithState's
     * backing store), restoring the session's provider afterwards. */
-  private def withRocksDb(body: => Unit): Unit = {
+  private def withRocksDb[T](body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -293,21 +294,34 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSeq === (1L to 6L), s"expected exactly-once 1..6, got ${got.toSeq}")
   }
 
-  /** `sessionsWithState` over the staged files in `dir`, one file per
+  /** Staged time-ordered JSON files in a new directory, one per entry of
+    * `files`, one object per line, the oldest modification time first
+    * (the order the file source admits them in). */
+  private def stageJson(files: Seq[Seq[String]]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_crash_in")
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val f = dir.resolve(s"$i.json")
+      java.nio.file.Files.writeString(f, rows.mkString("\n"))
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - (files.size - i) * 60000L))
+    }
+    dir.toString
+  }
+
+  /** `transform` over the files `stageJson` wrote to `dir`, one file per
     * micro-batch, into `out` by a foreachBatch sink. With `crashOn` the
     * sink throws on that batch once its rows are computed: after its
     * offsets are in the WAL and its state is written, before its commit. */
-  private def sessionsRun(dir: String, ckpt: String,
-      out: scala.collection.mutable.ArrayBuffer[Pipelines.SessionOut],
+  private def crashRun(dir: String, schema: String, ckpt: String,
+      transform: DataFrame => DataFrame,
+      out: scala.collection.mutable.ArrayBuffer[Row],
       crashOn: Long = -1L): Unit = {
-    val s = spark
-    import s.implicits._
-    val in = s.readStream.schema("user_id LONG, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).json(dir).as[Pipelines.SessionInput]
-    val q = Pipelines.sessionsWithState(in)
+    val in = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).json(dir)
+    val q = transform(in)
       .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Pipelines.SessionOut],
-          id: Long) =>
+      .foreachBatch { (ds: DataFrame, id: Long) =>
         val rows = ds.collect()
         if (id == crashOn)
           throw new IllegalStateException(s"injected crash in batch $id")
@@ -320,48 +334,68 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination(60000)
   }
 
+  /** The rows of an uninterrupted run, and of a run that crashes on batch
+    * 2 and restarts on the same checkpoint, each sorted; fails unless the
+    * crash landed between batch 2's offsets WAL entry and its commit. */
+  private def cleanAndRestarted(dir: String, schema: String,
+      transform: DataFrame => DataFrame): (Seq[String], Seq[String]) = {
+    def ckptDir() =
+      java.nio.file.Files.createTempDirectory("graft_crash_ckpt").toString
+    val clean, restarted = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val ckpt = ckptDir()
+    crashRun(dir, schema, ckptDir(), transform, clean)
+    val crash = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      crashRun(dir, schema, ckpt, transform, restarted, crashOn = 2L))
+    assert(crash.getMessage.contains("injected crash in batch 2"))
+    def exists(rel: String) = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(ckpt, rel))
+    assert(exists("offsets/2") && !exists("commits/2"),
+      "the crash did not land between the WAL entry and the commit")
+    crashRun(dir, schema, ckpt, transform, restarted)
+    (clean.map(_.toString).sorted.toSeq, restarted.map(_.toString).sorted.toSeq)
+  }
+
   test("transformWithState sessions: a crash between the offsets WAL and the commit log restarts exactly once") {
-    // four time-ordered files, oldest mtime first: user 1's session spans
-    // batches 0 and 1, and batch 2 is the first whose watermark (10:00)
-    // fires timers — user 1's session and user 2's first
-    val dir = java.nio.file.Files.createTempDirectory("graft_tws_in")
-    Seq(
+    val s = spark
+    import s.implicits._
+    // four time-ordered files: user 1's session spans batches 0 and 1,
+    // and batch 2 is the first whose watermark (10:00) fires timers —
+    // user 1's session and user 2's first
+    val dir = stageJson(Seq(
       Seq(1 -> "2026-01-01T09:00:00Z", 1 -> "2026-01-01T09:10:00Z",
         2 -> "2026-01-01T09:05:00Z"),
       Seq(1 -> "2026-01-01T09:30:00Z", 2 -> "2026-01-01T12:00:00Z"),
       Seq(3 -> "2026-01-01T14:00:00Z"),
-      Seq(9 -> "2026-01-02T10:00:00Z")).zipWithIndex.foreach { case (rows, i) =>
-      val f = dir.resolve(s"$i.json")
-      java.nio.file.Files.writeString(f, rows.map { case (u, t) =>
-        s"""{"user_id":$u,"ts":"$t"}""" }.mkString("\n"))
-      java.nio.file.Files.setLastModifiedTime(f,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - (4 - i) * 60000L))
-    }
-    def ckptDir() =
-      java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString
-    val clean, restarted =
-      scala.collection.mutable.ArrayBuffer.empty[Pipelines.SessionOut]
-    val ckpt = ckptDir()
-    withRocksDb {
-      sessionsRun(dir.toString, ckptDir(), clean)
-      val crash = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        sessionsRun(dir.toString, ckpt, restarted, crashOn = 2L))
-      assert(crash.getMessage.contains("injected crash in batch 2"))
-      def exists(rel: String) = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(ckpt, rel))
-      assert(exists("offsets/2") && !exists("commits/2"),
-        "the crash did not land between the WAL entry and the commit")
-      sessionsRun(dir.toString, ckpt, restarted)
-    }
+      Seq(9 -> "2026-01-02T10:00:00Z")).map(_.map { case (u, t) =>
+        s"""{"user_id":$u,"ts":"$t"}""" }))
+    val (clean, restarted) = withRocksDb(
+      cleanAndRestarted(dir, "user_id LONG, ts TIMESTAMP", df =>
+        Pipelines.sessionsWithState(df.as[Pipelines.SessionInput]).toDF()))
     def ms(t: String) = java.time.Instant.parse(t).toEpochMilli
-    assert(clean.contains(Pipelines.SessionOut(1L,
-      ms("2026-01-01T09:00:00Z"), ms("2026-01-01T09:30:00Z"), 3L)), clean)
-    assert(clean.contains(Pipelines.SessionOut(2L,
-      ms("2026-01-01T09:05:00Z"), ms("2026-01-01T09:05:00Z"), 1L)), clean)
-    val order = Ordering.by((o: Pipelines.SessionOut) =>
-      (o.user_id, o.sess_start, o.sess_end, o.n_events))
-    assert(restarted.sorted(order) === clean.sorted(order))
+    assert(clean.contains(Row(1L,
+      ms("2026-01-01T09:00:00Z"), ms("2026-01-01T09:30:00Z"), 3L).toString), clean)
+    assert(clean.contains(Row(2L,
+      ms("2026-01-01T09:05:00Z"), ms("2026-01-01T09:05:00Z"), 1L).toString), clean)
+    assert(restarted === clean)
+  }
+
+  test("dropDuplicatesWithinWatermark: a crash between the offsets WAL and the commit log restarts exactly once") {
+    // batch 2 holds a duplicate of a key first seen in batch 1 (user 3)
+    // and of one first seen in batch 0 (user 1), both dropped by state,
+    // and a new key (user 4); no file repeats a key, so which row a
+    // batch keeps never depends on order within the batch
+    val dir = stageJson(Seq(
+      Seq((1, "09:00", 1), (2, "09:10", 2)),
+      Seq((1, "10:00", 3), (3, "10:05", 4)),
+      Seq((3, "10:20", 5), (4, "10:30", 6), (1, "10:40", 7)),
+      Seq((5, "14:00", 8))).map(_.map { case (u, t, v) =>
+        s"""{"user_id":$u,"ts":"2026-01-01T$t:00Z","v":$v}""" }))
+    val (clean, restarted) = cleanAndRestarted(dir,
+      "user_id LONG, ts TIMESTAMP, v LONG",
+      df => Pipelines.dedupKeyed(df, Seq("user_id")).select("user_id", "v"))
+    assert(clean === Seq(Row(1L, 1L), Row(2L, 2L), Row(3L, 4L), Row(4L, 6L),
+      Row(5L, 8L)).map(_.toString), clean)
+    assert(restarted === clean)
   }
 
   test("stream-stream coincidence join matches within tolerance only") {

@@ -14,11 +14,14 @@ missing on either side are listed separately, never silently dropped.
 
 --counters diffs the per-entry counters instead (the `counters` map of
 the full line): seconds, executor CPU seconds, shuffle MB (read +
-written) and spill MB (memory + disk) on each side, per entry present in
-both, then their sums. Wall time on a shared host drifts, while CPU time
-and byte counts are properties of the work, so an A/B reads these first.
-Artifacts written before Bench stamped counters have none; that prints a
-"no counters" line and exits 1.
+written), spill MB (memory + disk), generated classes compiled and their
+compile ms (`codegen.compiles`, `codegen.compile_ms`) on each side, per
+entry present in both, then their sums. Wall time on a shared host
+drifts, while CPU time, byte and compile counts are properties of the
+work, so an A/B reads these first. Artifacts written before Bench
+stamped counters have none; that prints a "no counters" line and exits
+1. Artifacts written before Bench stamped `codegen` print `-` in its two
+columns and leave it out of the sums.
 
 Reads the full artifact line via json.loads — these files are written
 by Bench.scala itself, so unlike the in-engine baseline parser there is
@@ -86,24 +89,30 @@ def counters(path_a, path_b):
 
     def row(q, c, k):
         e = c[k]
+        g = e.get("codegen", {})
         return (q[k], e["cpu_s"],
                 (e["shuf_r"] + e["shuf_w"]) / 1e6,
-                (e["spill"]["mem"] + e["spill"]["disk"]) / 1e6)
+                (e["spill"]["mem"] + e["spill"]["disk"]) / 1e6,
+                g.get("compiles"), g.get("compile_ms"))
+
+    def cells(vals):
+        return " ".join(f"{'-':>12}" if v is None else f"{v:12.3f}"
+                        for v in vals)
 
     common = sorted(set(ca) & set(cb))
-    names = ("secs", "cpu_s", "shuf_mb", "spill_mb")
-    print(f"{'entry':40} " + " ".join(f"{n + '_a':>10} {n + '_b':>10}"
+    names = ("secs", "cpu_s", "shuf_mb", "spill_mb", "compiles", "compile_ms")
+    print(f"{'entry':40} " + " ".join(f"{n + '_a':>12} {n + '_b':>12}"
                                        for n in names))
-    sums = [0.0] * 8
+    sums = [None] * (2 * len(names))
     for k in common:
         vals = [v for pair in zip(row(qa, ca, k), row(qb, cb, k))
                 for v in pair]
-        sums = [s + v for s, v in zip(sums, vals)]
-        print(f"{k:40} " + " ".join(f"{v:10.3f}" for v in vals))
+        sums = [s if v is None else (s or 0.0) + v
+                for s, v in zip(sums, vals)]
+        print(f"{k:40} " + cells(vals))
     for k in sorted(set(ca) ^ set(cb)):
         print(f"   only-one-side  {k}")
-    print(f"{'sum (' + str(len(common)) + ' entries)':40} "
-          + " ".join(f"{v:10.3f}" for v in sums))
+    print(f"{'sum (' + str(len(common)) + ' entries)':40} " + cells(sums))
     return 0
 
 
