@@ -535,18 +535,10 @@ object Corpus {
     val tp = prep(probe)
     val cp = prep(corpus)
     def bands(df: org.apache.spark.sql.DataFrame) = df
-      .select(col(idCol),
-        posexplode(array(
-          concat_ws("", slice(col("sig"), 1, 4)),
-          concat_ws("", slice(col("sig"), 5, 4)))))
+      .select(col(idCol), DD.minhashBandRows(col("sig")))
       .toDF(idCol, "band_no", "band")
     val tb = bands(tp)
-    val cbAll = bands(cp)
-    val hot = cbAll.groupBy("band_no", "band")
-      .agg(count(lit(1)).as("graft_df"))
-      .filter(col("graft_df") > DD.MaxPostingDf)
-      .select("band_no", "band")
-    val cb = cbAll.join(broadcast(hot), Seq("band_no", "band"), "left_anti")
+    val cb = DD.dropOverCapKeys(bands(cp), Seq("band_no", "band"), DD.MaxPostingDf)
     val cand = tb.join(cb.withColumnRenamed(idCol, "c"),
         Seq("band_no", "band"))
       .select(col(idCol).as("t"), col("c")).distinct()
@@ -587,36 +579,13 @@ object Corpus {
                     WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
                       THEN 'val'
                     ELSE 'test' END AS split FROM documents),
-             toks AS (SELECT doc_id, split, string_split(text, ' ') AS tk
-                      FROM sp),
-             sh AS (SELECT DISTINCT doc_id, split, unnest(list_transform(
-                      range(1, greatest(len(tk) - 1, 1) + 1),
-                      i -> array_to_string(tk[i:i+1], ' '))) AS sh
-                    FROM toks),
-             hx AS (SELECT doc_id, split, md5('0:' || sh) AS m0,
-                           md5('1:' || sh) AS m1 FROM sh),
-             mh AS (SELECT doc_id, split,
-                      min(substring(m0, 1, 8))  AS h0,
-                      min(substring(m0, 9, 8))  AS h1,
-                      min(substring(m0, 17, 8)) AS h2,
-                      min(substring(m0, 25, 8)) AS h3,
-                      min(substring(m1, 1, 8))  AS h4,
-                      min(substring(m1, 9, 8))  AS h5,
-                      min(substring(m1, 17, 8)) AS h6,
-                      min(substring(m1, 25, 8)) AS h7
-                    FROM hx GROUP BY doc_id, split),
-             bands_all AS (
-               SELECT doc_id, split, 0 AS band_no,
-                      h0 || h1 || h2 || h3 AS band FROM mh
-               UNION ALL
-               SELECT doc_id, split, 1 AS band_no,
-                      h4 || h5 || h6 || h7 AS band FROM mh),
+             ${Dedup.shingleSqlCte("sp", "split")},
+             ${Dedup.minhashSqlCte("sh", "split")},
              tb AS (SELECT doc_id, band_no, band FROM bands_all
                     WHERE split = 'test'),
              cb AS (SELECT doc_id, band_no, band FROM bands_all
                     WHERE split = 'train'
-                    QUALIFY count(*) OVER (PARTITION BY band_no, band)
-                      <= ${graft.ops.Dedup.MaxPostingDf}),
+                    ${Dedup.coldSql("band_no, band")}),
              cand AS (SELECT DISTINCT t.doc_id AS t, c.doc_id AS c
                       FROM tb t JOIN cb c
                         ON t.band_no = c.band_no AND t.band = c.band),

@@ -730,10 +730,12 @@ object Curation {
     *
     * Scale shape: positions come from one posexplode with the previous
     * token read from the SAME row's array (`get(tk, pos-1)` — no
-    * self-join, no per-doc window); the model frames (unigram counts,
-    * bigram counts) are vocab-bounded aggregations; scoring is three
-    * equi-joins keyed on those frames plus one broadcast scalar, then
-    * the per-doc sum. */
+    * self-join, no per-doc window); the model frames are aggregations
+    * of the model slice: unigram counts are vocabulary-bounded, but
+    * bigram counts hold every distinct bigram of the slice, which on
+    * natural text grows with the corpus (SCALE.md has the measured
+    * size and its broadcast ceiling); scoring is three equi-joins keyed
+    * on those frames plus one broadcast scalar, then the per-doc sum. */
   val qTextSurprisalBigram = Q(
     "q_text_surprisal_bigram",
     (s, d) => {
@@ -753,9 +755,11 @@ object Curation {
       val bitlen: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         c => length(bin(c)).cast("long")
       // The three model joins broadcast EXPLICITLY (r19, guide §3.1):
-      // the model frames are vocab-bounded and deliberately small — the
-      // CCNet asymmetry, a strided slice of the train split — while the
-      // probe side is the corpus-sized exploded token frame. Left to
+      // the model frames are deliberately small — the CCNet asymmetry,
+      // a strided slice of the train split — while the probe side is
+      // the corpus-sized exploded token frame. Only cnt1 is
+      // vocabulary-bounded: cnt2's distinct bigrams grow with the slice,
+      // so its broadcast has a corpus-size ceiling (SCALE.md). Left to
       // size estimates the planner can flip these to sort-merge at
       // scale, shuffling every token three times for a model that fits
       // in memory by construction. (A model past the broadcast cap

@@ -28,21 +28,67 @@ object Dedup {
     T.documents(s, d)
       .withColumn("sh", graft.functions.WordShingles.shingles(col("text")))
 
-  /** `sh` is MATERIALIZED (here and in the frames below): DuckDB 1.x
+  /** DuckDB mirror of [[shingled]] — the one oracle spelling of the
+    * word 2-gram shingle law: CTEs `toks` and `sh(doc_id, carry, sh)`
+    * over the `(doc_id, carry, text)` relation `src`, where `carry` is
+    * one column passed through (a per-document attribute such as
+    * `source` or `split`).
+    *
+    * `sh` is MATERIALIZED (here and in the frames below): DuckDB 1.x
     * inlines a plain CTE per REFERENCE — an oracle that reads the
     * posting frame three times re-derives the whole shingle explode
     * three times, which is exactly what made the original
     * band_sweep/minhash_quality spellings infeasible at sf3 (VERDICT
     * r11 §2; measured failures in SCALE.md round 11). Results are
     * unchanged; only the execution is pay-once. */
-  private val shingleSqlCte =
-    """toks AS (SELECT doc_id, source, string_split(text, ' ') AS tk
-                FROM documents),
-       sh AS MATERIALIZED (SELECT DISTINCT doc_id, source,
+  private[ops] def shingleSqlCte(src: String, carry: String): String =
+    s"""toks AS (SELECT doc_id, $carry, string_split(text, ' ') AS tk
+                FROM $src),
+       sh AS MATERIALIZED (SELECT DISTINCT doc_id, $carry,
               unnest(list_transform(
                 range(1, greatest(len(tk) - 1, 1) + 1),
                 i -> array_to_string(tk[i:i+1], ' '))) AS sh
               FROM toks)"""
+
+  /** Planes in a [[graft.functions.MinHashSig]] signature: two md5s per
+    * shingle, each split into four 32-bit planes. */
+  private val MinHashPlanes = 8
+
+  /** Bands of the declared MinHash-LSH layout (2 bands × 4 planes). */
+  private val MinHashBands = 2
+
+  /** The MinHash band law: signature column `sig` split into `nBands`
+    * bands of `8 / nBands` consecutive planes, band b the concatenation
+    * of its planes' hex. [[sigBandSql]] is the oracle's spelling. */
+  private[ops] def sigBands(sig: Column, nBands: Int): Seq[Column] = {
+    val rows = MinHashPlanes / nBands
+    (0 until nBands).map(b => concat_ws("", slice(sig, b * rows + 1, rows)))
+  }
+
+  /** DuckDB mirror of band `b` of [[sigBands]], over the `h0`..`h7`
+    * plane columns of [[minhashSqlCte]]'s `mh`. */
+  private def sigBandSql(nBands: Int, b: Int): String = {
+    val rows = MinHashPlanes / nBands
+    (b * rows until (b + 1) * rows).map(i => s"h$i").mkString(" || ")
+  }
+
+  /** DuckDB mirror of [[graft.functions.MinHashSig]] and the declared
+    * banding, over the `sh(doc_id, carry, sh)` relation `src`
+    * ([[shingleSqlCte]]): `hx` (the two seeded md5s per shingle), `mh`
+    * (the 8 planes `h0`..`h7` per document, min over fixed-width hex =
+    * min over the 32-bit value) and `bands_all(doc_id, carry, band_no,
+    * band)`, every band of every document before any cap. */
+  private[ops] def minhashSqlCte(src: String, carry: String): String = {
+    val planes = (0 until MinHashPlanes).map(i =>
+      s"min(substring(m${i / 4}, ${i % 4 * 8 + 1}, 8)) AS h$i").mkString(", ")
+    val bands = (0 until MinHashBands).map(b =>
+      s"SELECT doc_id, $carry, $b AS band_no, ${sigBandSql(MinHashBands, b)} AS band FROM mh")
+    s"""hx AS (SELECT doc_id, $carry, md5('0:' || sh) AS m0,
+                     md5('1:' || sh) AS m1 FROM $src),
+       mh AS MATERIALIZED (SELECT doc_id, $carry, $planes
+              FROM hx GROUP BY doc_id, $carry),
+       bands_all AS (${bands.mkString("\n         UNION ALL ")})"""
+  }
 
   /** Document-frequency ceiling for posting lists (pair generation) and
     * fingerprint joins. A key shared by more than this many documents is
@@ -168,18 +214,29 @@ object Dedup {
     // inside the aggregate select below (ADVICE r15)
     require(keep.forall(keys.contains),
       s"keep must be a subset of keys: ${keep.filterNot(keys.contains).mkString(", ")} not in ${keys.mkString(", ")}")
-    val kc = keys.map(col)
-    val hot = df.groupBy(kc: _*).agg(count(lit(1)).as("graft_df"))
-      .filter(col("graft_df") > maxDf)
-      .select(kc: _*)
-    df.join(broadcast(hot), keys, "left_anti")
-      .groupBy(kc: _*)
+    dropOverCapKeys(df, keys, maxDf)
+      .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
       .select(keep.map(col) :+
         graft.functions.PairCombinations.pairs(col("ids")): _*)
       .select((keep :+ "a" :+ "b").map(col): _*)
   }
+
+  /** The hot-key cap: the distinct `keys` tuples held by more than
+    * `maxDf` rows of `df` — tiny by definition, so every consumer
+    * broadcasts it (see [[pairsFromGroups]]). */
+  private[ops] def overCapKeys(df: DataFrame, keys: Seq[String],
+      maxDf: Int): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("graft_df"))
+      .filter(col("graft_df") > maxDf)
+      .select(keys.map(col): _*)
+
+  /** `df` without the rows of its [[overCapKeys]]: a broadcast left-anti
+    * join, so no hot key's rows reach a pair expansion. */
+  private[ops] def dropOverCapKeys(df: DataFrame, keys: Seq[String],
+      maxDf: Int): DataFrame =
+    df.join(broadcast(overCapKeys(df, keys, maxDf)), keys, "left_anti")
 
   /** Census of what [[pairsFromGroups]]' df-cap DROPPED — the "no silent
     * caps" companion (VERDICT r9 §2): the cap is the right scale
@@ -200,10 +257,7 @@ object Dedup {
   def capCensus(df: DataFrame, keys: Seq[String],
       maxDf: Int = MaxPostingDf, idCol: String = "doc_id",
       idsName: String = "n_capped_docs"): DataFrame = {
-    val kc = keys.map(col)
-    val hot = df.groupBy(kc: _*).agg(count(lit(1)).as("graft_df"))
-      .filter(col("graft_df") > maxDf)
-      .select(kc: _*)
+    val hot = overCapKeys(df, keys, maxDf)
     hot.agg(count(lit(1)).as("n_capped_bands"))
       .crossJoin(
         df.join(broadcast(hot), keys, "left_semi")
@@ -247,12 +301,22 @@ object Dedup {
     shingled(s, d)
       .select(col("doc_id"),
         graft.functions.MinHashSig.minhash(col("sh")).as("sig"))
-      .select(col("doc_id"),
-        posexplode(array(
-          concat_ws("", slice(col("sig"), 1, 4)),
-          concat_ws("", slice(col("sig"), 5, 4)))))
+      .select(col("doc_id"), minhashBandRows(col("sig")))
       .toDF("doc_id", "band_no", "band")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** One `(band_no, band)` row per band of the declared banding of
+    * signature `sig` ([[sigBands]] at 2 × 4). */
+  private[ops] def minhashBandRows(sig: Column): Column =
+    posexplode(array(sigBands(sig, MinHashBands): _*))
+
+  /** Per document: its distinct sorted shingle set `shd` and MinHash
+    * signature `sig` — the base both sketch-calibration queries
+    * ([[qDedupMinhashQuality]], [[qDedupBandSweep]]) score pairs on. */
+  private def sigBase(s: SparkSession, d: String): DataFrame =
+    shingled(s, d).select(col("doc_id"),
+      array_sort(array_distinct(col("sh"))).as("shd"),
+      graft.functions.MinHashSig.minhash(col("sh")).as("sig"))
 
   private[ops] def minhashPairs(s: SparkSession, d: String): DataFrame =
     pairsFromGroups(minhashBands(s, d), Seq("band_no", "band")).distinct()
@@ -263,22 +327,11 @@ object Dedup {
     * the oracle must state the cap too, or a band with more than maxDf
     * documents diverges between engines exactly when the cap fires. */
   private[ops] val minhashPairsSqlCte: String =
-    s"""$shingleSqlCte,
-       hx AS (SELECT doc_id, md5('0:' || sh) AS m0, md5('1:' || sh) AS m1
-              FROM sh),
-       mh AS MATERIALIZED (SELECT doc_id,
-                min(substring(m0, 1, 8))  AS h0, min(substring(m0, 9, 8))  AS h1,
-                min(substring(m0, 17, 8)) AS h2, min(substring(m0, 25, 8)) AS h3,
-                min(substring(m1, 1, 8))  AS h4, min(substring(m1, 9, 8))  AS h5,
-                min(substring(m1, 17, 8)) AS h6, min(substring(m1, 25, 8)) AS h7
-              FROM hx GROUP BY doc_id),
-       bands_all AS (
-         SELECT doc_id, 0 AS band_no, h0 || h1 || h2 || h3 AS band FROM mh
-         UNION ALL
-         SELECT doc_id, 1 AS band_no, h4 || h5 || h6 || h7 AS band FROM mh),
+    s"""${shingleSqlCte("documents", "source")},
+       ${minhashSqlCte("sh", "source")},
        bands AS (
          SELECT doc_id, band_no, band FROM bands_all
-         QUALIFY count(*) OVER (PARTITION BY band_no, band) <= $MaxPostingDf),
+         ${coldSql("band_no, band")}),
        cand AS MATERIALIZED (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
                 FROM bands x JOIN bands y
                   ON x.band_no = y.band_no AND x.band = y.band
@@ -311,19 +364,28 @@ object Dedup {
          JOIN shi y ON y.doc_id = c.b AND y.sid = x.sid
          GROUP BY 1, 2)"""
 
-  /** DuckDB mirror of [[capCensus]] over the minhash bands — appends to
-    * [[minhashPairsSqlCte]] (reads its `bands_all`). One row
-    * `census(n_capped_bands, n_capped_docs)`; the HAVING threshold is
-    * the SAME [[MaxPostingDf]] constant the QUALIFY drop states, so the
-    * census and the cap can never disagree about what was dropped. */
-  private[ops] val minhashCensusSqlCte: String =
-    s"""hotb AS (SELECT band_no, band FROM bands_all
-                 GROUP BY band_no, band HAVING count(*) > $MaxPostingDf),
+  /** DuckDB mirror of [[dropOverCapKeys]]: the clause that keeps a row only
+    * while its `keys` group holds at most `maxDf` rows. */
+  private[ops] def coldSql(keys: String, maxDf: Int = MaxPostingDf): String =
+    s"QUALIFY count(*) OVER (PARTITION BY $keys) <= $maxDf"
+
+  /** DuckDB mirror of [[overCapKeys]]: the distinct `keys` tuples of
+    * relation `src` held by more than `maxDf` rows — exactly the groups
+    * [[coldSql]] drops at the same `maxDf`. */
+  private def overCapSql(src: String, keys: String, maxDf: Int): String =
+    s"SELECT $keys FROM $src GROUP BY $keys HAVING count(*) > $maxDf"
+
+  /** DuckDB mirror of [[capCensus]] over the `(band_no, band)` keys of
+    * relation `src`: CTEs `hotb` ([[overCapSql]] at [[MaxPostingDf]])
+    * and the one-row `census(n_capped_bands, idsName)`. */
+  private[ops] def capCensusSqlCte(src: String, idCol: String = "doc_id",
+      idsName: String = "n_capped_docs"): String =
+    s"""hotb AS (${overCapSql(src, "band_no, band", MaxPostingDf)}),
         census AS (SELECT
           (SELECT count(*) FROM hotb) AS n_capped_bands,
-          (SELECT count(DISTINCT b.doc_id) FROM bands_all b
+          (SELECT count(DISTINCT b.$idCol) FROM $src b
              JOIN hotb h ON b.band_no = h.band_no AND b.band = h.band)
-            AS n_capped_docs)"""
+            AS $idsName)"""
 
   /** MinHash(8 planes) + LSH banding (2 bands × 4 rows): candidate
     * near-duplicate pairs. Portable hash, cheap: TWO md5s per shingle
@@ -425,18 +487,12 @@ object Dedup {
                       FROM documents d, pn
                       WHERE substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 2)
                         <= printf('%02x', pn.k - 1)),
-            toks AS (SELECT doc_id, source, string_split(text, ' ') AS tk
-                     FROM sdocs),
-            sh AS (SELECT DISTINCT doc_id, source, unnest(list_transform(
-                     range(1, greatest(len(tk) - 1, 1) + 1),
-                     i -> array_to_string(tk[i:i+1], ' '))) AS sh
-                   FROM toks),
+            ${shingleSqlCte("sdocs", "source")},
             sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
             -- mirror pairsFromGroups' maxDf drop: posting lists sized
             -- above the cap generate no pairs in EITHER engine
             shc AS (SELECT doc_id, source, sh FROM sh
-                    QUALIFY count(*) OVER (PARTITION BY source, sh)
-                      <= $MaxPostingDf),
+                    ${coldSql("source, sh")}),
             inter AS (SELECT x.doc_id AS a, y.doc_id AS b,
                              count(*) AS n_inter
                       FROM shc x JOIN shc y
@@ -584,11 +640,7 @@ object Dedup {
     // Same hot-key policy as pairsFromGroups: a band bucket holding more
     // than maxBucket vectors is dense-region noise whose pair expansion
     // is quadratic — drop it; dense regions are the ANN paths' job.
-    val hot = bands.groupBy("band_no", "band")
-      .agg(count(lit(1)).as("graft_df"))
-      .filter(col("graft_df") > maxBucket)
-      .select("band_no", "band")
-    val cold = bands.join(broadcast(hot), Seq("band_no", "band"), "left_anti")
+    val cold = dropOverCapKeys(bands, Seq("band_no", "band"), maxBucket)
     val cos = Similarity.cosine(col("x.v"), col("y.v"))
     val top = cold.as("x")
       .join(cold.as("y"),
@@ -634,16 +686,8 @@ object Dedup {
                      UNION ALL
                      SELECT vec_id, v, 2, bucket // 65536 FROM bk),
            cold AS (SELECT vec_id, v, band_no, band FROM bands
-                    QUALIFY count(*) OVER (PARTITION BY band_no, band)
-                      <= $MaxPostingDf),
-           hotb AS (SELECT band_no, band FROM bands
-                    GROUP BY band_no, band
-                    HAVING count(*) > $MaxPostingDf),
-           census AS (SELECT
-             (SELECT count(*) FROM hotb) AS n_capped_bands,
-             (SELECT count(DISTINCT b.vec_id) FROM bands b
-                JOIN hotb h ON b.band_no = h.band_no AND b.band = h.band)
-               AS n_capped_vecs),
+                    ${coldSql("band_no, band")}),
+           ${capCensusSqlCte("bands", "vec_id", "n_capped_vecs")},
            pairs AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b,
                        ${sqlR2("list_cosine_similarity(x.v, y.v)")} AS cos
                      FROM cold x JOIN cold y
@@ -786,18 +830,6 @@ object Dedup {
       .orderBy("vec_id")
   }
 
-  /** The DuckDB cosine kernel over two DOUBLE[] expressions — the exact
-    * op sequence of the fused [[graft.functions.CosineSim]] codegen
-    * kernel (three in-order `list_inner_product`s, then
-    * dot/(sqrt·sqrt)), dim 64 (the fixture width, TESTDATA.md). Native
-    * kernels since r16 — bit-identical to the lambda spelling they
-    * replaced (certified on all 200k sf10 vectors) without its
-    * per-element list rebuilds. */
-  private def cosSql(a: String, b: String): String =
-    s"""(list_inner_product($a, $b)
-         / (sqrt(list_inner_product($a, $a))
-            * sqrt(list_inner_product($b, $b))))"""
-
   val qDedupSemantic = Q(
     "q_dedup_semantic",
     (s, d) => semanticDedup(
@@ -813,7 +845,7 @@ object Dedup {
                        WHERE e.vec_id % p.stride = 0
                          AND e.vec_id < p.stride * $SemanticCells),
              sims AS (SELECT e.vec_id, s.cell, e.v,
-                        ${cosSql("e.v", "s.cv")} AS sim
+                        ${Similarity.cosineSql("e.v", "s.cv")} AS sim
                       FROM e CROSS JOIN seeds s),
              assign AS (SELECT vec_id, cell, v FROM sims
                         QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -824,7 +856,7 @@ object Dedup {
              owners AS (SELECT y.vec_id AS vec_id, min(x.vec_id) AS dup_of
                         FROM capped x JOIN capped y
                           ON x.cell = y.cell AND x.vec_id < y.vec_id
-                        WHERE ${cosSql("x.v", "y.v")} >= $SemanticEps
+                        WHERE ${Similarity.cosineSql("x.v", "y.v")} >= $SemanticEps
                         GROUP BY y.vec_id)
            SELECT a.vec_id, a.cell, o.dup_of IS NULL AS kept, o.dup_of
            FROM assign a LEFT JOIN owners o USING (vec_id)
@@ -895,7 +927,7 @@ object Dedup {
                     WHERE e.vec_id % p.stride = 0
                       AND e.vec_id < p.stride * $SemanticCells),
           sims AS (SELECT e.vec_id, s.cell, e.v,
-                     ${cosSql("e.v", "s.cv")} AS sim
+                     ${Similarity.cosineSql("e.v", "s.cv")} AS sim
                    FROM e CROSS JOIN seeds s),
           assign AS (SELECT vec_id, cell, v FROM sims
                      QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -903,7 +935,7 @@ object Dedup {
           capped AS (SELECT vec_id, cell, v FROM assign
                      QUALIFY row_number() OVER (PARTITION BY cell
                        ORDER BY vec_id) <= $MaxEmbeddingBlock),
-          mc AS (SELECT y.vec_id, max(${cosSql("x.v", "y.v")}) AS mc
+          mc AS (SELECT y.vec_id, max(${Similarity.cosineSql("x.v", "y.v")}) AS mc
                  FROM capped x JOIN capped y
                    ON x.cell = y.cell AND x.vec_id < y.vec_id
                  GROUP BY y.vec_id),
@@ -1112,9 +1144,7 @@ object Dedup {
   val qDedupMinhashQuality = Q(
     "q_dedup_minhash_quality",
     (s, d) => {
-      val base = shingled(s, d).select(col("doc_id"),
-        array_sort(array_distinct(col("sh"))).as("shd"),
-        graft.functions.MinHashSig.minhash(col("sh")).as("sig"))
+      val base = sigBase(s, d)
       val ja = base.select(col("doc_id").as("a"), col("shd").as("sha"),
         col("sig").as("siga"))
       val jb = base.select(col("doc_id").as("b"), col("shd").as("shb"),
@@ -1239,9 +1269,9 @@ object Dedup {
            FROM documents d LEFT JOIN st USING (doc_id)
            ORDER BY doc_id"""))
 
-  /** Banding configurations for [[qDedupBandSweep]]: (bands, rows/band)
-    * partitions of the 8-plane signature. */
-  val BandSweepConfigs: Seq[(Int, Int)] = Seq((1, 8), (2, 4), (4, 2), (8, 1))
+  /** Banding configurations for [[qDedupBandSweep]]: band counts, each
+    * splitting the signature's [[MinHashPlanes]] into equal bands. */
+  val BandSweepConfigs: Seq[Int] = Seq(1, 2, 4, 8)
 
   /** The sweep's OWN posting cap — deliberately tighter than the
     * production [[MaxPostingDf]]. The coarse probe configs (8×1: one
@@ -1282,23 +1312,18 @@ object Dedup {
     "q_dedup_band_sweep",
     (s, d) => {
       import s.implicits._
-      val base = shingled(s, d).select(col("doc_id"),
-        array_sort(array_distinct(col("sh"))).as("shd"),
-        graft.functions.MinHashSig.minhash(col("sh")).as("sig"))
+      val base = sigBase(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bandStructs = array(BandSweepConfigs.flatMap { case (nb, rpb) =>
-        (0 until nb).map { b =>
-          struct(lit(nb).as("cfg"), lit(b).as("band_no"),
-            concat_ws("", slice(col("sig"), b * rpb + 1, rpb)).as("band"))
+      val bandStructs = array(BandSweepConfigs.flatMap { nb =>
+        sigBands(col("sig"), nb).zipWithIndex.map { case (band, b) =>
+          struct(lit(nb).as("cfg"), lit(b).as("band_no"), band.as("band"))
         }
       }: _*)
       val bands = base.select(col("doc_id"), explode(bandStructs).as("bs"))
         .select(col("doc_id"), col("bs.cfg"), col("bs.band_no"),
           col("bs.band"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val capped = bands.groupBy("cfg", "band_no", "band")
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > BandSweepMaxDf)
+      val capped = overCapKeys(bands, Seq("cfg", "band_no", "band"), BandSweepMaxDf)
         .groupBy("cfg").agg(count(lit(1)).as("ncap"))
       // ONE grouped pass for all four configs: cfg is part of the band
       // key, so (cfg, band_no, band) groups are exactly the per-config
@@ -1319,11 +1344,11 @@ object Dedup {
       val agg = scored.groupBy("cfg")
         .agg(count(lit(1)).as("nc"),
           count(when(col("ni") * 2 >= col("nu"), 1)).as("nt"))
-      BandSweepConfigs.map(_._1).toDF("cfg")
+      BandSweepConfigs.toDF("cfg")
         .join(agg, Seq("cfg"), "left")
         .join(capped, Seq("cfg"), "left")
         .select(col("cfg").as("n_bands"),
-          expr("CAST(8 div cfg AS BIGINT)").as("rows_per_band"),
+          expr(s"CAST($MinHashPlanes div cfg AS BIGINT)").as("rows_per_band"),
           coalesce(col("ncap"), lit(0L)).as("n_capped_bands"),
           coalesce(col("nc"), lit(0L)).as("n_candidates"),
           coalesce(col("nt"), lit(0L)).as("n_true"))
@@ -1334,22 +1359,17 @@ object Dedup {
         .orderBy("n_bands")
     },
     Some {
-      val bandRows = BandSweepConfigs.flatMap { case (nb, rpb) =>
-        (0 until nb).map { b =>
-          val cols = (b * rpb until (b + 1) * rpb).map(i => s"h$i")
-            .mkString(" || ")
-          s"SELECT doc_id, $nb AS cfg, $b AS band_no, $cols AS band FROM mh"
-        }
+      val bandRows = BandSweepConfigs.flatMap { nb =>
+        (0 until nb).map(b => s"SELECT doc_id, $nb AS cfg, $b AS band_no, " +
+          s"${sigBandSql(nb, b)} AS band FROM mh")
       }.mkString("\n UNION ALL ")
       s"""WITH $minhashPairsSqlCte,
            bands_s AS MATERIALIZED ($bandRows),
            bands_k AS (SELECT * FROM bands_s
-             QUALIFY count(*) OVER (PARTITION BY cfg, band_no, band)
-               <= $BandSweepMaxDf),
+             ${coldSql("cfg, band_no, band", BandSweepMaxDf)}),
            capped AS (SELECT cfg, count(*) AS ncap FROM (
-               SELECT cfg, band_no, band, count(*) AS df
-               FROM bands_s GROUP BY cfg, band_no, band)
-             WHERE df > $BandSweepMaxDf GROUP BY cfg),
+               ${overCapSql("bands_s", "cfg, band_no, band", BandSweepMaxDf)})
+             GROUP BY cfg),
            cand_s AS MATERIALIZED (
              SELECT DISTINCT x.cfg, x.doc_id AS a, y.doc_id AS b
              FROM bands_k x JOIN bands_k y
@@ -1368,7 +1388,7 @@ object Dedup {
                count(*) FILTER (WHERE 2 * ni >= nu) AS nt
              FROM scored GROUP BY cfg)
          SELECT t.cfg AS n_bands,
-           CAST(8 // t.cfg AS BIGINT) AS rows_per_band,
+           CAST($MinHashPlanes // t.cfg AS BIGINT) AS rows_per_band,
            CAST(coalesce(cp.ncap, 0) AS BIGINT) AS n_capped_bands,
            CAST(coalesce(a.nc, 0) AS BIGINT) AS n_candidates,
            CAST(coalesce(a.nt, 0) AS BIGINT) AS n_true,
@@ -1376,7 +1396,7 @@ object Dedup {
                 ELSE CAST((2000000 * coalesce(a.nt, 0) + coalesce(a.nc, 0))
                           // (2 * coalesce(a.nc, 0)) AS BIGINT) END
              AS precision_ppm
-         FROM (VALUES (1), (2), (4), (8)) t(cfg)
+         FROM (VALUES ${BandSweepConfigs.map(c => s"($c)").mkString(", ")}) t(cfg)
          LEFT JOIN agg a ON a.cfg = t.cfg
          LEFT JOIN capped cp ON cp.cfg = t.cfg
          ORDER BY n_bands"""

@@ -369,7 +369,7 @@ object Graph {
         .orderBy("degree")
     },
     Some(s"""WITH ${Dedup.minhashPairsSqlCte},
-           ${Dedup.minhashCensusSqlCte},
+           ${Dedup.capCensusSqlCte("bands_all")},
            ends AS (SELECT a AS doc_id FROM cand
                     UNION ALL SELECT b AS doc_id FROM cand),
            deg0 AS (SELECT doc_id, count(*) AS degree

@@ -447,11 +447,12 @@ object Similarity {
     * engines, so k boundaries cannot diverge. The native kernel's
     * left-to-right accumulation matches the lambda spelling it replaced
     * bit-for-bit (certified on all 200k sf10 vectors, r16) at ~1000×
-    * its speed — the lambda form re-built list literals per element. */
+    * its speed — the lambda form re-built list literals per element.
+    * Parenthesized, so it composes as one operand at any call site. */
   private[ops] def cosineSql(a: String, b: String): String =
-    s"""list_inner_product($a, $b)
+    s"""(list_inner_product($a, $b)
         / (sqrt(list_inner_product($a, $a))
-         * sqrt(list_inner_product($b, $b)))"""
+         * sqrt(list_inner_product($b, $b))))"""
 
   /** Per-cell mean vector of an assigned (cell, v) frame via the
     * [[graft.functions.VectorAvgAgg]] elementwise-mean aggregate: one

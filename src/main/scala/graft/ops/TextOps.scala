@@ -420,19 +420,15 @@ object TextOps {
           col("ab").bitwiseAND(lit(0xFFFFFFFFL)).as("b"),
           col("n_shared"))
     else
-      // Doc ids outside [0, 2^31): the same grouped emission with a
-      // struct pair instead of the packed long. Per-doc fingerprints
-      // are DISTINCT, so each group's doc list has no repeats and the
-      // ascending sort makes every emitted struct satisfy a < b — the
-      // packed path's exact pair multiset, aggregated on (a, b).
+      // Doc ids outside [0, 2^31): the same grouped emission with an
+      // (a, b) pair instead of the packed long, through the shared
+      // PairCombinations generator. Per-doc fingerprints are DISTINCT,
+      // so each group's doc list has no repeats and the ascending sort
+      // makes every emitted pair satisfy a < b — the packed path's exact
+      // pair multiset, aggregated on (a, b).
       fp.groupBy("fp")
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .select(explode(expr(
-          """flatten(transform(ds, (x, i) ->
-            |  transform(slice(ds, i + 2, size(ds)),
-            |            y -> struct(x AS a, y AS b))))""".stripMargin))
-          .as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
+        .select(graft.functions.PairCombinations.pairs(col("ds")))
         .repartition(aggParts, col("a"), col("b"))
         .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("n_shared"))
@@ -533,9 +529,7 @@ object TextOps {
                      UNION
                      SELECT doc_id, min(h) AS fp FROM hv WHERE nh <= 8
                      GROUP BY doc_id),
-             hot AS (SELECT fp FROM fps GROUP BY fp
-                     HAVING count(*) > ${Dedup.MaxPostingDf}),
-             ok AS (SELECT doc_id, fp FROM fps ANTI JOIN hot USING (fp))
+             ok AS (SELECT doc_id, fp FROM fps ${Dedup.coldSql("fp")})
            SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS n_shared
            FROM ok x JOIN ok y ON x.fp = y.fp AND x.doc_id < y.doc_id
            GROUP BY a, b HAVING count(*) >= 10 ORDER BY a, b"""))

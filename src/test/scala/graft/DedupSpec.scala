@@ -475,4 +475,31 @@ class DedupSpec extends SparkSpec {
     assert(hist.nonEmpty)
     assert(hist.forall(r => r.getLong(4) == 0L && r.getLong(5) == 0L))
   }
+
+  test("each near-dup law is spelled once in src/main") {
+    import scala.jdk.CollectionConverters._
+    // whitespace-free needles, matched against whitespace-free sources,
+    // so a reformatted copy still counts
+    val laws = Map(
+      "MinHash oracle seed" -> "md5('0:'||sh)",
+      "oracle shingle range" -> "greatest(len(tk)-1,1)",
+      "oracle cosine norm" -> "/(sqrt(list_inner_product(",
+      "engine hot-key filter" -> ".filter(col(\"graft_df\")>",
+      "oracle hot-key cap" -> "QUALIFYcount(*)OVER(",
+      "oracle hot-key set" -> "HAVINGcount(*)>$")
+    val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sources = try main.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => f -> java.nio.file.Files.readString(f).replaceAll("\\s", ""))
+      .toList
+    finally main.close()
+    val respelled = laws.toSeq.sorted.map { case (law, needle) =>
+      law -> sources.flatMap { case (f, text) =>
+        val n = java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
+        Seq.fill(n)(f.getFileName)
+      }
+    }.filter(_._2.size != 1)
+    assert(respelled.isEmpty, respelled.map { case (law, sites) =>
+      s"$law spelled ${sites.size} times (${sites.mkString(", ")})" }.mkString("; "))
+  }
 }

@@ -311,20 +311,25 @@ class StreamingSpec extends SparkSpec {
 
   /** `transform` over the files `stageJson` wrote to `dir`, one file per
     * micro-batch, into `out` by a foreachBatch sink. With `crashOn` the
-    * sink throws on that batch once its rows are computed: after its
-    * offsets are in the WAL and its state is written, before its commit. */
+    * sink throws on that batch once its rows are computed (into
+    * `crashed`): after its offsets are in the WAL and its state is
+    * written, before its commit. */
   private def crashRun(dir: String, schema: String, ckpt: String,
       transform: DataFrame => DataFrame,
       out: scala.collection.mutable.ArrayBuffer[Row],
-      crashOn: Long = -1L): Unit = {
+      crashOn: Long = -1L,
+      crashed: scala.collection.mutable.ArrayBuffer[Row] =
+        scala.collection.mutable.ArrayBuffer.empty[Row]): Unit = {
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).json(dir)
     val q = transform(in)
       .writeStream
       .foreachBatch { (ds: DataFrame, id: Long) =>
         val rows = ds.collect()
-        if (id == crashOn)
+        if (id == crashOn) {
+          crashed ++= rows
           throw new IllegalStateException(s"injected crash in batch $id")
+        }
         out ++= rows
         ()
       }
@@ -336,16 +341,20 @@ class StreamingSpec extends SparkSpec {
 
   /** The rows of an uninterrupted run, and of a run that crashes on batch
     * 2 and restarts on the same checkpoint, each sorted; fails unless the
-    * crash landed between batch 2's offsets WAL entry and its commit. */
+    * crash landed between batch 2's offsets WAL entry and its commit.
+    * The rows batch 2 computed before the crash go to `crashed`. */
   private def cleanAndRestarted(dir: String, schema: String,
-      transform: DataFrame => DataFrame): (Seq[String], Seq[String]) = {
+      transform: DataFrame => DataFrame,
+      crashed: scala.collection.mutable.ArrayBuffer[Row] =
+        scala.collection.mutable.ArrayBuffer.empty[Row])
+      : (Seq[String], Seq[String]) = {
     def ckptDir() =
       java.nio.file.Files.createTempDirectory("graft_crash_ckpt").toString
     val clean, restarted = scala.collection.mutable.ArrayBuffer.empty[Row]
     val ckpt = ckptDir()
     crashRun(dir, schema, ckptDir(), transform, clean)
     val crash = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-      crashRun(dir, schema, ckpt, transform, restarted, crashOn = 2L))
+      crashRun(dir, schema, ckpt, transform, restarted, crashOn = 2L, crashed))
     assert(crash.getMessage.contains("injected crash in batch 2"))
     def exists(rel: String) = java.nio.file.Files.exists(
       java.nio.file.Paths.get(ckpt, rel))
@@ -395,6 +404,64 @@ class StreamingSpec extends SparkSpec {
       df => Pipelines.dedupKeyed(df, Seq("user_id")).select("user_id", "v"))
     assert(clean === Seq(Row(1L, 1L), Row(2L, 2L), Row(3L, 4L), Row(4L, 6L),
       Row(5L, 8L)).map(_.toString), clean)
+    assert(restarted === clean)
+  }
+
+  /** Staged event files for the coincidence-join crash cases: each entry
+    * (user, event type, hh:mm:ss on 2026-01-01) is one event. */
+  private def stageEvents(files: Seq[(Int, String, String)]*): String =
+    stageJson(files.map(_.map { case (u, e, t) =>
+      s"""{"user_id":$u,"event_type":"$e","ts":"2026-01-01T${t}Z"}""" }))
+
+  /** `Pipelines.coincidence` of one event stream split into clicks and
+    * purchases, as the bench's join probes build it. */
+  private def clickPurchase(joinType: String)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val base = df.select(col("user_id").as("key"), col("ts"), col("event_type"))
+    Pipelines.coincidence(
+      base.filter(col("event_type") === "click"),
+      base.filter(col("event_type") === "purchase"),
+      toleranceSec = 60, watermark = "10 minutes", joinType = joinType)
+  }
+
+  private val eventSchema = "user_id LONG, event_type STRING, ts TIMESTAMP"
+
+  test("inner coincidence join: a crash between the offsets WAL and the commit log restarts exactly once") {
+    // batch 2 matches purchases against clicks held in state since
+    // batches 0 (user 2) and 1 (user 4), and a click and purchase that
+    // arrive together (user 5)
+    val dir = stageEvents(
+      Seq((1, "click", "09:00:00"), (2, "click", "09:00:00"),
+        (3, "purchase", "09:00:00")),
+      Seq((1, "purchase", "09:00:30"), (4, "click", "09:05:00")),
+      Seq((4, "purchase", "09:05:20"), (2, "purchase", "09:00:50"),
+        (5, "click", "09:06:00"), (5, "purchase", "09:06:10")),
+      Seq((6, "click", "10:00:00")))
+    val (clean, restarted) =
+      cleanAndRestarted(dir, eventSchema, clickPurchase("inner"))
+    assert(clean.map(_.take(3)) === Seq("[1,", "[2,", "[4,", "[5,"), clean)
+    assert(restarted === clean)
+  }
+
+  test("left-outer coincidence join: a crash between the offsets WAL and the commit log restarts exactly once") {
+    // batch 1's events at 10:00 move batch 2's watermark (the min over
+    // both sides) to 09:50, so batch 2 evicts user 1's unmatched 09:00
+    // click and emits it null-padded in the batch that crashes
+    val dir = stageEvents(
+      Seq((1, "click", "09:00:00"), (2, "click", "09:00:00"),
+        (2, "purchase", "09:00:30")),
+      Seq((3, "click", "10:00:00"), (3, "purchase", "10:00:20")),
+      Seq((4, "click", "10:30:00"), (4, "purchase", "10:30:10")),
+      Seq((5, "click", "12:00:00")))
+    val batch2 = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val (clean, restarted) =
+      cleanAndRestarted(dir, eventSchema, clickPurchase("left_outer"), batch2)
+    assert(batch2.map(_.toString).exists(r =>
+      r.startsWith("[1,") && r.endsWith(",null,null]")), batch2)
+    assert(clean.filter(_.startsWith("[1,")).map(_.endsWith(",null,null]"))
+      === Seq(true), clean)
+    assert(clean.count(r => Seq("[2,", "[3,", "[4,").exists(r.startsWith))
+      === 3, clean)
     assert(restarted === clean)
   }
 
