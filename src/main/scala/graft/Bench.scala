@@ -8,10 +8,12 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s.{JArray, JBool, JDecimal, JDouble, JField, JInt, JNull,
   JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
+import java.nio.file.{Files, Path, Paths}
 
 /** Per-round benchmark: run every declared query at SPARK_GRAFT_SF_DIR and
   * print one JSON line. Each query is forced through the `noop` sink so the
@@ -30,8 +32,27 @@ object Bench {
     * regression of the benched surface. */
   val Controls: Set[String] = Set("q_join_theta_range")
 
-  /** State partitions of every stream probe; [[streamProbe]] has the
-    * sizing rule and the A/B that set it. */
+  /** State partitions of every stream probe, sized to the probe's state
+    * volume (VERDICT r13 §2). A streaming query's state partition count
+    * binds at checkpoint creation — it is a per-query PROVISION decision,
+    * exactly as on a real cluster — and the probes carry ~8 MB of state,
+    * for which the session's batch-oriented 32 partitions are a ~100x
+    * over-provision. The waste is a fixed per-partition-per-batch cost
+    * (task dispatch + the stream-stream join's 4 state stores' commit +
+    * maintenance, measured ~130 ms/partition/batch at r13), so it scales
+    * with partitions, not with data. Most of that commit cost was
+    * Hadoop's local filesystem forking a `chmod` per file create and a
+    * `readlink` per rename check (no libhadoop); the `file:` FileContext
+    * is now [[graft.stream.LocalCheckpointFs]], which forks neither.
+    * Re-timed at 8 partitions on 4 cores, sf0.1, with the forks ->
+    * without: elapsed 5.52/5.46 -> 2.97/2.62 s, warm batch 1.60/1.64 ->
+    * 0.90/0.87 s, summed state commit per batch ~2.4-2.9 s -> 0.13-0.27 s.
+    * The r13 A/B on the two join probes (elapsed, 2 data batches +
+    * finalize): 32 parts 13.5/11.8 s; RocksDB at 32 parts 11.4/11.1 s
+    * (the store engine is not the lever); 8 parts 4.1/3.8 s — batches
+    * 4.3 -> 1.2 s, finalize 4.1 -> 0.9 s. At 100 TB the same sizing rule
+    * provisions MORE partitions (state grows with the workload); what it
+    * never does is pay 32 partitions' fixed costs to host 8 MB. */
   private[graft] val StreamParts = 8
 
   private[graft] val StateStoreProvider =
@@ -97,7 +118,7 @@ object Bench {
     def finalizeSecs: Double = trigger(_ == 0).sum
 
     /** Headline accounting for the multi-batch stream probes (VERDICT r9
-      * §4/§6, r11; see [[streamProbe]]): the headline counts only the warm
+      * §4/§6, r11; see [[stream]]): the headline counts only the warm
       * MARGINAL batch, the number a real state-store regression moves. The
       * rest of the elapsed is `stream_finalize` ([[finalizeSecs]]) and
       * `stream_setup` (the fixed remainder: query start/stop, planning,
@@ -300,23 +321,139 @@ object Bench {
       (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
   }
 
-  /** One declared query through the `noop` sink: the fastest of `passes`
-    * passes and that pass's counters. The MIN is noise immunity (round 2's
-    * single samples carried 9-48x phantom slowdowns on untouched plans):
-    * later passes are warm, and a host spike must hit every pass. */
-  private[graft] def runEntry(spark: SparkSession, sfDir: String,
-      meter: Meter, passes: Int,
-      fn: (SparkSession, String) => DataFrame): (Double, Counters) = {
-    val (secs, _, counters) = (1 to passes).map(_ => meter.pass(
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
-      .minBy(_._1)
-    (secs, counters)
+  /** One bench entry: its name, the events batches a stream probe stages
+    * per pass (0 for a declared query), the session confs it runs under
+    * and its timed body, which gets the pass's staged input (None for a
+    * declared query) and returns a stream probe's micro-batch progress
+    * (Nil for a declared query). The sweep and the outlier retest run
+    * every entry through [[measure]]. */
+  private[graft] final case class Probe(name: String, batches: Int,
+      confs: Map[String, String],
+      body: (SparkSession, String, Option[Staged]) => Seq[StreamingQueryProgress])
+
+  /** A stream probe's input for one pass, staged outside the timed region
+    * by [[stage]]: the events table as one parquet file per batch under
+    * `dir`, the schema those files carry and a fresh checkpoint. */
+  private[graft] final case class Staged(dir: Path, schema: StructType,
+      ckpt: Path)
+
+  /** Time one entry: the fastest of `passes` passes through [[Meter.pass]]
+    * and that pass's counters, as an [[Entry]]. The MIN is noise immunity
+    * (round 2's single samples carried 9-48x phantom slowdowns on
+    * untouched plans): later passes are warm, and a host spike must hit
+    * every pass. A stream probe stages its own input and a fresh
+    * checkpoint for every pass, so each pass is a cold-state run.
+    *
+    * Before the passes, caches are cleared and the driver collects
+    * garbage. Cache isolation: without it, frames persisted by earlier
+    * entries accumulate for the whole run and poison later ones —
+    * measured 2026-08-14: q_mm_features read 0.98 s freshly-evicted vs
+    * 6.3-28.4 s when run after q_mm_dedup's persist, and the stream probes
+    * (which run last, behind ~150 queries of leftovers) halved under
+    * eviction (q_stream_sessions_tws 16.6 s -> 7.6 s in the same-host
+    * A/B). Index memoizations (IVF cells) are rebuilt per entry but still
+    * amortize across the passes. Driver GC (r13): Spark's ContextCleaner
+    * reclaims shuffle files, broadcasts and checkpoint blocks only when
+    * the driver GC collects their references, and a long sweep can run
+    * for minutes without an old-gen collection, so dead shuffle data
+    * accumulates on the temp disk; the GC trims that backlog (~5% on the
+    * spill-heaviest sf3 entry: 71.5 -> 67.6 s after a 19-query prefix).
+    * It does NOT remove the larger position-in-sweep tax on spill-heavy
+    * queries — page-cache aging (q_text_winnow_pairs: 50.3 s isolated vs
+    * 93.7 s at sweep tail); BASELINE.md r13 has the attribution and the
+    * measured dead ends (64 GiB heap, pre-repartitioning).
+    *
+    * The probe's confs hold for its passes only and are restored after,
+    * so entries run in any order and leak no conf into each other. A
+    * failed entry must not masquerade as a fast one: it reports -1 s and
+    * no counters, lands in `failures`, and contributes nothing to the
+    * headline. */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      meter: Meter, probe: Probe, passes: Int): Entry = {
+    val prior = probe.confs.keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      Graft.clearCaches(spark)
+      System.gc()
+      probe.confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val (secs, progress, counters) = (1 to passes).map { _ =>
+        val in =
+          if (probe.batches > 0) Some(stage(spark, sfDir, probe.batches))
+          else None
+        try meter.pass(probe.body(spark, sfDir, in))
+        finally in.foreach(s => Seq(s.dir, s.ckpt).foreach(deleteTree))
+      }.minBy(_._1)
+      Entry(probe.name, secs, Some(counters), probe.batches, progress)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] ${probe.name} failed: ${e.getMessage}")
+      Entry(probe.name, -1.0, None, probe.batches)
+    } finally prior.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
+  /** Delete `root` and everything under it, bottom-up. */
+  private def deleteTree(root: Path): Unit = {
+    val wk = Files.walk(root)
+    try wk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally wk.close()
+  }
+
+  /** Stage the events table for one pass of a `batches`-batch stream
+    * probe. The file stream source wants a directory: one batch copies
+    * the table in; more split it at time-ordered quantiles into one file
+    * per batch. ntile over the raw ts column is encoding-agnostic
+    * (nanos-as-long and either timestamp flavor all sort correctly), and
+    * the files keep the raw schema, so the loader's normalization sees
+    * exactly what the driver's file would show. Batch 2's rows are NEWER
+    * than batch 1's watermark, so they do real state work instead of
+    * arriving late. */
+  private def stage(spark: SparkSession, sfDir: String, batches: Int): Staged = {
+    val path = s"$sfDir/events.parquet"
+    val raw = spark.read.parquet(path)
+    val dir = Files.createTempDirectory("graft_bench_stream")
+    val ckpt = Files.createTempDirectory("graft_bench_ckpt")
+    if (batches <= 1) Files.copy(Paths.get(path), dir.resolve("events.parquet"))
+    else {
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("ts"), col("event_id"))
+      val halves = raw.withColumn("graft_half", ntile(batches).over(w))
+      (1 to batches).foreach { h =>
+        val sub = Files.createTempDirectory("graft_bench_half")
+        halves.filter(col("graft_half") === h).drop("graft_half")
+          .coalesce(1).write.mode("overwrite").parquet(sub.toString)
+        // java.nio directory streams hold an fd until closed (ADVICE r9:
+        // the bench leaked one per staged half) — always close them
+        val ls = Files.list(sub)
+        val part = try ls.toArray.map(_.toString)
+          .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
+          .head finally ls.close()
+        val dst = dir.resolve(s"$h.parquet")
+        Files.move(Paths.get(part), dst)
+        // the file source admits files oldest-mtime-first: pin the order
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis() - (batches - h) * 60000L))
+        deleteTree(sub)
+      }
+    }
+    Staged(dir, raw.schema, ckpt)
+  }
+
+  /** A declared query through the `noop` sink, so the full plan
+    * (projections included) executes. */
+  private def declared(name: String,
+      fn: (SparkSession, String) => DataFrame): Probe =
+    Probe(name, 0, Map.empty, (spark, sfDir, _) => {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Nil
+    })
+
   /** Streaming throughput probe: the events table replayed through a
-    * [[graft.stream.Pipelines]] transform as a bounded stream
-    * (Trigger.AvailableNow), so state-store / watermark regressions show
-    * up as time, not just as scalatest failures.
+    * [[graft.stream.Pipelines]] transform (which also gets `sfDir`) as a
+    * bounded stream (Trigger.AvailableNow), so state-store / watermark
+    * regressions show up as time, not just as scalatest failures. It runs
+    * on [[StreamParts]] state partitions, plus whatever `confs` adds.
     *
     * With `batches = 1` the whole table is one staged file = one
     * micro-batch. With `batches = 2` the table is time-split at the
@@ -334,93 +471,21 @@ object Bench {
     * the data to finalize the watermark (state eviction + outer-join
     * null-emits) costing another ~3.6 s of addBatch — real state-store
     * work, not setup. The genuinely fixed cost (query start/stop,
-    * planning, offset WAL) is ~1-2 s. So this probe now returns the
-    * finalization batch separately and "setup" means ONLY the fixed
-    * remainder ([[Entry]] splits the elapsed). Returns the elapsed
-    * seconds, every micro-batch's progress and the timed region's
-    * [[Meter]] counters.
-    * The state partition count and a transform's state-store provider
-    * are restored when the probe ends, so probes run in any order and
-    * leak no conf into batch work. */
-  private[graft] def streamProbe(spark: SparkSession, sfDir: String,
-      mode: String,
-      transform: DataFrame => DataFrame, meter: Meter,
-      batches: Int = 1): (Double, Seq[StreamingQueryProgress], Counters) = {
-    val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path)
-    val rawSchema = raw.schema
-    // the file stream source wants a directory; stage the table into one
-    // (untimed — setup, not stream work)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt")
-    if (batches <= 1) {
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(path), dir.resolve("events.parquet"))
-    } else {
-      // time-ordered halves (ntile over the raw ts column is encoding-
-      // agnostic: nanos-as-long and either timestamp flavor all sort
-      // correctly), written with the raw schema so the loader's
-      // normalization sees exactly what the driver's file would show.
-      // Batch 2's rows are NEWER than batch 1's watermark, so they do
-      // real state work instead of arriving late.
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))
-      val halves = raw.withColumn("graft_half", ntile(batches).over(w))
-      (1 to batches).foreach { h =>
-        val sub = java.nio.file.Files.createTempDirectory("graft_bench_half")
-        halves.filter(col("graft_half") === h).drop("graft_half")
-          .coalesce(1).write.mode("overwrite").parquet(sub.toString)
-        // java.nio directory streams hold an fd until closed (ADVICE r9:
-        // the bench leaked one per staged half) — always close them
-        val ls = java.nio.file.Files.list(sub)
-        val part = try ls.toArray.map(_.toString)
-          .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
-          .head finally ls.close()
-        val dst = dir.resolve(s"$h.parquet")
-        java.nio.file.Files.move(java.nio.file.Paths.get(part), dst)
-        // the file source admits files oldest-mtime-first: pin the order
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - (batches - h) * 60000L))
-        val wk = java.nio.file.Files.walk(sub)
-        try wk
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally wk.close()
-      }
-    }
-    // State partitioning sized to the probe's state volume (VERDICT r13
-    // §2). A streaming query's state partition count binds at checkpoint
-    // creation — it is a per-query PROVISION decision, exactly as on a
-    // real cluster — and the probes carry ~8 MB of state, for which the
-    // session's batch-oriented 32 partitions are a ~100x over-provision.
-    // The waste is a fixed per-partition-per-batch cost (task dispatch +
-    // the stream-stream join's 4 state stores' commit + maintenance,
-    // measured ~130 ms/partition/batch at r13), so it scales with
-    // partitions, not with data. Most of that commit cost was Hadoop's
-    // local filesystem forking a `chmod` per file create and a
-    // `readlink` per rename check (no libhadoop); the `file:`
-    // FileContext is now [[graft.stream.LocalCheckpointFs]], which forks
-    // neither. Re-timed at 8 partitions on 4 cores, sf0.1, with the
-    // forks -> without: elapsed 5.52/5.46 -> 2.97/2.62 s, warm batch
-    // 1.60/1.64 -> 0.90/0.87 s, summed state commit per batch
-    // ~2.4-2.9 s -> 0.13-0.27 s. The r13 A/B on the two join probes
-    // (elapsed, 2 data batches + finalize): 32 parts 13.5/11.8 s;
-    // RocksDB at 32 parts 11.4/11.1 s (the store engine is not the
-    // lever); 8 parts 4.1/3.8 s — batches 4.3 -> 1.2 s, finalize
-    // 4.1 -> 0.9 s. At 100 TB the same sizing rule provisions MORE
-    // partitions (state grows with the workload); what it never does is
-    // pay 32 partitions' fixed costs to host 8 MB.
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val priorProvider = spark.conf.get(StateStoreProvider)
-    spark.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
-    try {
-      val (total, q, counters) = meter.pass {
-        val reader = spark.readStream.schema(rawSchema)
+    * planning, offset WAL) is ~1-2 s. So the finalization batch is
+    * reported separately and "setup" means ONLY the fixed remainder
+    * ([[Entry]] splits the elapsed, from the progress this returns). */
+  private def stream(name: String, mode: String, batches: Int,
+      confs: Map[String, String] = Map.empty)(
+      transform: (DataFrame, String) => DataFrame): Probe =
+    Probe(name, batches,
+      confs + ("spark.sql.shuffle.partitions" -> StreamParts.toString),
+      (spark, sfDir, in) => {
+        val Staged(dir, schema, ckpt) = in.get
+        val reader = spark.readStream.schema(schema)
         val src =
           if (batches <= 1) reader.parquet(dir.toString)
           else reader.option("maxFilesPerTrigger", "1").parquet(dir.toString)
-        val q = transform(Tables.normalizeEventTs(src))
+        val q = transform(Tables.normalizeEventTs(src), sfDir)
           .writeStream
           .format("noop")
           .outputMode(mode)
@@ -428,91 +493,79 @@ object Bench {
           .option("checkpointLocation", ckpt.toString)
           .start()
         q.awaitTermination()
-        q
-      }
-      (total, q.recentProgress.toSeq, counters)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", priorParts)
-      spark.conf.set(StateStoreProvider, priorProvider)
-      // a staged table copy + checkpoint per probe per run adds up fast
-      // in /tmp — delete both (bottom-up) once the probe is done
-      Seq(dir, ckpt).foreach { root =>
-        val wk = java.nio.file.Files.walk(root)
-        try wk
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally wk.close()
-      }
-    }
-  }
+        q.recentProgress.toSeq
+      })
 
-  /** The stream probes, each (name, output mode, staged batches,
-    * transform) over the events stream; `sfDir` feeds the enrichment
-    * probe's batch side. */
-  private[graft] def streamDefs(sfDir: String): Seq[(String, String, Int,
-      DataFrame => DataFrame)] = Seq(
-    ("q_stream_tumbling", "append", 1,
-      df => graft.stream.Pipelines.tumblingCounts(df)),
-    // the SAME windowed aggregation through update output mode — the
-    // dashboard-facing sink path where changed aggregates re-emit per
-    // micro-batch instead of waiting for watermark finalization; a
-    // distinct sink/state interaction the append probes never touch
-    ("q_stream_tumbling_update", "update", 1,
-      df => graft.stream.Pipelines.tumblingCounts(df)),
-    // session_window exercises the merging-state path — the heavier
-    // state-store shape tumbling windows never touch
-    ("q_stream_sessions", "append", 1,
-      df => graft.stream.Pipelines.sessionCounts(df)),
-    // dropDuplicatesWithinWatermark exercises the state-store dedup
-    // path — the streaming twin of q_dedup_exact
-    ("q_stream_dedup", "append", 1,
-      df => graft.stream.Pipelines.dedupKeyed(df, Seq("user_id", "ts"))),
-    // watermarked stream-stream time-range join — double the state
-    // stores plus the interval condition; the heaviest streaming shape
-    // the engine declares
-    ("q_stream_join", "append", 2, df => {
-      val base = df.select(col("user_id").as("key"), col("ts"),
-        col("event_type"))
-      graft.stream.Pipelines.coincidence(
-        base.filter(col("event_type") === "click"),
-        base.filter(col("event_type") === "purchase"),
-        toleranceSec = 60, watermark = "1 hour")
-    }),
-    // LEFT-OUTER stream-stream join — the unmatched-detection shape:
-    // clicks with no purchase in tolerance are emitted null-padded at
-    // state eviction, a different state-store path from the inner
-    // join's match-time output
-    ("q_stream_join_outer", "append", 2, df => {
-      val base = df.select(col("user_id").as("key"), col("ts"),
-        col("event_type"))
-      graft.stream.Pipelines.coincidence(
-        base.filter(col("event_type") === "click"),
-        base.filter(col("event_type") === "purchase"),
-        toleranceSec = 60, watermark = "1 hour",
-        joinType = "left_outer")
-    }),
-    // stream-static broadcast enrichment — the stateless shape (no
-    // watermark, no state store); the dim side is a batch aggregate
-    // of the same table, broadcast into every micro-batch
-    ("q_stream_enrich", "append", 1, df => {
-      val dim = Tables.events(df.sparkSession, sfDir)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"))
-      graft.stream.Pipelines.enrichStatic(
-        df.select("event_id", "user_id", "event_type", "value"),
-        dim, "user_id")
-    }),
-    // transformWithState sessionization on the RocksDB store — the
-    // Spark 4 state-API path; streamProbe restores the provider after
-    ("q_stream_sessions_tws", "append", 1, df => {
-      val s = df.sparkSession
-      s.conf.set(StateStoreProvider,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s.implicits._
-      graft.stream.Pipelines.sessionsWithState(
-        df.select(col("user_id"), col("ts"))
-          .as[graft.stream.Pipelines.SessionInput]).toDF()
-    }))
+  /** Every timed bench entry, in run and artifact order: the declared
+    * queries by name, then the stream probes. The two stream-stream join
+    * probes run TWO-batch (time-split input) so the bench can report the
+    * marginal per-batch cost beside the total; only the warm second batch
+    * moves when the state store itself regresses (VERDICT r8 §6). */
+  private[graft] def probes: Seq[Probe] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+      declared(n, fn) } ++ Seq(
+      stream("q_stream_tumbling", "append", 1)((df, _) =>
+        graft.stream.Pipelines.tumblingCounts(df)),
+      // the SAME windowed aggregation through update output mode — the
+      // dashboard-facing sink path where changed aggregates re-emit per
+      // micro-batch instead of waiting for watermark finalization; a
+      // distinct sink/state interaction the append probes never touch
+      stream("q_stream_tumbling_update", "update", 1)((df, _) =>
+        graft.stream.Pipelines.tumblingCounts(df)),
+      // session_window exercises the merging-state path — the heavier
+      // state-store shape tumbling windows never touch
+      stream("q_stream_sessions", "append", 1)((df, _) =>
+        graft.stream.Pipelines.sessionCounts(df)),
+      // dropDuplicatesWithinWatermark exercises the state-store dedup
+      // path — the streaming twin of q_dedup_exact
+      stream("q_stream_dedup", "append", 1)((df, _) =>
+        graft.stream.Pipelines.dedupKeyed(df, Seq("user_id", "ts"))),
+      // watermarked stream-stream time-range join — double the state
+      // stores plus the interval condition; the heaviest streaming shape
+      // the engine declares
+      stream("q_stream_join", "append", 2)((df, _) => {
+        val base = df.select(col("user_id").as("key"), col("ts"),
+          col("event_type"))
+        graft.stream.Pipelines.coincidence(
+          base.filter(col("event_type") === "click"),
+          base.filter(col("event_type") === "purchase"),
+          toleranceSec = 60, watermark = "1 hour")
+      }),
+      // LEFT-OUTER stream-stream join — the unmatched-detection shape:
+      // clicks with no purchase in tolerance are emitted null-padded at
+      // state eviction, a different state-store path from the inner
+      // join's match-time output
+      stream("q_stream_join_outer", "append", 2)((df, _) => {
+        val base = df.select(col("user_id").as("key"), col("ts"),
+          col("event_type"))
+        graft.stream.Pipelines.coincidence(
+          base.filter(col("event_type") === "click"),
+          base.filter(col("event_type") === "purchase"),
+          toleranceSec = 60, watermark = "1 hour",
+          joinType = "left_outer")
+      }),
+      // stream-static broadcast enrichment — the stateless shape (no
+      // watermark, no state store); the dim side is a batch aggregate
+      // of the same table, broadcast into every micro-batch
+      stream("q_stream_enrich", "append", 1)((df, sfDir) => {
+        val dim = Tables.events(df.sparkSession, sfDir)
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_events"))
+        graft.stream.Pipelines.enrichStatic(
+          df.select("event_id", "user_id", "event_type", "value"),
+          dim, "user_id")
+      }),
+      // transformWithState sessionization on the RocksDB store — the
+      // Spark 4 state-API path
+      stream("q_stream_sessions_tws", "append", 1, Map(StateStoreProvider ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(
+        (df, _) => {
+          val s = df.sparkSession
+          import s.implicits._
+          graft.stream.Pipelines.sessionsWithState(
+            df.select(col("user_id"), col("ts"))
+              .as[graft.stream.Pipelines.SessionInput]).toDF()
+        }))
 
   /** (busy, total) jiffies from the aggregate `cpu` line of /proc/stat.
     * busy = user+nice+system ONLY — the same accounting basis as a
@@ -581,17 +634,20 @@ object Bench {
     prior > 0 && v > 2.5 * prior && v - prior > 1.0
 
   /** The per-query seconds map of a committed bench-artifact line, for
-    * the outlier comparison. sf guard: the baseline is only a valid
-    * comparator for a run at the SAME scale factor — an sf1 run judged
-    * against sf0.1 times would flag every ~3x-scaling entry as a phantom
-    * outlier — so a mismatched or missing "sf", a missing "queries" map,
-    * or malformed or truncated input yields the empty map (= no outlier
-    * flags), the fail-safe direction; a non-numeric entry is skipped. */
+    * the outlier comparison. Scale guard: the baseline is only a valid
+    * comparator for a run at the SAME scale factor on the SAME core count
+    * — an sf1 run judged against sf0.1 times would flag every ~3x-scaling
+    * entry as a phantom outlier, and a 4-core run judged against a
+    * 32-core close compares two machines — so a mismatched or missing
+    * "sf" or "shuffle_partitions" (the close's cpus), a missing "queries"
+    * map, or malformed or truncated input yields the empty map (= no
+    * outlier flags), the fail-safe direction; a non-numeric entry is
+    * skipped. */
   private[graft] def parseBaselineQueries(
-      s: String, sfDir: String): Map[String, Double] =
+      s: String, sfDir: String, cpus: Int): Map[String, Double] =
     JsonMethods.parseOpt(s).toList.flatMap { j =>
-      (j \ "sf", j \ "queries") match {
-        case (JString(`sfDir`), JObject(qs)) => qs.collect {
+      (j \ "sf", j \ "shuffle_partitions", j \ "queries") match {
+        case (JString(`sfDir`), JInt(n), JObject(qs)) if n == cpus => qs.collect {
           case (k, JDouble(v)) => k -> v
           case (k, JInt(v)) => k -> v.toDouble
         }
@@ -644,8 +700,7 @@ object Bench {
       env: Map[String, String] = sys.env): Option[Set[String]] =
     env.get("SPARK_GRAFT_ONLY").map { v =>
       val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val known = SparkEntry.queries.keySet ++
-        streamDefs("").map(_._1) + "ivf_lloyd"
+      val known = probes.map(_.name).toSet + "ivf_lloyd"
       val unknown = (names -- known).toSeq.sorted
       require(names.nonEmpty, "SPARK_GRAFT_ONLY names no entry")
       require(unknown.isEmpty,
@@ -761,8 +816,8 @@ object Bench {
     }
   }
 
-  /** One full sweep: settle, run every declared query + streaming
-    * probe, emit and persist the artifact. Returns the close_quality
+  /** One full sweep: settle, measure every [[probes]] entry, emit and
+    * persist the artifact. Returns the close_quality
     * grade so [[main]] can decide on the single bounded retry. */
   private def runSweep(attempt: Int, cpus: Int, passes: Int,
       only: Option[Set[String]]): String = {
@@ -818,52 +873,8 @@ object Bench {
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // A failed query must not masquerade as a fast one: it reports -1 in
-    // `queries`, lands in `failures`, and contributes nothing to `value`.
-    // Per-query cache isolation:
-    // without it, frames persisted by earlier queries
-    // accumulate for the whole run and poison later entries — measured
-    // 2026-08-14: q_mm_features read 0.98 s freshly-evicted vs 6.3-28.4 s
-    // when run after q_mm_dedup's persist, and the stream probes (which
-    // run LAST, behind ~150 queries of leftovers) halved under eviction
-    // (q_stream_sessions_tws 16.6 s -> 7.6 s in the same-host A/B).
-    // This is the likely mechanism behind the single-entry in-run
-    // spikes BASELINE.md has documented all round. Index memoizations
-    // (IVF cells) are rebuilt per query but still amortize across the
-    // min-of-N passes inside one query.
-    val results: Seq[Entry] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        try {
-          graft.Graft.clearCaches(spark)
-          // Driver GC between queries (r13):
-          // Spark's ContextCleaner reclaims shuffle files,
-          // broadcasts, and checkpoint blocks only when the driver GC
-          // collects their references, and a long sweep can run for
-          // minutes without an old-gen collection, so dead shuffle data
-          // accumulates on the temp disk. The GC runs OUTSIDE the timed
-          // region and trims that backlog (~5% on the spill-heaviest
-          // sf3 entry: 71.5 -> 67.6 s after a 19-query prefix). It does
-          // NOT remove the larger position-in-sweep tax on spill-heavy
-          // queries — that is page-cache aging (25 GB/stage of
-          // sort-fallback spill IO absorbed by a fresh page cache but
-          // hitting contended storage late in a 182-query sweep;
-          // q_text_winnow_pairs: 50.3 s isolated vs 93.7 s at sweep
-          // tail). Measured dead ends, for the record: 64 GiB heap
-          // (spill gone, but giant in-memory agg maps thrash GC — 292 s
-          // of task GC, 274 s stage) and pre-repartitioning on the
-          // grouping key (single-phase agg, but the repartition shuffle
-          // sorter spills 50 GB of RAW pair rows — the partial agg it
-          // skipped was net protective). BASELINE.md r13 has the full
-          // attribution.
-          System.gc()
-          val (secs, counters) = runEntry(spark, sfDir, meter, passes, fn)
-          Entry(name, secs, Some(counters))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Entry(name, -1.0, None)
-        }
-      }
+    val entries = probes.filter(p => only.forall(_.contains(p.name)))
+      .map(measure(spark, sfDir, meter, _, passes))
     // Lloyd-refined IVF recall probe (VERDICT r9 §5): the production
     // index-BUILD step (iters >= 1 re-centering) is deliberately absent
     // from the declared surface — iters = 0 is what makes the IVF family
@@ -876,7 +887,8 @@ object Bench {
     // Honors the SPARK_GRAFT_ONLY filter like every other probe (ADVICE
     // r10): single-query iteration runs must not pay the brute-force
     // truth set + two IVF index builds. Name it "ivf_lloyd" in the
-    // filter to run it alone.
+    // filter to run it alone. It runs after the timed entries; the
+    // retest clears the index frames it leaves, like every measured run.
     val ivfLloyd: JValue =
       if (only.exists(!_.contains("ivf_lloyd"))) JNull
       else try {
@@ -921,31 +933,6 @@ object Bench {
         System.err.println(s"[bench] ivf_lloyd probe failed: ${e.getMessage}")
         JNull
       }
-    // the probe built two IVF indexes (persisted cells frames) — evict
-    // them so the streaming probes start from the same cache state the
-    // per-query eviction discipline guarantees everywhere else
-    graft.Graft.clearCaches(spark)
-    // The two stream-stream join probes run TWO-batch (time-split input)
-    // so the bench can report the marginal per-batch cost beside the
-    // total; only the warm second batch moves when the state store
-    // itself regresses (VERDICT r8 §6). Each probe's entry keeps the min
-    // pass's progress and counters.
-    val streaming: Seq[Entry] =
-      streamDefs(sfDir).filter { case (n, _, _, _) => only.forall(_.contains(n)) }
-        .map { case (n, mode, nb, tf) =>
-          // each streamProbe call stages its own table copy + fresh
-          // checkpoint, so min-of-N is a genuine cold-state re-run
-          try {
-            val (t, progress, counters) = (1 to passes)
-              .map(_ => streamProbe(spark, sfDir, mode, tf, meter, nb))
-              .minBy(_._1)
-            Entry(n, t, Some(counters), nb, progress)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $n failed: ${e.getMessage}")
-            Entry(n, -1.0, None, nb)
-          }
-        }
-    val entries = results ++ streaming
     // Per-query outlier flag (VERDICT r9 §3): round 9's committed artifact
     // carried a 5.4x phantom on an untouched query — documented GC/codegen
     // variance landing inside a "certified" number, exactly the kind of
@@ -956,8 +943,8 @@ object Bench {
     val priorQueries: Map[String, Double] = {
       val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE",
         "BENCH_BASELINE.json")
-      try parseBaselineQueries(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8"), sfDir)
+      try parseBaselineQueries(
+        new String(Files.readAllBytes(Paths.get(path)), "UTF-8"), sfDir, cpus)
       catch { case _: Throwable => Map.empty }
     }
     // The 2.5x ratio alone flags sub-second queries on any scheduler
@@ -970,28 +957,15 @@ object Bench {
         if e.ok && !Controls(e.name) && priorQueries.get(e.name)
           .exists(p => isOutlier(e.secs, p)) => e.name }
     // Outlier-retest pass (VERDICT r12 §5): each flagged entry gets ONE
-    // extra isolated timing after the sweep, so the artifact itself says
+    // extra isolated timing after the sweep (one pass of the same
+    // [[measure]] that flagged it), so the artifact itself says
     // whether a flag was a real slowdown (confirmed) or roving host noise
     // that normalized (transient) — round 12's 17-flag artifact would
     // have read "17 transient" instead of sending the judge on a
     // re-measurement expedition. Cost: zero when nothing is flagged.
     val retimes: Map[String, Double] =
-      flagged.map { k =>
-        k -> (try {
-          graft.Graft.clearCaches(spark)
-          SparkEntry.queries.get(k) match {
-            case Some(fn) => runEntry(spark, sfDir, meter, 1, fn)._1
-            case None => streamDefs(sfDir).find(_._1 == k) match {
-              case Some((_, mode, nb, tf)) =>
-                streamProbe(spark, sfDir, mode, tf, meter, nb)._1
-              case None => -1.0
-            }
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] retest $k failed: ${e.getMessage}")
-          -1.0
-        })
-      }.toMap
+      probes.filter(p => flagged.contains(p.name))
+        .map(p => p.name -> measure(spark, sfDir, meter, p, 1).secs).toMap
     val (outConfirmed, outTransient) =
       classifyOutliers(flagged, priorQueries, retimes)
     // Certification gate: totals are only comparable from a quiet host
@@ -1036,9 +1010,9 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "localdata/BENCH_LAST.json")
     try {
-      val p = java.nio.file.Paths.get(outPath)
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (json + "\n").getBytes("UTF-8"))
+      val p = Paths.get(outPath)
+      if (p.getParent != null) Files.createDirectories(p.getParent)
+      Files.write(p, (json + "\n").getBytes("UTF-8"))
     }
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist $outPath: ${e.getMessage}")

@@ -209,8 +209,9 @@ object Tables {
     *
     *  - LongType: the file carries TIMESTAMP(NANOS), which Spark 4
     *    rejects by default (PARQUET_TYPE_ILLEGAL) and we read under
-    *    `nanosAsLong` as raw nanoseconds. Truncate to µs in integer
-    *    space (`div` — a double division loses precision above 2^53 ns),
+    *    `nanosAsLong` ([[GraftConf.engineConf]]) as raw nanoseconds.
+    *    Truncate to µs in integer space (`div` — a double division loses
+    *    precision above 2^53 ns),
     *    exactly what DuckDB's µs-native TIMESTAMP does on the same file.
     *  - TimestampNTZType: the file carries TIMESTAMP_MICROS with
     *    isAdjustedToUTC=false. Cast to TimestampType: every session here
@@ -232,13 +233,6 @@ object Tables {
     }
   }
 
-  private def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    // Harmless when ts is already µs; lets a TIMESTAMP(NANOS) fixture
-    // load (as LongType) instead of failing the scan outright.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(t(s, d, "events"))
-  }
-
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame  = t(s, d, "customer")
@@ -246,7 +240,8 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = t(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
-  def events(s: SparkSession, d: String): DataFrame    = eventsRaw(s, d)
+  def events(s: SparkSession, d: String): DataFrame    =
+    normalizeEventTs(t(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame =
     spread(s, t(s, d, "documents"), s"$d/documents.parquet")
   def embeddings(s: SparkSession, d: String): DataFrame =

@@ -436,18 +436,34 @@ object Corpus {
         (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
   }
 
+  /** The split key of a document: the first hex byte of md5(doc_id). */
+  private[ops] def splitHash(docId: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    substring(md5(docId.cast("string").cast("binary")), 1, 2)
+
+  /** The train/val/test split law (~80/10/10): the split key `h`
+    * ([[splitHash]]) partitions [00,cc)/[cc,e6)/[e6,ff] into
+    * train/val/test. [[splitSql]] is the same law in DuckDB. */
+  private[ops] def splitOf(h: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    when(h < "cc", "train").when(h < "e6", "val").otherwise("test")
+
+  /** [[splitOf]] over [[splitHash]] of `doc_id`, as a DuckDB expression. */
+  private[ops] val splitSql =
+    """CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
+              THEN 'train'
+            WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
+              THEN 'val'
+            ELSE 'test' END"""
+
   /** The md5-range split frame both contamination queries scan: the
-    * same hash ranges as [[Curation.qSampleSplit]] — the split this
-    * check exists to protect. */
+    * split [[Curation.qSampleSplit]] reports — the split this check
+    * exists to protect. */
   private[ops] def splitDocs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     T.documents(s, d)
-      .select(col("doc_id"), col("text"),
-        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2)
-          .as("h"))
-      .withColumn("split",
-        when(col("h") < "cc", "train")
-          .when(col("h") < "e6", "val").otherwise("test"))
+      .select(col("doc_id"), col("text"), splitHash(col("doc_id")).as("h"))
+      .withColumn("split", splitOf(col("h")))
 
   private def contaminationQuery(
       scan: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -463,12 +479,8 @@ object Corpus {
   /** One oracle serves both scan variants — the bloom prune is exact by
     * construction, and sharing the SQL string is how the gate proves it. */
   private val contamOracle =
-    Some(s"""WITH sp AS (SELECT doc_id, text,
-               CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-                      THEN 'train'
-                    WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-                      THEN 'val'
-                    ELSE 'test' END AS split FROM documents),
+    Some(s"""WITH sp AS (SELECT doc_id, text, $splitSql AS split
+                         FROM documents),
              toks AS (SELECT doc_id, split, string_split(text, ' ') AS tk
                       FROM sp),
              sh AS (SELECT DISTINCT doc_id, split, unnest(list_transform(
@@ -573,12 +585,8 @@ object Corpus {
         "doc_id", "text")
         .orderBy("doc_id")
     },
-    Some(s"""WITH sp AS (SELECT doc_id, text,
-               CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-                      THEN 'train'
-                    WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-                      THEN 'val'
-                    ELSE 'test' END AS split FROM documents),
+    Some(s"""WITH sp AS (SELECT doc_id, text, $splitSql AS split
+                         FROM documents),
              ${Dedup.shingleSqlCte("sp", "split")},
              ${Dedup.minhashSqlCte("sh", "split")},
              tb AS (SELECT doc_id, band_no, band FROM bands_all

@@ -168,32 +168,22 @@ object Curation {
            ORDER BY doc_id"""))
 
   /** Deterministic train/val/test split (~80/10/10) by md5(doc_id)
-    * range: the first hex byte partitions [00,cc)/[cc,e6)/[e6,ff] into
-    * train/val/test. Same properties as [[qSampleHash]] — stable across
-    * runs, engines, partitionings; no RNG; evaluable inside the scan —
+    * range, the law in [[Corpus.splitOf]]. Same properties as
+    * [[qSampleHash]] — stable across runs, engines, partitionings; no
+    * RNG; evaluable inside the scan —
     * and the split of a document never changes as the corpus grows,
     * which is what prevents test-set leakage across dataset versions.
     * Output: per (source, split) counts, the report a split job emits. */
   val qSampleSplit = Q(
     "q_sample_split",
-    (s, d) => {
-      val h = substring(
-        md5(col("doc_id").cast("string").cast("binary")), 1, 2)
+    (s, d) =>
       T.documents(s, d)
-        .withColumn("split",
-          when(h < "cc", "train").when(h < "e6", "val").otherwise("test"))
+        .withColumn("split", Corpus.splitOf(Corpus.splitHash(col("doc_id"))))
         .groupBy("source", "split")
         .agg(count(lit(1)).as("n_docs"))
-        .orderBy("source", "split")
-    },
-    Some("""SELECT source, split, count(*) AS n_docs FROM (
-             SELECT source,
-                    CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-                           THEN 'train'
-                         WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-                           THEN 'val'
-                         ELSE 'test' END AS split
-             FROM documents)
+        .orderBy("source", "split"),
+    Some(s"""SELECT source, split, count(*) AS n_docs FROM (
+             SELECT source, ${Corpus.splitSql} AS split FROM documents)
            GROUP BY source, split ORDER BY source, split"""))
 
   /** Sketch-backed heavy hitters: the same top-10-per-source report as
@@ -785,12 +775,8 @@ object Curation {
           r2(col("bits_sum").cast("double") / col("n_tok")).as("mean_bits"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH sp AS (SELECT doc_id, text,
-               CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
-                      THEN 'train'
-                    WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
-                      THEN 'val'
-                    ELSE 'test' END AS split FROM documents),
+    Some(s"""WITH sp AS (SELECT doc_id, text, ${Corpus.splitSql} AS split
+                         FROM documents),
              tkc AS (SELECT doc_id, split, string_split(text, ' ') AS tk
                      FROM sp),
              toks AS (SELECT doc_id, split, unnest(tk) AS tok,

@@ -31,7 +31,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * checkpointable offsets (row index into the capture) — restart resumes
   * exactly where the last commit left off, the semantics the reference's
   * commit-before-process loop loses. Compared to the staging-directory
-  * file-stream replay (`Bench.streamProbe`), nothing is copied and the
+  * file-stream replay (`Bench.stream`), nothing is copied and the
   * batch pacing is controlled by admission control, not file boundaries.
   *
   * This is a REPLAY/TEST source by design: the capture (61 rows golden;

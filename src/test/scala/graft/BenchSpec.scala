@@ -10,46 +10,55 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchSpec extends AnyFunSuite {
 
   private val line =
-    """{"metric":"total","value":170.1,"unit":"sec","queries":{"q_a":0.5,"q_b":2.0,"q_c":0.25},"failures":[],"loadavg":0.5,"certified":true,"sf":"/data/sf0.1"}"""
+    """{"metric":"total","value":170.1,"unit":"sec","queries":{"q_a":0.5,"q_b":2.0,"q_c":0.25},"failures":[],"shuffle_partitions":4,"loadavg":0.5,"certified":true,"sf":"/data/sf0.1"}"""
 
   test("parses the queries map when the sf matches") {
-    val m = Bench.parseBaselineQueries(line, "/data/sf0.1")
+    val m = Bench.parseBaselineQueries(line, "/data/sf0.1", 4)
     assert(m === Map("q_a" -> 0.5, "q_b" -> 2.0, "q_c" -> 0.25))
   }
 
   test("sf mismatch yields the empty map (no phantom outliers at sf1)") {
-    assert(Bench.parseBaselineQueries(line, "/data/sf1") === Map.empty)
+    assert(Bench.parseBaselineQueries(line, "/data/sf1", 4) === Map.empty)
+  }
+
+  test("core-count mismatch or a missing core count yields the empty map") {
+    // a 32-core close is no comparator for a 4-core run, nor the reverse
+    assert(Bench.parseBaselineQueries(line, "/data/sf0.1", 32) === Map.empty)
+    assert(Bench.parseBaselineQueries(
+      line.replace("\"shuffle_partitions\":4,", ""), "/data/sf0.1", 4)
+      === Map.empty)
   }
 
   test("missing sf field or queries map yields the empty map") {
     assert(Bench.parseBaselineQueries(
-      line.replace("\"sf\":\"/data/sf0.1\"", "\"x\":1"), "/data/sf0.1")
+      line.replace("\"sf\":\"/data/sf0.1\"", "\"x\":1"), "/data/sf0.1", 4)
       === Map.empty)
     assert(Bench.parseBaselineQueries(
-      """{"metric":"total","sf":"/data/sf0.1"}""", "/data/sf0.1")
-      === Map.empty)
+      """{"metric":"total","shuffle_partitions":4,"sf":"/data/sf0.1"}""",
+      "/data/sf0.1", 4) === Map.empty)
   }
 
   test("truncated artifacts never throw (ADVICE r10: total function)") {
     // unterminated sf string — the closing quote never arrives
     assert(Bench.parseBaselineQueries(
-      """{"queries":{"q_a":0.5},"sf":"/data/sf0.1""", "/data/sf0.1")
+      """{"queries":{"q_a":0.5},"shuffle_partitions":4,"sf":"/data/sf0.1""",
+      "/data/sf0.1", 4)
       === Map.empty)
     // queries map opened but never closed
     assert(Bench.parseBaselineQueries(
-      """{"queries":{"q_a":0.5,"q_b":2.0""", "/data/sf0.1")
+      """{"queries":{"q_a":0.5,"q_b":2.0""", "/data/sf0.1", 4)
       === Map.empty)
     // both truncations at once
-    assert(Bench.parseBaselineQueries("""{"queries":{""", "d") === Map.empty)
+    assert(Bench.parseBaselineQueries("""{"queries":{""", "d", 4) === Map.empty)
   }
 
   test("garbage entries are skipped, numeric ones survive") {
     val noisy =
-      """{"queries":{"q_a":0.5,"q_bad":"oops","q_c":1.5},"sf":"d"}"""
-    assert(Bench.parseBaselineQueries(noisy, "d")
+      """{"queries":{"q_a":0.5,"q_bad":"oops","q_c":1.5},"shuffle_partitions":4,"sf":"d"}"""
+    assert(Bench.parseBaselineQueries(noisy, "d", 4)
       === Map("q_a" -> 0.5, "q_c" -> 1.5))
     // malformed JSON is no baseline at all
-    assert(Bench.parseBaselineQueries(noisy.replace("\"oops\"", "oops"), "d")
+    assert(Bench.parseBaselineQueries(noisy.replace("\"oops\"", "oops"), "d", 4)
       === Map.empty)
   }
 
@@ -229,7 +238,8 @@ class BenchSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(lag)
     val Seq(scan, agg) = try Seq("q_scan_project", "q_agg_group").map(q =>
-      Bench.runEntry(spark, SparkSpec.Sf0001, meter, 1, SparkEntry.queries(q))._2)
+      Bench.measure(spark, SparkSpec.Sf0001, meter,
+        Bench.probes.find(_.name == q).get, 1).counters.get)
     finally {
       spark.sparkContext.removeSparkListener(lag)
       meter.close()
@@ -245,6 +255,29 @@ class BenchSpec extends AnyFunSuite {
     }
     // no stage, so no task, is counted in both entries
     assert(scan.stages.keySet.intersect(agg.stages.keySet).isEmpty, (scan, agg))
+  }
+
+  test("a probe whose body throws is a failed entry and restores every conf it scoped") {
+    val spark = SparkSpec.spark
+    val parts = "spark.sql.shuffle.partitions"
+    // one key the session sets, one no session sets
+    val keys = Seq(parts, "graft.bench.scoped")
+    val before = keys.map(spark.conf.getOption)
+    assert(before.head.isDefined && before(1).isEmpty, before)
+    var during = Seq.empty[Option[String]]
+    val probe = Bench.Probe("q_throws", 0,
+      Map(parts -> "3", "graft.bench.scoped" -> "on"),
+      (s, _, _) => {
+        during = keys.map(s.conf.getOption)
+        throw new IllegalStateException("boom")
+      })
+    val meter = new Bench.Meter(spark)
+    val e = try Bench.measure(spark, SparkSpec.Sf0001, meter, probe, 2)
+      finally meter.close()
+    assert(during === Seq(Some("3"), Some("on")))
+    assert(e === Bench.Entry("q_throws", -1.0, None))
+    assert(!e.ok)
+    assert(keys.map(spark.conf.getOption) === before)
   }
 
   test("README's Environment list names exactly the SPARK_GRAFT_* knobs src/main reads") {
@@ -270,8 +303,8 @@ class BenchSpec extends AnyFunSuite {
     val p = java.nio.file.Paths.get("BENCH_BASELINE.json")
     assume(java.nio.file.Files.exists(p))
     val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    // the committed baseline always targets the driver's sf0.1 dir
-    val m = Bench.parseBaselineQueries(s, "/root/testdata/sf0.1")
+    // the committed baseline is a 32-core close of the driver's sf0.1 dir
+    val m = Bench.parseBaselineQueries(s, "/root/testdata/sf0.1", 32)
     assert(m.size > 100, s"baseline parse collapsed: ${m.size} entries")
     assert(m.values.forall(v => v > 0 && v < 600))
   }
@@ -289,8 +322,8 @@ class BenchSpec extends AnyFunSuite {
     val pairs = Map("q_dedup_editdist" -> 283L, "q_text_winnow_pairs" -> 248L)
     val batch = SparkEntry.queries.keys.toSeq.sorted.map(n => Bench.Entry(n,
       1.5, Some(counters.copy(pairs = pairs.filter(_._1 == n)))))
-    val stream = Bench.streamDefs("").map { case (n, _, nb, _) =>
-      Bench.Entry(n, 3.25, Some(counters), nb) }
+    val stream = Bench.probes.filter(_.batches > 0).map(p =>
+      Bench.Entry(p.name, 3.25, Some(counters), p.batches))
     // one failed entry, one confirmed and one transient outlier
     val entries = (batch ++ stream).updated(0, Bench.Entry(batch.head.name, -1.0, None))
     val close = Bench.Close(entries, flagged = Seq("q_agg_group", "q_join_inner"),

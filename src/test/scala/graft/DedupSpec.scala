@@ -486,7 +486,10 @@ class DedupSpec extends SparkSpec {
       "oracle cosine norm" -> "/(sqrt(list_inner_product(",
       "engine hot-key filter" -> ".filter(col(\"graft_df\")>",
       "oracle hot-key cap" -> "QUALIFYcount(*)OVER(",
-      "oracle hot-key set" -> "HAVINGcount(*)>$")
+      "oracle hot-key set" -> "HAVINGcount(*)>$",
+      // the train/val/test split the contamination scans protect
+      "engine split law" -> "<\"cc\"",
+      "oracle split law" -> "<'cc'")
     val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val sources = try main.iterator.asScala
       .filter(_.toString.endsWith(".scala"))

@@ -636,16 +636,14 @@ class StreamingSpec extends SparkSpec {
   test("the tws bench probe scopes its partitions and provider to itself") {
     val keys = Seq("spark.sql.shuffle.partitions", Bench.StateStoreProvider)
     val before = keys.map(spark.conf.get)
-    val (_, mode, _, tf) =
-      Bench.streamDefs(sf).find(_._1 == "q_stream_sessions_tws").get
+    val tws = Bench.probes.find(_.name == "q_stream_sessions_tws").get
     var during = Seq.empty[String]
     val meter = new Bench.Meter(spark)
-    val (elapsed, progress, counters) = try Bench.streamProbe(spark, sf,
-      mode, df => {
-        val out = tf(df)
+    val Bench.Entry(_, elapsed, Some(counters), _, progress) = try
+      Bench.measure(spark, sf, meter, tws.copy(body = (s, d, in) => {
         during = keys.map(spark.conf.get)
-        out
-      }, meter)
+        tws.body(s, d, in)
+      }), 1)
     finally meter.close()
     assert(elapsed > 0)
     // the counters cover the micro-batches' tasks
