@@ -4,22 +4,20 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.types._
 
-/** Typed domain layer (SURVEY.md §1).
-  *
-  * The reference's record schema is implicit — the producer sends whatever
-  * pandas inferred from CSV (reference `code/test/simulate_stream.py:7-8`)
-  * and the consumer `json.loads`es it unchecked (`code/dask_kafka/
-  * core.py:116`). Here the schema is explicit and enforced at the source
-  * boundary: `from_json(value, TdcHit.schema)` rejects drift instead of
-  * silently re-typing it.
-  */
-
 /** One TDC hit record — the reference's only concrete data shape
   * (reference `code/test/test_data.csv:1` header).
   *
   * ORBIT_CNT exceeds Int32 (observed ~2.25e9) and is the event-time
   * coarse clock; BX_COUNTER is the bunch crossing within the orbit
   * (0..3563, 25 ns each); TDC_MEAS is the fine time in 25/30 ns ticks.
+  *
+  * Typed domain layer (SURVEY.md §1): the reference's record schema is
+  * implicit — the producer sends whatever pandas inferred from CSV
+  * (reference `code/test/simulate_stream.py:7-8`) and the consumer
+  * `json.loads`es it unchecked (`code/dask_kafka/core.py:116`). Here the
+  * schema is explicit and enforced at the source boundary:
+  * `from_json(value, TdcHit.schema)` rejects drift instead of silently
+  * re-typing it.
   */
 final case class TdcHit(
     HEAD: Int,

@@ -355,21 +355,6 @@ object Analytics {
           ORDER BY a.event_type"""
     })
 
-  /** Interval×interval OVERLAP join — the two-sided generalization of
-    * [[qJoinIntervalBinned]] (point-in-interval): per-user daily activity
-    * spans [first event, last event] joined against a derived grid of
-    * 90-minute windows every 6 hours, keeping pairs that overlap
-    * (`a_start ≤ w_end AND w_start ≤ a_end`). The scale spelling is the
-    * standard bin expansion applied to BOTH sides: each interval
-    * explodes to the 6-hour bins it covers (≤ 5 for a daily span, ≤ 2
-    * for a window), the join is an equi-join on the bin, duplicates
-    * from multi-bin overlaps collapse with one distinct on the pair
-    * key, and the exact overlap predicate runs as a residual filter —
-    * per-task pair work is bounded by co-resident intervals per 6 h, and
-    * the plan has no nested loop regardless of either side's size. All
-    * arithmetic is epoch-millisecond integers, so the overlap verdict
-    * is dialect-exact; the oracle spells the same semantics as the
-    * direct theta join DuckDB can afford at gate scale. */
   /** Generic binned interval-overlap join core: rows of `left` and
     * `right` pair whenever `[lStart, lEnd]` overlaps `[rStart, rEnd]`
     * (inclusive ends, integer columns). Both sides explode to the
@@ -393,6 +378,21 @@ object Analytics {
       .drop("graft_bin").distinct()
   }
 
+  /** Interval×interval OVERLAP join — the two-sided generalization of
+    * [[qJoinIntervalBinned]] (point-in-interval): per-user daily activity
+    * spans [first event, last event] joined against a derived grid of
+    * 90-minute windows every 6 hours, keeping pairs that overlap
+    * (`a_start ≤ w_end AND w_start ≤ a_end`). The scale spelling is the
+    * standard bin expansion applied to BOTH sides: each interval
+    * explodes to the 6-hour bins it covers (≤ 5 for a daily span, ≤ 2
+    * for a window), the join is an equi-join on the bin, duplicates
+    * from multi-bin overlaps collapse with one distinct on the pair
+    * key, and the exact overlap predicate runs as a residual filter —
+    * per-task pair work is bounded by co-resident intervals per 6 h, and
+    * the plan has no nested loop regardless of either side's size. All
+    * arithmetic is epoch-millisecond integers, so the overlap verdict
+    * is dialect-exact; the oracle spells the same semantics as the
+    * direct theta join DuckDB can afford at gate scale. */
   val qJoinIntervalOverlap = Q(
     "q_join_interval_overlap",
     (s, d) => {

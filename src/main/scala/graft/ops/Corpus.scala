@@ -5,11 +5,6 @@ import graft.util.Det
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Corpus-assembly operators — the steps between a curated document set
-  * and a training run: sequence packing, train/test decontamination, and
-  * domain-mixture weighting. All three are mandate extensions (the
-  * reference has no query surface); each is DuckDB-oracled.
-  */
 /** Doc-stream row for the best-fit packer ([[Corpus.qPackBestfit]]). */
 private[ops] case class PackDoc(source: String, doc_id: Long, n_tok: Long)
 
@@ -18,6 +13,11 @@ private[ops] case class PackReport(source: String, n_docs: Long,
     n_tokens: Long, chunk_bins: Long, chunk_split_docs: Long,
     chunk_waste_ppm: Long, bestfit_bins: Long, bestfit_waste_ppm: Long)
 
+/** Corpus-assembly operators — the steps between a curated document set
+  * and a training run: sequence packing, train/test decontamination, and
+  * domain-mixture weighting. All three are mandate extensions (the
+  * reference has no query surface); each is DuckDB-oracled.
+  */
 object Corpus {
 
   /** Tokens-per-context-window budget for [[qPackSequences]]. Small so
@@ -191,40 +191,6 @@ object Corpus {
          FROM off GROUP BY source, bin ORDER BY source, bin"""
     })
 
-  /** Greedy BEST-FIT sequence packing beside concatenate-and-chunk — the
-    * policy comparison a real trainer runs before choosing a packer
-    * (best-fit cuts cross-document truncations at the cost of padding;
-    * cf. the "fewer truncations" line of work): per shard, docs are
-    * processed in `doc_id` order; each doc's tail (after pre-chunking
-    * `n_tok / budget` full windows) goes into the open bin with the
-    * SMALLEST remaining capacity that still fits, else opens a new bin.
-    * Both policies are accounted in ONE streaming pass over the same
-    * ordered shard: chunk gets bins/splits/waste from the running
-    * offset, best-fit from the fold. Output per shard: doc/token
-    * totals, bins used, boundary-split docs (chunk's cost), and padding
-    * waste in ppm (best-fit's cost) — all integer space
-    * (floor(1e6·w/d + 0.5) spelled as exact BIGINT arithmetic
-    * `(2e6·w + d) DIV (2d)`, so no double rounds anywhere).
-    *
-    * Spark shape: `groupByKey(shard).flatMapSortedGroups(doc_id)` — one
-    * exchange keyed on the shard (the packer's parallelism unit, same
-    * as [[packBins]]), secondary-sorted iterator, and the only operator
-    * state is the open-bin remainder MULTISET (a TreeMap: best-fit
-    * lookup is `ceilingKey`, O(log bins); which of several equal
-    * remainders is decremented cannot affect any output — the state is
-    * the multiset). At 1B tokens/shard and budget 8k that is ~125k
-    * longs — KB-scale executor state, docs stream through. The DuckDB
-    * oracle replays the identical fold as a `list_reduce` over the
-    * doc_id-ordered tail list. Its state (r16 respelling) is the same
-    * bounded multiset the engine keeps, as a FIXED (budget+1)-slot
-    * count vector — slot i = open bins with remaining capacity i,
-    * slot b = bins opened, slot b+1 = running waste — because every
-    * remainder lives in [1, b-1]. The old spelling grew the state list
-    * one slot per opened bin, making each fold step O(bins): O(n·bins)
-    * total, >600 s at sf10's ~25k-bin shards; the count vector is
-    * O(n·b) — measured 8.3 s for the whole sf10 corpus. Ceiling lookup
-    * = min populated slot ≥ t (first-min tie-break — multiset-equal to
-    * the TreeMap's ceilingKey choice, so outputs are bit-identical). */
   /** The reusable best-fit-vs-chunk policy core over generic columns —
     * see [[qPackBestfit]] for semantics and the scale argument. Output
     * columns are the fixed report schema with `source` renamed back to
@@ -282,6 +248,40 @@ object Corpus {
         .withColumnRenamed("source", shardCol)
   }
 
+  /** Greedy BEST-FIT sequence packing beside concatenate-and-chunk — the
+    * policy comparison a real trainer runs before choosing a packer
+    * (best-fit cuts cross-document truncations at the cost of padding;
+    * cf. the "fewer truncations" line of work): per shard, docs are
+    * processed in `doc_id` order; each doc's tail (after pre-chunking
+    * `n_tok / budget` full windows) goes into the open bin with the
+    * SMALLEST remaining capacity that still fits, else opens a new bin.
+    * Both policies are accounted in ONE streaming pass over the same
+    * ordered shard: chunk gets bins/splits/waste from the running
+    * offset, best-fit from the fold. Output per shard: doc/token
+    * totals, bins used, boundary-split docs (chunk's cost), and padding
+    * waste in ppm (best-fit's cost) — all integer space
+    * (floor(1e6·w/d + 0.5) spelled as exact BIGINT arithmetic
+    * `(2e6·w + d) DIV (2d)`, so no double rounds anywhere).
+    *
+    * Spark shape: `groupByKey(shard).flatMapSortedGroups(doc_id)` — one
+    * exchange keyed on the shard (the packer's parallelism unit, same
+    * as [[packBins]]), secondary-sorted iterator, and the only operator
+    * state is the open-bin remainder MULTISET (a TreeMap: best-fit
+    * lookup is `ceilingKey`, O(log bins); which of several equal
+    * remainders is decremented cannot affect any output — the state is
+    * the multiset). At 1B tokens/shard and budget 8k that is ~125k
+    * longs — KB-scale executor state, docs stream through. The DuckDB
+    * oracle replays the identical fold as a `list_reduce` over the
+    * doc_id-ordered tail list. Its state (r16 respelling) is the same
+    * bounded multiset the engine keeps, as a FIXED (budget+1)-slot
+    * count vector — slot i = open bins with remaining capacity i,
+    * slot b = bins opened, slot b+1 = running waste — because every
+    * remainder lives in [1, b-1]. The old spelling grew the state list
+    * one slot per opened bin, making each fold step O(bins): O(n·bins)
+    * total, >600 s at sf10's ~25k-bin shards; the count vector is
+    * O(n·b) — measured 8.3 s for the whole sf10 corpus. Ceiling lookup
+    * = min populated slot ≥ t (first-min tie-break — multiset-equal to
+    * the TreeMap's ceilingKey choice, so outputs are bit-identical). */
   val qPackBestfit = Q(
     "q_pack_bestfit",
     (s, d) =>
@@ -1089,21 +1089,6 @@ object Corpus {
            FROM c CROSS JOIN t
            ORDER BY drift DESC, token LIMIT 50"""))
 
-  /** BPE merge-table LEARNING over a corpus — the training half of the
-    * tokenizer story ([[graft.functions.BpeEncode]] is the inference
-    * half): round r encodes every word with the r−1 merges learned so
-    * far, counts adjacent within-word token pairs globally, and adopts
-    * the most frequent pair (ties: lexicographic — fully deterministic).
-    * Classic Sennrich et al. 2016 BPE, run as k aggregation passes.
-    *
-    * Scale shape: per round, pairs explode map-side under codegen
-    * ([[graft.functions.BpePairs]] carries the current table as a
-    * reference object — the broadcast-variable analogue) and two-phase
-    * count on the pair; the driver keeps only the argmax row per round
-    * (ONE collected row — bounded driver state by the same argument as
-    * IVF centroids, k·bytes total). k corpus passes is the textbook
-    * algorithm's shape; production trainers shard-sample first, which
-    * composes here (any DataFrame works as input). */
   /** The corpus reduced to its word census — the lightweight proxy every
     * BPE pass actually needs (r19, guide §2.3 "aggregate before you
     * shuffle" / §8 "decide with small rows"): the encoder is strictly
@@ -1151,6 +1136,21 @@ object Corpus {
     out
   }
 
+  /** BPE merge-table LEARNING over a corpus — the training half of the
+    * tokenizer story ([[graft.functions.BpeEncode]] is the inference
+    * half): round r encodes every word with the r−1 merges learned so
+    * far, counts adjacent within-word token pairs globally, and adopts
+    * the most frequent pair (ties: lexicographic — fully deterministic).
+    * Classic Sennrich et al. 2016 BPE, run as k aggregation passes.
+    *
+    * Scale shape: per round, pairs explode map-side under codegen
+    * ([[graft.functions.BpePairs]] carries the current table as a
+    * reference object — the broadcast-variable analogue) and two-phase
+    * count on the pair; the driver keeps only the argmax row per round
+    * (ONE collected row — bounded driver state by the same argument as
+    * IVF centroids, k·bytes total). k corpus passes is the textbook
+    * algorithm's shape; production trainers shard-sample first, which
+    * composes here (any DataFrame works as input). */
   def learnBpeMerges(docs: org.apache.spark.sql.DataFrame, textCol: String,
       k: Int): Seq[(String, String, Long)] = {
     // cache the vocabulary census, not the text: rounds 1..k then scan

@@ -214,26 +214,6 @@ object Curation {
     },
     None)
 
-  /** Corpus-LM surprisal score — the perplexity-filter shape (score each
-    * document under a language model derived from the corpus itself;
-    * rare-token-heavy documents score high) with a deterministic twist:
-    * true `-log p` is float `ln`, and Java's `Math.log` disagrees with
-    * DuckDB/glibc by 1 ulp on ~6 of 300k integer inputs (measured), so
-    * the gate could flip. Instead each token scores its INTEGER
-    * surprisal `bitlength(total // cnt)` — a quantized -log2 p computed
-    * in exact integer space (`length(bin(x))` / `length(printf('%b', x))`
-    * are identical by construction). Per doc: token count, exact bits
-    * sum, 2dp mean.
-    *
-    * Scale shape: the unigram "model" is the vocab-sized count frame
-    * (one explode + groupBy(token)); the scalar total partial-aggregates
-    * from the VOCAB frame, not a second corpus pass, and broadcasts onto
-    * it; scoring is one equi-join keyed on the token and a doc_id
-    * aggregation. The token stream feeds two consumers (vocab counts +
-    * the scoring join), so the compact per-doc token ARRAYS are
-    * persisted — scan+split runs once, each consumer re-explodes from
-    * memory (the exploded rows themselves are corpus-sized and are
-    * deliberately NOT cached). Evicted by [[graft.Graft.clearCaches]]. */
   /** The per-document surprisal frame (doc_id, n_tok, bits_sum,
     * mean_bits) behind [[qTextSurprisal]], unsorted — shared with
     * [[qCurriculumPhases]], which consumes the same difficulty score. */
@@ -272,6 +252,26 @@ object Curation {
                    AS mb
                FROM toks t JOIN sc USING (tok) GROUP BY t.doc_id)"""
 
+  /** Corpus-LM surprisal score — the perplexity-filter shape (score each
+    * document under a language model derived from the corpus itself;
+    * rare-token-heavy documents score high) with a deterministic twist:
+    * true `-log p` is float `ln`, and Java's `Math.log` disagrees with
+    * DuckDB/glibc by 1 ulp on ~6 of 300k integer inputs (measured), so
+    * the gate could flip. Instead each token scores its INTEGER
+    * surprisal `bitlength(total // cnt)` — a quantized -log2 p computed
+    * in exact integer space (`length(bin(x))` / `length(printf('%b', x))`
+    * are identical by construction). Per doc: token count, exact bits
+    * sum, 2dp mean.
+    *
+    * Scale shape: the unigram "model" is the vocab-sized count frame
+    * (one explode + groupBy(token)); the scalar total partial-aggregates
+    * from the VOCAB frame, not a second corpus pass, and broadcasts onto
+    * it; scoring is one equi-join keyed on the token and a doc_id
+    * aggregation. The token stream feeds two consumers (vocab counts +
+    * the scoring join), so the compact per-doc token ARRAYS are
+    * persisted — scan+split runs once, each consumer re-explodes from
+    * memory (the exploded rows themselves are corpus-sized and are
+    * deliberately NOT cached). Evicted by [[graft.Graft.clearCaches]]. */
   val qTextSurprisal = Q(
     "q_text_surprisal",
     (s, d) => surprisalFrame(s, d).orderBy("doc_id"),
@@ -401,22 +401,6 @@ object Curation {
     * enough that the gate exercises them). */
   val QualityBuckets = 4096L
 
-  /** Hashed-linear quality classifier scoring — the classifier-filter
-    * stage every production pipeline runs (CCNet's fastText LM filter,
-    * GPT-3's LR quality classifier): score = Σ_tokens w[h(token)], a
-    * linear model over hashed bag-of-words features. The weight table is
-    * a FORMULA, not a file — w = (h·2654435761 mod 1001) − 500, a
-    * Knuth-multiplicative spread over [−500, 500] standing in for
-    * learned weights (the scoring ENGINE is what's under test and is
-    * table-independent; a learned table would broadcast the same way
-    * the BPE merge table compiles in). All integer space end to end
-    * (md5-derived bucket, integer weights, integer sum), so the oracle
-    * is exact — no sigmoid needed for a filter: keep = score ≥ 0 is the
-    * same decision boundary, monotone in the score.
-    *
-    * Scale: one map-side codegen pass (nested HOFs — transform +
-    * aggregate fold), NO explode, no shuffle except the output sort;
-    * per-token cost is one md5 + integer ops, flat per input byte. */
   /** The classifier score over a pre-split token-array column `tk` —
     * shared by [[qTextQualityClassifier]] and [[qCurationFunnel]]. */
   private[ops] def qualityScoreExpr: org.apache.spark.sql.Column =
@@ -441,6 +425,22 @@ object Curation {
         qualityScoreExpr.as("score"))
       .withColumn("keep", col("score") >= 0L)
 
+  /** Hashed-linear quality classifier scoring — the classifier-filter
+    * stage every production pipeline runs (CCNet's fastText LM filter,
+    * GPT-3's LR quality classifier): score = Σ_tokens w[h(token)], a
+    * linear model over hashed bag-of-words features. The weight table is
+    * a FORMULA, not a file — w = (h·2654435761 mod 1001) − 500, a
+    * Knuth-multiplicative spread over [−500, 500] standing in for
+    * learned weights (the scoring ENGINE is what's under test and is
+    * table-independent; a learned table would broadcast the same way
+    * the BPE merge table compiles in). All integer space end to end
+    * (md5-derived bucket, integer weights, integer sum), so the oracle
+    * is exact — no sigmoid needed for a filter: keep = score ≥ 0 is the
+    * same decision boundary, monotone in the score.
+    *
+    * Scale: one map-side codegen pass (nested HOFs — transform +
+    * aggregate fold), NO explode, no shuffle except the output sort;
+    * per-token cost is one md5 + integer ops, flat per input byte. */
   val qTextQualityClassifier = Q(
     "q_text_quality_classifier",
     (s, d) => classifierFrame(s, d).sortedOnce("doc_id"),
@@ -530,10 +530,6 @@ object Curation {
          AND 10 * n_bullet <= 9 * n_lines
          AND 10 * n_ell <= 3 * n_lines)"""
 
-  /** The declared rule-matrix query: every Gopher rule's inputs and
-    * verdict per document, plus the conjunction — what a curation run
-    * logs per doc before cutting. Filters-as-data: downstream stages
-    * consume `keep`, dashboards consume the per-rule columns. */
   /** The pre-sort rule-matrix frame, split out (like winnowPairsAgg)
     * so PlanSpec can pin the one-scan map-side shape that the report
     * boundary's localCheckpoint otherwise truncates to an ExistingRDD. */
@@ -556,6 +552,10 @@ object Curation {
       col("gopher_keep").as("keep"))
   }
 
+  /** The declared rule-matrix query: every Gopher rule's inputs and
+    * verdict per document, plus the conjunction — what a curation run
+    * logs per doc before cutting. Filters-as-data: downstream stages
+    * consume `keep`, dashboards consume the per-rule columns. */
   val qTextGopherRules = Q(
     "q_text_gopher_rules",
     (s, d) => gopherRulesFrame(s, d).sortedOnce("doc_id"),

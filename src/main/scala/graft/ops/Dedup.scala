@@ -169,8 +169,9 @@ object Dedup {
     * ceil(rawPairs / target), capped at the fd-safe
     * [[PairStageMaxParts]] (a liveness bound, not a tuning point).
     * Never BELOW the session default — at small scale the certified
-    * plan is untouched and no dispatch tax leaks in. */
-  /** `maxParts` (ADVICE r18): the fd-safe ceiling, injectable so the
+    * plan is untouched and no dispatch tax leaks in.
+    *
+    * `maxParts` (ADVICE r18): the fd-safe ceiling, injectable so the
     * provisioning arithmetic is testable machine-independently and so a
     * cluster deployment can pass its EXECUTOR-side budget — the default
     * [[PairStageMaxParts]] measures this JVM's fd limit and cores, which
@@ -287,11 +288,6 @@ object Dedup {
              FROM documents)
            WHERE rn = 1 GROUP BY lang ORDER BY lang"""))
 
-  /** Distinct MinHash-LSH candidate pairs (a < b) — the shared input of
-    * [[qDedupMinhash]] and [[Graph.qDedupComponents]]. Signatures are
-    * computed entirely map-side, fused into one pass by the MinHashSig
-    * expression — no explode, no groupBy(doc_id) shuffle. Only the band
-    * groupBy inside [[pairsFromGroups]] ever shuffles. */
   /** The persisted (doc_id, band_no, band) frame both [[minhashPairs]]
     * and the [[capCensus]] read. pairsFromGroups scans its input twice
     * (hot-count + collect); cached, the shingle+minhash map pass runs
@@ -318,6 +314,11 @@ object Dedup {
       array_sort(array_distinct(col("sh"))).as("shd"),
       graft.functions.MinHashSig.minhash(col("sh")).as("sig"))
 
+  /** Distinct MinHash-LSH candidate pairs (a < b) — the shared input of
+    * [[qDedupMinhash]] and [[Graph.qDedupComponents]]. Signatures are
+    * computed entirely map-side, fused into one pass by the MinHashSig
+    * expression — no explode, no groupBy(doc_id) shuffle. Only the band
+    * groupBy inside [[pairsFromGroups]] ever shuffles. */
   private[ops] def minhashPairs(s: SparkSession, d: String): DataFrame =
     pairsFromGroups(minhashBands(s, d), Seq("band_no", "band")).distinct()
 
@@ -569,9 +570,7 @@ object Dedup {
   private[ops] def embeddingPairs(s: SparkSession, d: String,
       maxBlock: Int, cosFloor: Double = EmbeddingNearDupFloor): DataFrame = {
     val wb = Window.partitionBy(col("label")).orderBy(col("vec_id"))
-    val e = T.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-              col("embedding").cast("array<double>").as("v"))
+    val e = Similarity.vectors(s, d, "label")
       .withColumn("rnb", row_number().over(wb))
       .filter(col("rnb") <= maxBlock)
       .drop("rnb")
@@ -611,8 +610,9 @@ object Dedup {
     * layout did exactly that at 60k vectors (sf3), while 3×8-bit holds
     * to ~256·cap vectors and keeps near-dup recall via the extra band
     * (1-(1-p^8)^3 vs 1-(1-p^4)^2). At larger corpora widen bands
-    * ~log2(n/cap) and add bands to hold recall. */
-  /** r19 measurement note (negative result, kept for the record): a
+    * ~log2(n/cap) and add bands to hold recall.
+    *
+    * r19 measurement note (negative result, kept for the record): a
     * rewrite that shuffled only (vec_id, band_no, band), generated
     * distinct candidate pairs via the grouped emission and re-attached
     * vectors with two equi-joins — the guide §8 "move the payload once"
@@ -667,7 +667,7 @@ object Dedup {
     * sign sums (bit-identical sequential arithmetic, see
     * [[Similarity.qSimLshBuckets]]), the three 8-bit band splits of the
     * 24-plane code, the hot-band cap as a QUALIFY with its census, and
-    * the exact rescoring through `list_cosine_similarity` under the
+    * the exact rescoring through [[Similarity.cosineSql]] under the
     * same 2dp rounding the blocked variant's oracle already proved
     * engine-stable. DedupSpec additionally plants near-identical
     * clusters and asserts they surface on top. */
@@ -677,8 +677,7 @@ object Dedup {
     Some {
       // One spelling of the SRP bucket law for every LSH oracle —
       // inlining a private copy here let the two drift silently (ADVICE r3).
-      s"""WITH bk AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               ${Similarity.lshBucketSqlN(24)} AS bucket FROM embeddings),
+      s"""WITH ${Similarity.vectorsSqlCte()}, ${Similarity.lshBucketsSqlCte(24)},
            bands AS (SELECT vec_id, v, 0 AS band_no, bucket % 256 AS band
                      FROM bk
                      UNION ALL
@@ -689,7 +688,7 @@ object Dedup {
                     ${coldSql("band_no, band")}),
            ${capCensusSqlCte("bands", "vec_id", "n_capped_vecs")},
            pairs AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b,
-                       ${sqlR2("list_cosine_similarity(x.v, y.v)")} AS cos
+                       ${sqlR2(Similarity.cosineSql("x.v", "y.v"))} AS cos
                      FROM cold x JOIN cold y
                        ON x.band_no = y.band_no AND x.band = y.band
                       AND x.vec_id < y.vec_id),
@@ -730,29 +729,33 @@ object Dedup {
                 col("n_capped_labels"), col("n_dropped_vecs"))
         .orderBy("a", "b")
     },
-    Some(s"""WITH capped AS (
-             SELECT vec_id, label, embedding,
-                    row_number() OVER (PARTITION BY label ORDER BY vec_id)
-                      AS rnb
-             FROM embeddings),
+    Some(s"""WITH ${Similarity.vectorsSqlCte("label")}, $embeddingPairsSqlCte,
            census AS (SELECT
              count(DISTINCT CASE WHEN rnb > $MaxEmbeddingBlock
                                  THEN label END) AS n_capped_labels,
              count(CASE WHEN rnb > $MaxEmbeddingBlock THEN 1 END)
                AS n_dropped_vecs
-             FROM capped),
-           pairs AS (SELECT a, b, cos FROM (
-             SELECT x.vec_id AS a, y.vec_id AS b,
-                    ${sqlR2("""list_cosine_similarity(
-                      CAST(x.embedding AS DOUBLE[]),
-                      CAST(y.embedding AS DOUBLE[]))""")} AS cos
-             FROM capped x JOIN capped y
-               ON x.label = y.label AND x.vec_id < y.vec_id
-              AND x.rnb <= $MaxEmbeddingBlock AND y.rnb <= $MaxEmbeddingBlock)
-           WHERE cos >= $EmbeddingCosFloor)
+             FROM ecap)
            SELECT p.a, p.b, p.cos, c.n_capped_labels, c.n_dropped_vecs
-           FROM census c LEFT JOIN pairs p ON true
+           FROM census c LEFT JOIN epairs p ON true
            ORDER BY p.a, p.b"""))
+
+  /** DuckDB mirror of [[embeddingPairs]] at the declared block cap and
+    * [[EmbeddingCosFloor]], over `e` carrying `label`: `ecap` (each
+    * vector's rank `rnb` in its label block, by vec_id) and
+    * `epairs(a, b, cos)`. */
+  private def embeddingPairsSqlCte: String =
+    s"""ecap AS (SELECT vec_id, label, v,
+                   row_number() OVER (PARTITION BY label ORDER BY vec_id)
+                     AS rnb
+                 FROM e),
+        epairs AS (SELECT a, b, cos FROM (
+          SELECT x.vec_id AS a, y.vec_id AS b,
+                 ${sqlR2(Similarity.cosineSql("x.v", "y.v"))} AS cos
+          FROM ecap x JOIN ecap y
+            ON x.label = y.label AND x.vec_id < y.vec_id
+           AND x.rnb <= $MaxEmbeddingBlock AND y.rnb <= $MaxEmbeddingBlock)
+          WHERE cos >= $EmbeddingCosFloor)"""
 
   /** Cells for the semantic-dedup coarse quantizer — small by definition
     * (a coarse cell is a pruning unit, not a cluster-analysis artifact). */
@@ -798,25 +801,9 @@ object Dedup {
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int = SemanticCells, eps: Double = SemanticEps,
       maxBlock: Int = MaxEmbeddingBlock): DataFrame = {
-    val e = vectors
-      .select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-    // One count probe for the seed stride — an index-build scalar, the
-    // same driver state class as IVF's seeding.
-    val stride = math.max(e.count() / k, 1L)
-    val seeds = e
-      .filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
-      .select((col("vec_id") / stride).cast("long").as("cell"),
-        col("v").as("cv"))
-    // argmax cosine via struct-min on (-sim, cell): ties break to the
-    // lowest cell in both engines; v rides the struct so no rejoin.
-    val assigned = e.crossJoin(broadcast(seeds))
-      .withColumn("negsim", -Similarity.cosine(col("v"), col("cv")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("negsim"), col("cell"), col("v"))).as("m"))
-      .select(col("vec_id"), col("m.cell").as("cell"), col("m.v").as("v"))
-    val wb = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
-    val capped = assigned.withColumn("rnb", row_number().over(wb))
-      .filter(col("rnb") <= maxBlock).drop("rnb")
+    val (assigned, capped) = semanticCells(
+      vectors.select(col(idCol).as("vec_id"), col(vecCol).as("v")),
+      k, maxBlock)
     val owners = capped.as("x")
       .join(capped.as("y"),
         col("x.cell") === col("y.cell") &&
@@ -830,29 +817,46 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** The semantic cells of `e` (vec_id, v): each vector assigned to its
+    * highest-cosine [[Similarity.strideSeeds]] seed — argmax via
+    * struct-min on (-sim, cell), so ties break to the lowest cell in both
+    * engines, and v rides the struct so no rejoin — then each cell capped
+    * to its first `maxBlock` members by vec_id. Returns (assigned,
+    * capped). */
+  private def semanticCells(e: DataFrame, k: Int,
+      maxBlock: Int): (DataFrame, DataFrame) = {
+    val seeds = Similarity.strideSeeds(e, k)
+      .select(col("cell"), col("v").as("cv"))
+    val assigned = e.crossJoin(broadcast(seeds))
+      .withColumn("negsim", -Similarity.cosine(col("v"), col("cv")))
+      .groupBy("vec_id")
+      .agg(min(struct(col("negsim"), col("cell"), col("v"))).as("m"))
+      .select(col("vec_id"), col("m.cell").as("cell"), col("m.v").as("v"))
+    val wb = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
+    val capped = assigned.withColumn("rnb", row_number().over(wb))
+      .filter(col("rnb") <= maxBlock).drop("rnb")
+    (assigned, capped)
+  }
+
+  /** DuckDB mirror of [[semanticCells]] at the declared [[SemanticCells]]
+    * and [[MaxEmbeddingBlock]], over `e`: the seeds, `assign(vec_id, cell,
+    * v)` and `capped(vec_id, cell, v)`. */
+  private def semanticCellsSqlCte: String =
+    s"""${Similarity.strideSeedsSqlCte("seeds", SemanticCells)},
+        sims AS (SELECT e.vec_id, s.cell, e.v,
+                   ${Similarity.cosineSql("e.v", "s.cv")} AS sim
+                 FROM e CROSS JOIN seeds s),
+        assign AS (SELECT vec_id, cell, v FROM sims
+                   QUALIFY row_number() OVER (PARTITION BY vec_id
+                     ORDER BY sim DESC, cell) = 1),
+        capped AS (SELECT vec_id, cell, v FROM assign
+                   QUALIFY row_number() OVER (PARTITION BY cell
+                     ORDER BY vec_id) <= $MaxEmbeddingBlock)"""
+
   val qDedupSemantic = Q(
     "q_dedup_semantic",
-    (s, d) => semanticDedup(
-      T.embeddings(s, d).withColumn("v",
-        col("embedding").cast("array<double>")),
-      "vec_id", "v"),
-    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                        FROM embeddings),
-             p AS (SELECT greatest(count(*) // $SemanticCells, 1) AS stride
-                   FROM e),
-             seeds AS (SELECT e.vec_id // p.stride AS cell, e.v AS cv
-                       FROM e, p
-                       WHERE e.vec_id % p.stride = 0
-                         AND e.vec_id < p.stride * $SemanticCells),
-             sims AS (SELECT e.vec_id, s.cell, e.v,
-                        ${Similarity.cosineSql("e.v", "s.cv")} AS sim
-                      FROM e CROSS JOIN seeds s),
-             assign AS (SELECT vec_id, cell, v FROM sims
-                        QUALIFY row_number() OVER (PARTITION BY vec_id
-                          ORDER BY sim DESC, cell) = 1),
-             capped AS (SELECT vec_id, cell, v FROM assign
-                        QUALIFY row_number() OVER (PARTITION BY cell
-                          ORDER BY vec_id) <= $MaxEmbeddingBlock),
+    (s, d) => semanticDedup(Similarity.vectors(s, d), "vec_id", "v"),
+    Some(s"""WITH ${Similarity.vectorsSqlCte()}, $semanticCellsSqlCte,
              owners AS (SELECT y.vec_id AS vec_id, min(x.vec_id) AS dup_of
                         FROM capped x JOIN capped y
                           ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -879,22 +883,8 @@ object Dedup {
   val qDedupSemanticSweep = Q(
     "q_dedup_semantic_sweep",
     (s, d) => {
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val stride = math.max(e.count() / SemanticCells, 1L)
-      val seeds = e
-        .filter(col("vec_id") % stride === 0 &&
-          col("vec_id") < stride * SemanticCells)
-        .select((col("vec_id") / stride).cast("long").as("cell"),
-          col("v").as("cv"))
-      val assigned = e.crossJoin(broadcast(seeds))
-        .withColumn("negsim", -Similarity.cosine(col("v"), col("cv")))
-        .groupBy("vec_id")
-        .agg(min(struct(col("negsim"), col("cell"), col("v"))).as("m"))
-        .select(col("vec_id"), col("m.cell").as("cell"), col("m.v").as("v"))
-      val wb = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
-      val capped = assigned.withColumn("rnb", row_number().over(wb))
-        .filter(col("rnb") <= MaxEmbeddingBlock).drop("rnb")
+      val (_, capped) = semanticCells(Similarity.vectors(s, d),
+        SemanticCells, MaxEmbeddingBlock)
       val maxCos = capped.as("x")
         .join(capped.as("y"),
           col("x.cell") === col("y.cell") &&
@@ -918,23 +908,7 @@ object Dedup {
     Some {
       val epsRows = SemanticSweepEps
         .map(e => s"(${(e * 100).round}, ${e})").mkString(", ")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                     FROM embeddings),
-          p AS (SELECT greatest(count(*) // $SemanticCells, 1) AS stride
-                FROM e),
-          seeds AS (SELECT e.vec_id // p.stride AS cell, e.v AS cv
-                    FROM e, p
-                    WHERE e.vec_id % p.stride = 0
-                      AND e.vec_id < p.stride * $SemanticCells),
-          sims AS (SELECT e.vec_id, s.cell, e.v,
-                     ${Similarity.cosineSql("e.v", "s.cv")} AS sim
-                   FROM e CROSS JOIN seeds s),
-          assign AS (SELECT vec_id, cell, v FROM sims
-                     QUALIFY row_number() OVER (PARTITION BY vec_id
-                       ORDER BY sim DESC, cell) = 1),
-          capped AS (SELECT vec_id, cell, v FROM assign
-                     QUALIFY row_number() OVER (PARTITION BY cell
-                       ORDER BY vec_id) <= $MaxEmbeddingBlock),
+      s"""WITH ${Similarity.vectorsSqlCte()}, $semanticCellsSqlCte,
           mc AS (SELECT y.vec_id, max(${Similarity.cosineSql("x.v", "y.v")}) AS mc
                  FROM capped x JOIN capped y
                    ON x.cell = y.cell AND x.vec_id < y.vec_id
@@ -984,23 +958,10 @@ object Dedup {
         .orderBy("verdict")
     },
     Some(s"""WITH $minhashPairsSqlCte,
-             ecap AS (SELECT vec_id, label, embedding,
-                        row_number() OVER (PARTITION BY label
-                          ORDER BY vec_id) AS rnb
-                      FROM embeddings),
-             sem AS (SELECT a, b FROM (
-                 SELECT x.vec_id AS a, y.vec_id AS b,
-                        ${sqlR2("""list_cosine_similarity(
-                          CAST(x.embedding AS DOUBLE[]),
-                          CAST(y.embedding AS DOUBLE[]))""")} AS cos
-                 FROM ecap x JOIN ecap y
-                   ON x.label = y.label AND x.vec_id < y.vec_id
-                  AND x.rnb <= $MaxEmbeddingBlock
-                  AND y.rnb <= $MaxEmbeddingBlock)
-               WHERE cos >= $EmbeddingCosFloor),
+             ${Similarity.vectorsSqlCte("label")}, $embeddingPairsSqlCte,
              m AS (SELECT coalesce(c.a, s.a) AS a, coalesce(c.b, s.b) AS b,
                      c.a IS NOT NULL AS lex, s.a IS NOT NULL AS sem
-                   FROM cand c FULL OUTER JOIN sem s
+                   FROM cand c FULL OUTER JOIN epairs s
                      ON c.a = s.a AND c.b = s.b)
            SELECT CASE WHEN lex AND sem THEN 'both'
                        WHEN lex THEN 'lexical_only'
@@ -1192,29 +1153,6 @@ object Dedup {
     * shape is width-independent. */
   val SubstrSpanTokens = 10
 
-  /** Exact-substring dedup (Lee et al. 2022, "Deduplicating Training
-    * Data Makes Language Models Better") — the span-level family the
-    * whole-document passes miss: a boilerplate paragraph pasted into a
-    * thousand otherwise-distinct pages survives every document hash but
-    * still memorizes. Every sliding [[SubstrSpanTokens]]-token window is
-    * a span; a span occurring in more than one document keeps exactly
-    * one copy, owned by the minimum doc_id (the deterministic survivor
-    * rule every dedup op here uses). Per document: distinct spans, spans
-    * it would cut under that rule, and whether it survives intact.
-    *
-    * The published implementation builds a corpus-wide suffix array — a
-    * sequential, memory-resident structure. The relational spelling
-    * trades the suffix array's arbitrary-length matches for fixed-width
-    * spans (as the paper itself does when chunking) and becomes pure
-    * equi-join algebra: spans explode map-side, the owner frame
-    * partial-aggregates on the span hash (a hot boilerplate span
-    * collapses to one row map-side — no posting-list cap needed, unlike
-    * pair generation, because the join fan-out per span is exactly 1),
-    * and only spans with df > 1 survive into the join's right side, so
-    * the frame joined back scales with the duplicated-span set — the
-    * near-dup fraction — not the corpus. Spans are md5-hashed before
-    * the shuffle: 32-char keys cross the wire, never 10-token text
-    * (same rule as [[qDedupExact]]). */
   /** Exact-substring dedup core on an arbitrary (idCol, textCol) frame —
     * the reusable body of [[qDedupSubstring]] (see that doc for the
     * algorithm and scale argument). Returns one row per input row:
@@ -1243,6 +1181,29 @@ object Dedup {
         (coalesce(col("n_cut"), lit(0L)) === 0L).as("keep_full"))
   }
 
+  /** Exact-substring dedup (Lee et al. 2022, "Deduplicating Training
+    * Data Makes Language Models Better") — the span-level family the
+    * whole-document passes miss: a boilerplate paragraph pasted into a
+    * thousand otherwise-distinct pages survives every document hash but
+    * still memorizes. Every sliding [[SubstrSpanTokens]]-token window is
+    * a span; a span occurring in more than one document keeps exactly
+    * one copy, owned by the minimum doc_id (the deterministic survivor
+    * rule every dedup op here uses). Per document: distinct spans, spans
+    * it would cut under that rule, and whether it survives intact.
+    *
+    * The published implementation builds a corpus-wide suffix array — a
+    * sequential, memory-resident structure. The relational spelling
+    * trades the suffix array's arbitrary-length matches for fixed-width
+    * spans (as the paper itself does when chunking) and becomes pure
+    * equi-join algebra: spans explode map-side, the owner frame
+    * partial-aggregates on the span hash (a hot boilerplate span
+    * collapses to one row map-side — no posting-list cap needed, unlike
+    * pair generation, because the join fan-out per span is exactly 1),
+    * and only spans with df > 1 survive into the join's right side, so
+    * the frame joined back scales with the duplicated-span set — the
+    * near-dup fraction — not the corpus. Spans are md5-hashed before
+    * the shuffle: 32-char keys cross the wire, never 10-token text
+    * (same rule as [[qDedupExact]]). */
   val qDedupSubstring = Q(
     "q_dedup_substring",
     (s, d) =>

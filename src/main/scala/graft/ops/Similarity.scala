@@ -41,6 +41,14 @@ object Similarity {
   val PqSubspaces = 8
   val PqCodebook = 16
 
+  /** The query set every vector search scores: the vectors whose vec_id
+    * is below this bound. Declared first for the same reason. */
+  val QueryIds = 10
+
+  /** Hyperplanes of the declared SRP-LSH code: one 8-bit bucket, probed
+    * by [[lshFlips]]. */
+  val LshPlanes = 8
+
   private val dimCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private val ivfCache = scala.collection.concurrent.TrieMap
@@ -68,37 +76,91 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosineSim(a, b)
 
-  /** Brute-force cosine top-3 neighbours for query vectors vec_id < 10.
+  /** The embedding widened to array<double>. float -> double is exact
+    * in both engines, so every kernel sees the oracle's inputs. */
+  private def embeddingV: Column = col("embedding").cast("array<double>")
+
+  /** The embedding frame every vector search reads: `vec_id`, the
+    * `carry` columns, then the widened vector `v`. */
+  private[ops] def vectors(s: SparkSession, d: String, carry: String*): DataFrame =
+    T.embeddings(s, d)
+      .select((col("vec_id") +: carry.map(col)) :+ embeddingV.as("v"): _*)
+
+  /** The query side of `frame`: its rows with vec_id below [[QueryIds]],
+    * as `qid` plus the `carry` columns. */
+  private def queries(frame: DataFrame, carry: Column*): DataFrame =
+    frame.filter(col("vec_id") < QueryIds)
+      .select(col("vec_id").as("qid") +: carry: _*)
+
+  /** The top-k tail every vector search ends in: within each query (and
+    * each sweep point named in `keys`), number the rows by `score`, ties
+    * to the lower `tie`, into column `rank`, and keep the first `k`. */
+  private def topK(df: DataFrame, k: Int, score: Column,
+      keys: Seq[String] = Nil, tie: String = "vec_id",
+      rank: String = "rn"): DataFrame = {
+    val w = Window.partitionBy(keys.map(col) :+ col("qid"): _*)
+      .orderBy(score, col(tie))
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** Exact cosine rescoring of candidate pairs (qid, qv, vec_id, v): the
+    * `k` most similar per query, sim rounded, ordered (qid, vec_id). */
+  private def rescore(cand: DataFrame, k: Int): DataFrame =
+    topK(cand.withColumn("sim", cosine(col("qv"), col("v"))), k,
+        col("sim").desc)
+      .select(col("qid"), col("vec_id"), r2(col("sim")).as("sim"))
+      .orderBy("qid", "vec_id")
+
+  /** Oracle mirror of [[vectors]]: `e AS (vec_id, carry..., v)`. */
+  private[ops] def vectorsSqlCte(carry: String*): String =
+    s"""e AS (SELECT ${("vec_id" +: carry).mkString(", ")},
+                CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"""
+
+  /** Oracle mirror of [[queries]] over `e`: `q AS (qid, qv)`. */
+  private def queriesSqlCte: String =
+    s"q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $QueryIds)"
+
+  /** Every (query, other vector) pair over `e` and `q`:
+    * `qpairs AS (qid, qv, vec_id, v)`, the brute-force candidate set. */
+  private def queryPairsSqlCte: String =
+    """qpairs AS (SELECT q.qid, q.qv, e.vec_id, e.v
+                 FROM q JOIN e ON e.vec_id <> q.qid)"""
+
+  /** Oracle mirror of [[topK]]: CTE `name` holds the rows of `from`
+    * numbered into `rank` whose rank is at most `k`. */
+  private def topKSql(name: String, from: String, k: Int, score: String,
+      keys: Seq[String] = Nil, tie: String = "vec_id",
+      rank: String = "rn"): String =
+    s"""$name AS (SELECT * FROM (SELECT *, row_number() OVER (
+          PARTITION BY ${keys.map(_ + ", ").mkString}qid ORDER BY $score, $tie)
+          AS $rank FROM $from) WHERE $rank <= $k)"""
+
+  /** Oracle mirror of [[rescore]] over candidate CTE `cand` (qid, qv,
+    * vec_id, v): CTE `name` holds the top `k` (qid, vec_id, sim), raw. */
+  private def rescoreSqlCte(name: String, cand: String, k: Int): String =
+    s"""${name}_sims AS (SELECT qid, vec_id, ${cosineSql("qv", "v")} AS sim
+                         FROM $cand),
+        ${topKSql(name, s"${name}_sims", k, "sim DESC")}"""
+
+  /** The brute-force truth set every ANN path is scored against, over
+    * `e` and `q`: `qpairs` and `truth(qid, vec_id, sim)`, the exact
+    * cosine top-3 of [[qSimCosineTopk]]. */
+  private def truthSqlCte: String =
+    s"$queryPairsSqlCte, ${rescoreSqlCte("truth", "qpairs", 3)}"
+
+  /** Brute-force cosine top-3 neighbours for the query set.
     * The query side is tiny -> broadcast; the corpus side streams. This is
     * the exact-search baseline every ANN variant is scored against. */
   val qSimCosineTopk = Q(
     "q_sim_cosine_topk",
     (s, d) => {
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("sim", cosine(col("qv"), col("v")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("qid"), col("vec_id"), r2(col("sim")).as("sim"))
-        .orderBy("qid", "vec_id")
+      val e = vectors(s, d)
+      rescore(e.join(broadcast(queries(e, col("v").as("qv"))),
+        col("vec_id") =!= col("qid")), 3)
     },
-    Some(s"""SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM (
-             SELECT q.vec_id AS qid, e.vec_id AS vec_id,
-                    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                           CAST(e.embedding AS DOUBLE[])) AS sim,
-                    row_number() OVER (PARTITION BY q.vec_id
-                      ORDER BY list_cosine_similarity(
-                        CAST(q.embedding AS DOUBLE[]),
-                        CAST(e.embedding AS DOUBLE[])) DESC,
-                        e.vec_id) AS rn
-             FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-             WHERE q.vec_id < 10)
-           WHERE rn <= 3 ORDER BY qid, vec_id"""))
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $truthSqlCte
+           SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM truth
+           ORDER BY qid, vec_id"""))
 
   /** Plane p, dim i weight = (md5("p:i") first-16-bit parity) ? +1 : -1 —
     * deterministic pseudo-random hyperplanes without any RNG. The weights
@@ -119,12 +181,11 @@ object Similarity {
   /** Sign-random-projection LSH buckets: neighbour search joins on
     * bucket equality instead of the full cross product; recall is
     * measured against brute force in SimilaritySpec. Deterministic
-    * projections -> stable buckets, but the layout is engine-specific,
-    * so no SQL oracle (rows-only check). */
-  def srpBuckets(s: SparkSession, d: String, nPlanes: Int = 8): DataFrame = {
-    val e = T.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-              col("embedding").cast("array<double>").as("v"))
+    * projections -> stable buckets. `nPlanes` above [[LshPlanes]] is the
+    * dedup LSH path's wider code (its low 8 planes are the declared
+    * bucket). */
+  def srpBuckets(s: SparkSession, d: String, nPlanes: Int = LshPlanes): DataFrame = {
+    val e = vectors(s, d, "label")
     // One stats probe for the dimensionality (an index build's stats
     // pass) — memoized per dataset, so repeated queries read it as
     // metadata instead of scanning a row each.
@@ -138,6 +199,24 @@ object Similarity {
     e.withColumn("bucket", bit.reduce(_ + _))
   }
 
+  /** [[srpBuckets]] as a DuckDB CTE over `e`: `bk AS (vec_id, v,
+    * bucket)`, same md5-parity weight law, so the low 8 planes of any
+    * wider code ARE the declared 8-plane bucket. The dedup LSH path uses
+    * 24 planes (3 bands × 8 bits): band width has to grow
+    * ~log2(corpus/cap) or every bucket saturates the df-cap (the
+    * 2×4-bit layout went structurally empty at 60k vectors). The oracle
+    * inlines the weight rows as literal arrays (dim 64 — the fixture
+    * embedding width, TESTDATA.md). */
+  private[ops] def lshBucketsSqlCte(nPlanes: Int = LshPlanes): String = {
+    val w = srpWeights(nPlanes, 64)
+    val planes = (0 until nPlanes).map { p =>
+      val arr = w(p).map(x => if (x > 0) "1.0" else "-1.0").mkString(", ")
+      s"""(CASE WHEN list_inner_product(v, [$arr]::DOUBLE[])
+            >= 0 THEN ${1L << p} ELSE 0 END)"""
+    }.mkString(" + ")
+    s"bk AS (SELECT vec_id, v, CAST($planes AS BIGINT) AS bucket FROM e)"
+  }
+
   /** The bucket histogram IS oracle-expressible after all: the
     * hyperplane weights are ±1 literals (md5-parity), so each
     * projection is a signed sequential SUM of the (exactly-widened)
@@ -149,34 +228,7 @@ object Similarity {
     * re-materialized the 64-element weight literal PER ELEMENT — ~325 s
     * per plane over 200k vectors, the sole cause of the sf10 oracle
     * watchdog timeouts; bit-equality of the two spellings was certified
-    * on all 200k sf10 vectors, dot and self-dot, before the swap.)
-    * The oracle inlines the 8 weight rows as literal
-    * arrays (dim 64 — the fixture embedding width, TESTDATA.md). */
-  /** The 8-plane SRP bucket as a DuckDB expression over `embedding` —
-    * shared by every LSH oracle (buckets, embedding near-dup, topk). */
-  private[ops] def lshBucketSql: String = lshBucketSqlN(8)
-
-  /** [[lshBucketSql]] generalized to `nPlanes` — same md5-parity weight
-    * law, so the low 8 planes of any wider code ARE the declared 8-plane
-    * bucket. The dedup LSH path uses 24 planes (3 bands × 8 bits): band
-    * width has to grow ~log2(corpus/cap) or every bucket saturates the
-    * df-cap (the 2×4-bit layout went structurally empty at 60k vectors). */
-  private[ops] def lshBucketSqlN(nPlanes: Int): String = {
-    val w = srpWeights(nPlanes, 64)
-    val planes = (0 until nPlanes).map { p =>
-      val arr = w(p).map(x => if (x > 0) "1.0" else "-1.0").mkString(", ")
-      s"""(CASE WHEN list_inner_product(
-            CAST(embedding AS DOUBLE[]), [$arr]::DOUBLE[])
-            >= 0 THEN ${1L << p} ELSE 0 END)"""
-    }.mkString(" + ")
-    s"CAST($planes AS BIGINT)"
-  }
-
-  private def lshBucketsOracle: String =
-    s"""SELECT bucket, count(*) AS n_vecs FROM (
-          SELECT $lshBucketSql AS bucket FROM embeddings)
-        GROUP BY bucket ORDER BY bucket"""
-
+    * on all 200k sf10 vectors, dot and self-dot, before the swap.) */
   val qSimLshBuckets = Q(
     "q_sim_lsh_buckets",
     (s, d) =>
@@ -184,7 +236,16 @@ object Similarity {
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_vecs"))
         .orderBy("bucket"),
-    Some(lshBucketsOracle))
+    Some(s"""WITH ${vectorsSqlCte()}, ${lshBucketsSqlCte()}
+           SELECT bucket, count(*) AS n_vecs FROM bk
+           GROUP BY bucket ORDER BY bucket"""))
+
+  /** The multi-probe set of the declared bucket: XOR masks of every
+    * bucket within hamming distance 2 of the query's own (37 of them). */
+  private def lshFlips: Seq[Long] = 0L +:
+    (0 until LshPlanes).map(i => 1L << i) ++:
+    (for { i <- 0 until LshPlanes; j <- (i + 1) until LshPlanes }
+      yield (1L << i) | (1L << j))
 
   /** Multi-probe LSH ANN top-k — the scale path. Probes the query's own
     * bucket plus every bucket within hamming distance 2 (37 probes over
@@ -193,66 +254,40 @@ object Similarity {
     * candidate volume ≈ (probes/2^planes)·n per query, and the probe join
     * is a plain equi-join Spark shuffles by bucket. Probe count vs recall
     * is the standard multi-probe dial — more planes + more probes at
-    * larger corpus. Engine-specific buckets -> no SQL oracle;
-    * SimilaritySpec measures recall against the brute-force baseline. */
-  def srpTopk(s: SparkSession, d: String, k: Int = 3, nPlanes: Int = 8): DataFrame = {
+    * larger corpus. SimilaritySpec measures recall against the
+    * brute-force baseline. */
+  def srpTopk(s: SparkSession, d: String, k: Int = 3): DataFrame = {
     val b = srpBuckets(s, d)
-    val q = b.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("bucket").as("qb"))
-    val flipVals: Seq[Long] = 0L +:
-      (0 until nPlanes).map(i => 1L << i) ++:
-      (for { i <- 0 until nPlanes; j <- (i + 1) until nPlanes }
-        yield (1L << i) | (1L << j))
-    val flips = array(flipVals.map(lit): _*)
-    val probes = q
-      .withColumn("flip", explode(flips))
+    val probes = queries(b, col("v").as("qv"), col("bucket").as("qb"))
+      .withColumn("flip", explode(array(lshFlips.map(lit): _*)))
       .withColumn("probe", expr("int(qb) ^ int(flip)").cast("long"))
       .select("qid", "qv", "probe")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    broadcast(probes)
-      .join(b, col("probe") === col("bucket") && col("vec_id") =!= col("qid"))
-      .withColumn("sim", cosine(col("qv"), col("v")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id"), r2(col("sim")).as("sim"))
-      .orderBy("qid", "vec_id")
+    rescore(broadcast(probes)
+      .join(b, col("probe") === col("bucket") && col("vec_id") =!= col("qid")), k)
   }
 
-  /** Multi-probe top-k, DuckDB-oracled: the probe set is pure XOR
-    * arithmetic over the (oracled) bucket, and the oracle's cosine
-    * spells the fused kernel's EXACT op sequence — three in-order
-    * inner products, then `dot / (sqrt(na) * sqrt(nb))` — so the raw-sim
-    * ranking (not just the rounded output) is bit-identical and the
-    * k-boundary cannot diverge between engines. */
-  private def lshTopkOracle: String = {
-    val flips: Seq[Long] = 0L +:
-      (0 until 8).map(i => 1L << i) ++:
-      (for { i <- 0 until 8; j <- (i + 1) until 8 }
-        yield (1L << i) | (1L << j))
-    s"""WITH bk AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-             $lshBucketSql AS bucket FROM embeddings),
-         q AS (SELECT vec_id AS qid, v AS qv, bucket AS qb FROM bk
-               WHERE vec_id < 10),
-         probes AS (SELECT qid, qv, xor(qb, f.flip) AS probe
-                    FROM q CROSS JOIN (SELECT unnest(
-                      [${flips.mkString(", ")}]::BIGINT[]) AS flip) f),
-         cand AS (SELECT p.qid, p.qv, b.vec_id, b.v
-                  FROM probes p JOIN bk b
+  /** Multi-probe top-k as DuckDB CTEs over `e` and `q`, ending in
+    * `lsh_ann(qid, vec_id, sim)`: the probe set is pure XOR arithmetic
+    * over the (oracled) bucket, and the oracle's cosine spells the fused
+    * kernel's EXACT op sequence — three in-order inner products, then
+    * `dot / (sqrt(na) * sqrt(nb))` — so the raw-sim ranking (not just
+    * the rounded output) is bit-identical and the k-boundary cannot
+    * diverge between engines. */
+  private def lshTopkSqlCte: String =
+    s"""${lshBucketsSqlCte()},
+        lprobes AS (SELECT q.qid, q.qv, xor(b.bucket, f.flip) AS probe
+                    FROM q JOIN bk b ON b.vec_id = q.qid
+                    CROSS JOIN (SELECT unnest(
+                      [${lshFlips.mkString(", ")}]::BIGINT[]) AS flip) f),
+        lcand AS (SELECT p.qid, p.qv, b.vec_id, b.v
+                  FROM lprobes p JOIN bk b
                     ON b.bucket = p.probe AND b.vec_id <> p.qid),
-         sims AS (SELECT qid, vec_id,
-                    ${cosineSql("qv", "v")} AS sim
-                  FROM cand),
-         rk AS (SELECT qid, vec_id, sim,
-                  row_number() OVER (PARTITION BY qid
-                    ORDER BY sim DESC, vec_id) AS rn
-                FROM sims)
-       SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM rk
-       WHERE rn <= 3 ORDER BY qid, vec_id"""
-  }
+        ${rescoreSqlCte("lsh_ann", "lcand", 3)}"""
 
-  val qSimLshTopk =
-    Q("q_sim_lsh_topk", (s, d) => srpTopk(s, d), Some(lshTopkOracle))
+  val qSimLshTopk = Q("q_sim_lsh_topk", (s, d) => srpTopk(s, d),
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $lshTopkSqlCte
+           SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM lsh_ann
+           ORDER BY qid, vec_id"""))
 
   // ---------------------------------------------------------------- IVF
 
@@ -302,14 +337,9 @@ object Similarity {
 
   private def buildIvfIndex(s: SparkSession, d: String, k: Int,
       iters: Int, seeding: String): (DataFrame, DataFrame) = {
-    val e = T.embeddings(s, d)
-      .select(col("vec_id"), col("label"),
-              col("embedding").cast("array<double>").as("v"))
-    val n = e.count()
-    val stride = math.max(n / k, 1L)
-    def strideSeeds(): Array[(Long, Array[Double])] = e
-      .filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
-      .select((col("vec_id") / stride).cast("long").as("cell"), col("v"))
+    val e = vectors(s, d, "label")
+    def seedCells(): Array[(Long, Array[Double])] = strideSeeds(e, k)
+      .select(col("cell"), col("v"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
     def farthestSeeds(): Array[(Long, Array[Double])] = {
@@ -344,7 +374,7 @@ object Similarity {
       val first = e.filter(col("vec_id") === 0).select(col("v"))
         .collect().headOption
         .map(_.getSeq[Double](0).toArray)
-        .getOrElse(strideSeeds().head._2)
+        .getOrElse(seedCells().head._2)
       val chosen = scala.collection.mutable.ArrayBuffer(first)
       var nd = e.select(col("vec_id"), col("v"),
         distTo(first).as("graft_nd")).localCheckpoint(true)
@@ -372,7 +402,7 @@ object Similarity {
       chosen.toArray.zipWithIndex.map { case (v, i) => i.toLong -> v }
     }
     var cents: Array[(Long, Array[Double])] =
-      if (seeding == "farthest") farthestSeeds() else strideSeeds()
+      if (seeding == "farthest") farthestSeeds() else seedCells()
     // map-side argmin: array_min over (dist, cell) structs compares dist
     // first, then cell — deterministic ties, codegen-friendly
     def assignCol(cs: Array[(Long, Array[Double])]): Column =
@@ -403,43 +433,68 @@ object Similarity {
   def ivfCells(s: SparkSession, d: String, k: Int = 16, iters: Int = 0): DataFrame =
     ivfIndex(s, d, k, iters)._1
 
-  /** DuckDB mirror of the iters = 0 IVF index: appends the stride-seed
-    * centroid CTE (`icents`) and the argmin cell assignment (`iasg`) to
-    * a chain that already defines `e AS (vec_id, v)`. Every distance is
-    * the same in-order IEEE-754 op sequence as the fused Spark kernels
-    * (dot = sequential sum of products; the half-self-dot is an
-    * in-order sum of squares), so the argmin winner — ties broken by
-    * cell, mirrored in the window order — cannot diverge between
-    * engines (the [[qSimLshTopk]] argument). */
-  private[ops] def ivfCellsSqlCte(k: Int = 16): String =
-    s"""ivp AS (SELECT greatest(count(*) // $k, 1) AS stride FROM e),
-        icents AS (SELECT e.vec_id // p.stride AS cell, e.v AS cv
-                   FROM e, ivp p
-                   WHERE e.vec_id % p.stride = 0
-                     AND e.vec_id < p.stride * $k),
+  /** Stride seeds of an embedding frame (vec_id, v, ...): every
+    * stride-th vector by vec_id with stride = max(n / k, 1), below
+    * stride·k — at most k seeds, RNG-free. `cell` is the vec_id/stride
+    * quotient, the label IVF and the semantic cells use; PQ relabels by
+    * rank ([[pqSeeds]]). The count is one job, an index-build scalar. */
+  private[ops] def strideSeeds(e: DataFrame, k: Int): DataFrame = {
+    val stride = math.max(e.count() / k, 1L)
+    e.filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
+      .withColumn("cell", (col("vec_id") / stride).cast("long"))
+  }
+
+  /** Oracle mirror of [[strideSeeds]] over `e`: CTE `name` holds each
+    * seed's `label` (an expression over `e.vec_id` and the stride
+    * `p.stride`, default the quotient `cell`) and its vector `cv`. */
+  private[ops] def strideSeedsSqlCte(name: String, k: Int,
+      label: String = "e.vec_id // p.stride AS cell"): String =
+    s"""${name}_stride AS (SELECT greatest(count(*) // $k, 1) AS stride
+                          FROM e),
+        $name AS (SELECT $label, e.v AS cv FROM e, ${name}_stride p
+                  WHERE e.vec_id % p.stride = 0
+                    AND e.vec_id < p.stride * $k)"""
+
+  /** The IVF distance of vector `x` to centroid `c.cv` in DuckDB:
+    * -x·c + |c|²/2, the L2 argmin with |x|² dropped. */
+  private def ivfDistSql(x: String): String =
+    s"-(list_inner_product($x, c.cv)) + list_inner_product(c.cv, c.cv) / 2"
+
+  /** DuckDB mirror of the iters = 0, 16-cell IVF index over `e`: the
+    * stride-seed centroid CTE (`icents`) and the argmin cell assignment
+    * (`iasg`).
+    * Every distance is the same in-order IEEE-754 op sequence as the
+    * fused Spark kernels (dot = sequential sum of products; the
+    * half-self-dot is an in-order sum of squares), so the argmin winner
+    * — ties broken by cell, mirrored in the window order — cannot
+    * diverge between engines (the [[qSimLshTopk]] argument). */
+  private def ivfCellsSqlCte: String =
+    s"""${strideSeedsSqlCte("icents", 16)},
         iasg AS (SELECT vec_id, v, cell FROM (
                    SELECT e.vec_id, e.v, c.cell,
-                     row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                       -(list_inner_product(e.v, c.cv))
-                       + list_inner_product(c.cv, c.cv) / 2,
-                       c.cell) AS rn
+                     row_number() OVER (PARTITION BY e.vec_id
+                       ORDER BY ${ivfDistSql("e.v")}, c.cell) AS rn
                    FROM e CROSS JOIN icents c) WHERE rn = 1)"""
 
-  /** Probe CTE for the iters = 0 index: per query (vec_id < 10), the
-    * `nprobe` nearest cells by the same -dot + |cv|²/2 ranking the
-    * engine computes, ranks exposed as `prank` for sweep reuse.
-    * Appends `q` (qid, qv) and `iprobes` (qid, qv, pcell, prank) to a
-    * chain defining `e` and `icents`. */
-  private[ops] def ivfProbesSqlCte(nprobe: Int): String =
-    s"""q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
+  /** DuckDB mirror of [[ivfProbes]] and the candidate join over `e` and
+    * `q`: the index CTEs, `iprobes` (each query's `nprobe` nearest
+    * cells, ranked as `prank`) and `icand(qid, qv, prank, vec_id, v,
+    * cell)`, every member of a probed cell but the query itself. */
+  private def ivfCandSqlCte(nprobe: Int): String =
+    s"""$ivfCellsSqlCte,
         ipd AS (SELECT q.qid, q.qv, c.cell AS pcell,
-                  -(list_inner_product(q.qv, c.cv))
-                  + list_inner_product(c.cv, c.cv) / 2 AS pdist
+                  ${ivfDistSql("q.qv")} AS pdist
                 FROM q CROSS JOIN icents c),
-        iprobes AS (SELECT qid, qv, pcell, prank FROM (
-                      SELECT qid, qv, pcell, row_number() OVER (
-                        PARTITION BY qid ORDER BY pdist, pcell) AS prank
-                      FROM ipd) WHERE prank <= $nprobe)"""
+        ${topKSql("iprobes", "ipd", nprobe, "pdist", tie = "pcell",
+          rank = "prank")},
+        icand AS (SELECT p.qid, p.qv, p.prank, a.vec_id, a.v, a.cell
+                  FROM iprobes p JOIN iasg a
+                    ON a.cell = p.pcell AND a.vec_id <> p.qid)"""
+
+  /** [[ivfTopk]] at its defaults as DuckDB CTEs over `e` and `q`, ending
+    * in `ivf_ann(qid, vec_id, sim)`. */
+  private def ivfTopkSqlCte: String =
+    s"${ivfCandSqlCte(4)}, ${rescoreSqlCte("ivf_ann", "icand", 3)}"
 
   /** The fused cosine kernel's exact op sequence as DuckDB SQL over
     * columns `$a`/`$b` (three in-order `list_inner_product`s, then
@@ -483,45 +538,33 @@ object Similarity {
     // its three consumers here (probe centroids, query side, candidate
     // join) and every later query share the same persisted frame.
     val (cells, cents) = ivfIndex(s, d, k, iters, seeding)
-    val centroids = cents.withColumnRenamed("cell", "pcell")
-    val q = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("pdist"), col("pcell"))
-    val probes = q.join(broadcast(centroids))
-      .withColumn("pdist", -graft.functions.VectorFunctions.dot(col("qv"), col("cv"))
-        + graft.functions.VectorFunctions.dot(col("cv"), col("cv")) / 2)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
+    val probes = ivfProbes(cells, cents, nprobe)
       .select(col("qid"), col("qv"), col("pcell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    broadcast(probes)
-      .join(cells, col("pcell") === col("cell") && col("vec_id") =!= col("qid"))
-      .withColumn("sim", cosine(col("qv"), col("v")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topk)
-      .select(col("qid"), col("vec_id"), r2(col("sim")).as("sim"))
-      .orderBy("qid", "vec_id")
+    rescore(probed(probes, cells), topk)
   }
 
-  val qSimIvfTopk = Q(
-    "q_sim_ivf_topk",
-    (s, d) => ivfTopk(s, d),
-    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                        FROM embeddings),
-             ${ivfCellsSqlCte()},
-             ${ivfProbesSqlCte(4)},
-             cand AS (SELECT p.qid, p.qv, a.vec_id, a.v
-                      FROM iprobes p JOIN iasg a
-                        ON a.cell = p.pcell AND a.vec_id <> p.qid),
-             sims AS (SELECT qid, vec_id,
-                        ${cosineSql("qv", "v")} AS sim
-                      FROM cand),
-             rk AS (SELECT qid, vec_id, sim,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY sim DESC, vec_id) AS rn
-                    FROM sims)
-           SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM rk
-           WHERE rn <= 3 ORDER BY qid, vec_id"""))
+  /** IVF probe ranking: each query's `nprobe` nearest centroids by
+    * -q·c + |c|²/2 (the L2 argmin with |q|² dropped), ties to the lower
+    * cell — (qid, qv, pcell, cv, pdist) plus the probe rank as `rank`. */
+  private def ivfProbes(cells: DataFrame, cents: DataFrame, nprobe: Int,
+      rank: String = "rn"): DataFrame =
+    topK(queries(cells, col("v").as("qv"))
+        .join(broadcast(cents.withColumnRenamed("cell", "pcell")))
+        .withColumn("pdist",
+          -graft.functions.VectorFunctions.dot(col("qv"), col("cv"))
+            + graft.functions.VectorFunctions.dot(col("cv"), col("cv")) / 2),
+      nprobe, col("pdist"), tie = "pcell", rank = rank)
+
+  /** The IVF candidate join: every member of `cells` (vec_id, cell, ...)
+    * in a cell `probes` (qid, pcell, ...) names, but the query itself. */
+  private def probed(probes: DataFrame, cells: DataFrame): DataFrame =
+    broadcast(probes)
+      .join(cells, col("pcell") === col("cell") && col("vec_id") =!= col("qid"))
+
+  val qSimIvfTopk = Q("q_sim_ivf_topk", (s, d) => ivfTopk(s, d),
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $ivfTopkSqlCte
+           SELECT qid, vec_id, ${sqlR2("sim")} AS sim FROM ivf_ann
+           ORDER BY qid, vec_id"""))
 
   /** IVF-PQ top-k — the two index stages composed the way a production
     * vector index ships them (FAISS's IVFxx,PQyy: Jégou et al. 2011
@@ -551,27 +594,14 @@ object Similarity {
     val coded = cells.select(col("vec_id"), col("cell"),
       graft.functions.PqFunctions.codes(
         col("v"), flat, seeds.length, PqSubspaces).as("codes"))
-    val centroids = cents.withColumnRenamed("cell", "pcell")
-    val q = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("pdist"), col("pcell"))
-    val probes = q.join(broadcast(centroids))
-      .withColumn("pdist",
-        -graft.functions.VectorFunctions.dot(col("qv"), col("cv"))
-          + graft.functions.VectorFunctions.dot(col("cv"), col("cv")) / 2)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
+    val probes = ivfProbes(cells, cents, nprobe)
       .select(col("qid"),
         graft.functions.PqFunctions.luts(
           col("qv"), flat, seeds.length, PqSubspaces).as("luts"),
         col("pcell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    broadcast(probes)
-      .join(coded, col("pcell") === col("cell") && col("vec_id") =!= col("qid"))
-      .withColumn("dist",
-        graft.functions.PqFunctions.adc(col("luts"), col("codes")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topk)
+    topK(probed(probes, coded).withColumn("dist",
+        graft.functions.PqFunctions.adc(col("luts"), col("codes"))),
+        topk, col("dist"))
       .select(col("qid"), col("vec_id"), col("cell"),
         r2(col("dist")).as("adc_dist"))
       .orderBy("qid", "vec_id")
@@ -580,30 +610,18 @@ object Similarity {
   val qSimIvfpqTopk = Q(
     "q_sim_ivfpq_topk",
     (s, d) => ivfPqTopk(s, d),
-    Some(s"""WITH $pqCodesSqlCte,
-             ${ivfCellsSqlCte()},
-             ${ivfProbesSqlCte(4)},
-             lut AS (SELECT q.qid, ms.m, s.j,
-                       list_sum(list_transform(range(1, 9),
-                         i -> (q.qv[ms.m * 8 + i] - s.cv[ms.m * 8 + i])
-                            * (q.qv[ms.m * 8 + i] - s.cv[ms.m * 8 + i])))
-                         AS d
-                     FROM q CROSS JOIN ms CROSS JOIN seeds s),
-             adc AS (SELECT l.qid, b.vec_id, a.cell,
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $pqCodesSqlCte,
+             ${ivfCandSqlCte(4)}, $pqLutSqlCte,
+             adc AS (SELECT c.qid, c.vec_id, c.cell,
                        list_sum(list(l.d ORDER BY l.m)) AS dist
-                     FROM best b
-                     JOIN iasg a ON a.vec_id = b.vec_id
-                     JOIN iprobes p ON p.pcell = a.cell
-                     JOIN lut l ON l.qid = p.qid
+                     FROM icand c
+                     JOIN best b ON b.vec_id = c.vec_id
+                     JOIN lut l ON l.qid = c.qid
                       AND l.m = b.m AND l.j = b.j
-                     WHERE b.vec_id <> p.qid
-                     GROUP BY l.qid, b.vec_id, a.cell),
-             rk AS (SELECT qid, vec_id, cell, dist,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY dist, vec_id) AS rn
-                    FROM adc)
+                     GROUP BY c.qid, c.vec_id, c.cell),
+             ${topKSql("top", "adc", 3, "dist")}
            SELECT qid, vec_id, cell, ${sqlR2("dist")} AS adc_dist
-           FROM rk WHERE rn <= 3 ORDER BY qid, vec_id"""))
+           FROM top ORDER BY qid, vec_id"""))
 
   /** Int8 vector quantization summary per embedding — the compression
     * pass a vector store runs at ingest. One fused codegen expression
@@ -617,18 +635,17 @@ object Similarity {
     (s, d) =>
       T.embeddings(s, d)
         .select(col("vec_id"),
-          graft.functions.VectorFunctions.quantizeStats(
-            col("embedding").cast("array<double>")).as("qs"))
+          graft.functions.VectorFunctions.quantizeStats(embeddingV).as("qs"))
         .select(col("vec_id"), r2(col("qs.scale")).as("scale"),
                 col("qs.q_sum").as("q_sum"), col("qs.q_l1").as("q_l1"))
         .sortedOnce("vec_id"),
-    Some(s"""WITH m AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv,
-                    list_max(list_transform(CAST(embedding AS DOUBLE[]),
-                                            x -> abs(x))) AS mx
-                 FROM embeddings),
+    Some(s"""WITH ${vectorsSqlCte()},
+            m AS (SELECT vec_id, v,
+                    list_max(list_transform(v, x -> abs(x))) AS mx
+                  FROM e),
             q AS (SELECT vec_id,
                     CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END AS sc,
-                    list_transform(dv, x -> CAST(floor(
+                    list_transform(v, x -> CAST(floor(
                       x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)
                       + 0.5) AS BIGINT)) AS qv
                   FROM m)
@@ -641,6 +658,32 @@ object Similarity {
   // (PqSubspaces / PqCodebook are declared at the top of the object:
   // qSimIvfpqTopk's oracle interpolates them and object vals initialize
   // in declaration order — a later declaration would interpolate 0.)
+
+  /** The PQ codebook: stride-sampled seed vectors, collected once as
+    * driver index state (k·dim doubles — the same class as IVF
+    * centroids). Codes are POSITIONAL: seed rank in ascending vec_id
+    * order, NOT the vec_id/stride quotient. The two coincide when ids
+    * are dense (the quotient is then 0..k-1 contiguous), but on a
+    * sparse id space the modulo filter admits fewer than k seeds with
+    * gapped quotients, and a quotient-labeled codebook would disagree
+    * with the flat positional layout the kernels index into (the sf1
+    * divergence this relabel fixed). The kernels must also be told the
+    * ACTUAL seed count — `flat.length / PqCodebook` on a short codebook
+    * silently corrupts the inferred dim — so every call site passes
+    * `seeds.length`, never the nominal [[PqCodebook]]. */
+  private def pqSeeds(s: SparkSession, d: String): Array[(Long, Array[Double])] =
+    strideSeeds(vectors(s, d), PqCodebook)
+      .select(col("vec_id"), col("v"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+      .zipWithIndex
+      .map { case ((_, v), rank) => rank.toLong -> v }
+
+  /** [[pqSeeds]] flattened to the kernel layout (codeword j's vector at
+    * offset j·dim) for the [[graft.functions.PqFunctions]] expressions. */
+  private def pqFlat(seeds: Array[(Long, Array[Double])]): Array[Double] =
+    seeds.flatMap(_._2)
 
   /** Product quantization (Jégou et al. 2011) — the vector-compression
     * step an ANN index runs at ingest, beside [[qVecQuantize]]'s scalar
@@ -662,42 +705,10 @@ object Similarity {
     * sequential sum of squared differences — bit-identical to the
     * oracle's in-order list_sum — and ties break to the lowest code via
     * struct ordering, so even equal-distance codewords cannot diverge. */
-  /** The PQ codebook: stride-sampled seed vectors, collected once as
-    * driver index state (k·dim doubles — the same class as IVF
-    * centroids). Codes are POSITIONAL: seed rank in ascending vec_id
-    * order, NOT the vec_id/stride quotient. The two coincide when ids
-    * are dense (the quotient is then 0..k-1 contiguous), but on a
-    * sparse id space the modulo filter admits fewer than k seeds with
-    * gapped quotients, and a quotient-labeled codebook would disagree
-    * with the flat positional layout the kernels index into (the sf1
-    * divergence this relabel fixed). The kernels must also be told the
-    * ACTUAL seed count — `flat.length / PqCodebook` on a short codebook
-    * silently corrupts the inferred dim — so every call site passes
-    * `seeds.length`, never the nominal [[PqCodebook]]. */
-  private def pqSeeds(s: SparkSession, d: String): Array[(Long, Array[Double])] = {
-    val e = T.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val stride = math.max(e.count() / PqCodebook, 1L)
-    e.filter(col("vec_id") % stride === 0 &&
-        col("vec_id") < stride * PqCodebook)
-      .select(col("vec_id"), col("v"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-      .zipWithIndex
-      .map { case ((_, v), rank) => rank.toLong -> v }
-  }
-
-  /** [[pqSeeds]] flattened to the kernel layout (codeword j's vector at
-    * offset j·dim) for the [[graft.functions.PqFunctions]] expressions. */
-  private def pqFlat(seeds: Array[(Long, Array[Double])]): Array[Double] =
-    seeds.flatMap(_._2)
-
   val qVecPq = Q(
     "q_vec_pq",
     (s, d) => {
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, d)
       val seeds = pqSeeds(s, d)
       val flat = pqFlat(seeds)
       val codes = graft.functions.PqFunctions.codes(
@@ -711,7 +722,7 @@ object Similarity {
           r2(err).as("err"))
         .sortedOnce("vec_id")
     },
-    Some(s"""WITH $pqCodesSqlCte,
+    Some(s"""WITH ${vectorsSqlCte()}, $pqCodesSqlCte,
              agg AS (SELECT vec_id,
                        CAST(sum(j * (1::BIGINT << CAST(4 * m AS INT)))
                          AS BIGINT) AS code,
@@ -720,33 +731,35 @@ object Similarity {
            SELECT vec_id, code, ${sqlR2("err")} AS err
            FROM agg ORDER BY vec_id"""))
 
-  /** PQ encode CTE chain shared by the two PQ oracles: `e` (corpus),
-    * `seeds` (stride codebook), `best` = each vector's nearest codeword
+  /** PQ encode CTE chain shared by the PQ oracles, over `e`: `seeds`
+    * (stride codebook), `best` = each vector's nearest codeword
     * (j) and distance (d) per subspace m. `j` is the seed's POSITIONAL
     * rank in vec_id order — the [[pqSeeds]] contract — not the
     * vec_id/stride quotient, so the oracle agrees with the engine's
     * flat codebook layout even when a sparse id space admits fewer than
     * k seeds with gapped quotients (identical on dense ids). */
   private def pqCodesSqlCte: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-              FROM embeddings),
-        p AS (SELECT greatest(count(*) // $PqCodebook, 1) AS stride
-              FROM e),
-        seeds AS (SELECT row_number() OVER (ORDER BY e.vec_id) - 1 AS j,
-                    e.v AS cv
-                  FROM e, p
-                  WHERE e.vec_id % p.stride = 0
-                    AND e.vec_id < p.stride * $PqCodebook),
+    s"""${strideSeedsSqlCte("seeds", PqCodebook,
+          "row_number() OVER (ORDER BY e.vec_id) - 1 AS j")},
         ms AS (SELECT unnest(range(0, $PqSubspaces)) AS m),
-        dist AS (SELECT e.vec_id, ms.m, s.j,
-                   list_sum(list_transform(range(1, 9),
-                     i -> (e.v[ms.m * 8 + i] - s.cv[ms.m * 8 + i])
-                        * (e.v[ms.m * 8 + i] - s.cv[ms.m * 8 + i])))
-                     AS d
+        dist AS (SELECT e.vec_id, ms.m, s.j, ${pqSubDistSql("e.v")} AS d
                  FROM e CROSS JOIN ms CROSS JOIN seeds s),
         best AS (SELECT vec_id, m, j, d FROM dist
                  QUALIFY row_number() OVER (PARTITION BY vec_id, m
                    ORDER BY d, j) = 1)"""
+
+  /** Squared distance of `x`'s subvector m (`ms.m`) to codeword `s.cv`'s,
+    * as an in-order DuckDB sum — the kernels' fixed-order fold. */
+  private def pqSubDistSql(x: String): String =
+    s"""list_sum(list_transform(range(1, 9),
+          i -> ($x[ms.m * 8 + i] - s.cv[ms.m * 8 + i])
+             * ($x[ms.m * 8 + i] - s.cv[ms.m * 8 + i])))"""
+
+  /** The PQ query LUT over `q` and [[pqCodesSqlCte]]: `lut(qid, m, j,
+    * d)`, each query subvector's distance to every codeword. */
+  private def pqLutSqlCte: String =
+    s"""lut AS (SELECT q.qid, ms.m, s.j, ${pqSubDistSql("q.qv")} AS d
+                FROM q CROSS JOIN ms CROSS JOIN seeds s)"""
 
   /** PQ asymmetric-distance (ADC) top-k — the query path the PQ codes
     * exist for (Jégou et al. 2011 §IV): the query stays a RAW vector,
@@ -783,46 +796,31 @@ object Similarity {
   val qSimPqTopk = Q(
     "q_sim_pq_topk",
     (s, d) => {
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, d)
       val seeds = pqSeeds(s, d)
       val flat = pqFlat(seeds)
       val coded = e.select(col("vec_id"),
         graft.functions.PqFunctions.codes(
           col("v"), flat, seeds.length, PqSubspaces).as("codes"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"),
-          graft.functions.PqFunctions.luts(
-            col("v"), flat, seeds.length, PqSubspaces).as("luts"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("dist"), col("vec_id"))
-      coded.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("dist",
-          graft.functions.PqFunctions.adc(col("luts"), col("codes")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      val q = queries(e, graft.functions.PqFunctions.luts(
+        col("v"), flat, seeds.length, PqSubspaces).as("luts"))
+      topK(coded.join(broadcast(q), col("vec_id") =!= col("qid"))
+          .withColumn("dist",
+            graft.functions.PqFunctions.adc(col("luts"), col("codes"))),
+          3, col("dist"))
         .select(col("qid"), col("vec_id"), r2(col("dist")).as("adc_dist"))
         .orderBy("qid", "vec_id")
     },
-    Some(s"""WITH $pqCodesSqlCte,
-             q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-             lut AS (SELECT q.qid, ms.m, s.j,
-                       list_sum(list_transform(range(1, 9),
-                         i -> (q.qv[ms.m * 8 + i] - s.cv[ms.m * 8 + i])
-                            * (q.qv[ms.m * 8 + i] - s.cv[ms.m * 8 + i])))
-                         AS d
-                     FROM q CROSS JOIN ms CROSS JOIN seeds s),
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $pqCodesSqlCte,
+             $pqLutSqlCte,
              adc AS (SELECT l.qid, b.vec_id,
                        list_sum(list(l.d ORDER BY l.m)) AS dist
                      FROM best b JOIN lut l ON l.m = b.m AND l.j = b.j
                      WHERE b.vec_id <> l.qid
                      GROUP BY l.qid, b.vec_id),
-             rk AS (SELECT qid, vec_id, dist,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY dist, vec_id) AS rn
-                    FROM adc)
+             ${topKSql("top", "adc", 3, "dist")}
            SELECT qid, vec_id, ${sqlR2("dist")} AS adc_dist
-           FROM rk WHERE rn <= 3 ORDER BY qid, vec_id"""))
+           FROM top ORDER BY qid, vec_id"""))
 
   /** Dimension contract for [[binarySignCode]]: one sign bit per
     * dimension packed into a single 64-bit word, so the corpus scan of a
@@ -862,52 +860,36 @@ object Similarity {
   val qSimHammingTopk = Q(
     "q_sim_hamming_topk",
     (s, d) => {
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, d)
       val codes = e.select(col("vec_id"), binarySignCode("v").as("code"))
-      val q = codes.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("code").as("qcode"))
-      val qv = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val wH = Window.partitionBy(col("qid"))
-        .orderBy(col("hamming"), col("vec_id"))
-      val cand = codes.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("hamming", hammingDist(col("code"), col("qcode")))
-        .withColumn("rn", row_number().over(wH))
-        .filter(col("rn") <= 16)
+      val cand = topK(codes
+          .join(broadcast(queries(codes, col("code").as("qcode"))),
+            col("vec_id") =!= col("qid"))
+          .withColumn("hamming", hammingDist(col("code"), col("qcode"))),
+          16, col("hamming"))
         .select("qid", "vec_id", "hamming")
-      val wC = Window.partitionBy(col("qid"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      e.join(broadcast(cand), "vec_id")
-        .join(broadcast(qv), "qid")
-        .withColumn("sim", cosine(col("qv"), col("v")))
-        .withColumn("rn", row_number().over(wC))
-        .filter(col("rn") <= 3)
+      topK(e.join(broadcast(cand), "vec_id")
+          .join(broadcast(queries(e, col("v").as("qv"))), "qid")
+          .withColumn("sim", cosine(col("qv"), col("v"))),
+          3, col("sim").desc)
         .select(col("qid"), col("vec_id"), col("hamming"),
           r2(col("sim")).as("sim"))
         .orderBy("qid", "vec_id")
     },
-    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                        FROM embeddings),
-             q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-             ham AS (SELECT q.qid, e.vec_id,
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $queryPairsSqlCte,
+             ham AS (SELECT qid, vec_id,
                        CAST(list_sum(list_transform(range(1, ${BinaryDim + 1}),
-                         i -> CASE WHEN (q.qv[i] >= 0) <> (e.v[i] >= 0)
+                         i -> CASE WHEN (qv[i] >= 0) <> (v[i] >= 0)
                               THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-                     FROM e JOIN q ON e.vec_id <> q.qid),
-             cand AS (SELECT qid, vec_id, hamming FROM (
-                        SELECT *, row_number() OVER (PARTITION BY qid
-                          ORDER BY hamming, vec_id) AS rn FROM ham)
-                      WHERE rn <= 16),
+                     FROM qpairs),
+             ${topKSql("cand", "ham", 16, "hamming")},
              rer AS (SELECT c.qid, c.vec_id, c.hamming,
-                       list_cosine_similarity(q.qv, e.v) AS sim,
-                       row_number() OVER (PARTITION BY c.qid
-                         ORDER BY list_cosine_similarity(q.qv, e.v) DESC,
-                                  c.vec_id) AS rn
+                       ${cosineSql("q.qv", "e.v")} AS sim
                      FROM cand c JOIN e ON e.vec_id = c.vec_id
-                                 JOIN q ON q.qid = c.qid)
+                                 JOIN q ON q.qid = c.qid),
+             ${topKSql("top", "rer", 3, "sim DESC")}
            SELECT qid, vec_id, hamming, ${sqlR2("sim")} AS sim
-           FROM rer WHERE rn <= 3 ORDER BY qid, vec_id"""))
+           FROM top ORDER BY qid, vec_id"""))
 
   /** Per-label positional embedding centroids — the class-prototype /
     * cluster-summary aggregate an embedding pipeline reports (and the
@@ -955,9 +937,8 @@ object Similarity {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
       val vecs = T.embeddings(s, d).select(col("vec_id"), col("label"),
-        sqrt(graft.functions.VectorFunctions.dot(
-          col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>"))).as("nrm"))
+        sqrt(graft.functions.VectorFunctions.dot(embeddingV, embeddingV))
+          .as("nrm"))
       docs.join(vecs, col("doc_id") === col("vec_id"))
         .groupBy("label")
         .agg(count(lit(1)).as("n_docs"),
@@ -965,11 +946,11 @@ object Similarity {
           graft.util.Det.davg(col("nrm")).as("avg_norm"))
         .orderBy("label")
     },
-    Some(s"""WITH j AS (SELECT e.label,
+    Some(s"""WITH ${vectorsSqlCte("label")},
+             j AS (SELECT e.label,
                len(string_split(d.text, ' ')) AS n_tok,
-               sqrt(list_sum(list_transform(
-                 CAST(e.embedding AS DOUBLE[]), x -> x * x))) AS nrm
-             FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id)
+               sqrt(list_sum(list_transform(e.v, x -> x * x))) AS nrm
+             FROM documents d JOIN e ON d.doc_id = e.vec_id)
            SELECT label, count(*) AS n_docs,
              ${graft.util.Det.sqlDavg("CAST(n_tok AS DOUBLE)")} AS avg_tokens,
              ${graft.util.Det.sqlDavg("nrm")} AS avg_norm
@@ -1011,60 +992,16 @@ object Similarity {
         .orderBy("method")
     },
     Some {
-      val flips: Seq[Long] = 0L +:
-        (0 until 8).map(i => 1L << i) ++:
-        (for { i <- 0 until 8; j <- (i + 1) until 8 }
-          yield (1L << i) | (1L << j))
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                     FROM embeddings),
-          ${ivfCellsSqlCte()},
-          ${ivfProbesSqlCte(4)},
-          icand AS (SELECT p.qid, p.qv, a.vec_id, a.v
-                    FROM iprobes p JOIN iasg a
-                      ON a.cell = p.pcell AND a.vec_id <> p.qid),
-          isims AS (SELECT qid, vec_id, ${cosineSql("qv", "v")} AS sim
-                    FROM icand),
-          ivf_ann AS (SELECT qid, vec_id FROM (
-                        SELECT qid, vec_id, row_number() OVER (
-                          PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                        FROM isims) WHERE rn <= 3),
-          tsims AS (SELECT q.qid, e.vec_id,
-                      ${cosineSql("q.qv", "e.v")} AS sim
-                    FROM q JOIN e ON e.vec_id <> q.qid),
-          truth AS (SELECT qid, vec_id FROM (
-                      SELECT qid, vec_id, row_number() OVER (
-                        PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                      FROM tsims) WHERE rn <= 3),
-          bk AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                   $lshBucketSql AS bucket FROM embeddings),
-          lq AS (SELECT vec_id AS qid, v AS qv, bucket AS qb FROM bk
-                 WHERE vec_id < 10),
-          lprobes AS (SELECT qid, qv, xor(qb, f.flip) AS probe
-                      FROM lq CROSS JOIN (SELECT unnest(
-                        [${flips.mkString(", ")}]::BIGINT[]) AS flip) f),
-          lcand AS (SELECT p.qid, p.qv, b.vec_id, b.v
-                    FROM lprobes p JOIN bk b
-                      ON b.bucket = p.probe AND b.vec_id <> p.qid),
-          lsims AS (SELECT qid, vec_id, ${cosineSql("qv", "v")} AS sim
-                    FROM lcand),
-          lsh_ann AS (SELECT qid, vec_id FROM (
-                        SELECT qid, vec_id, row_number() OVER (
-                          PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                        FROM lsims) WHERE rn <= 3),
-          scored AS (
-            SELECT 'ivf' AS method,
-                   count(DISTINCT a.qid) AS n_queries,
-                   count(*) AS n_pairs,
-                   CAST(count(t.qid) AS BIGINT) AS n_hits
-            FROM ivf_ann a LEFT JOIN truth t
-              ON t.qid = a.qid AND t.vec_id = a.vec_id
-            UNION ALL
-            SELECT 'lsh' AS method,
-                   count(DISTINCT a.qid) AS n_queries,
-                   count(*) AS n_pairs,
-                   CAST(count(t.qid) AS BIGINT) AS n_hits
-            FROM lsh_ann a LEFT JOIN truth t
-              ON t.qid = a.qid AND t.vec_id = a.vec_id)
+      val scored = Seq("ivf", "lsh").map(m =>
+        s"""SELECT '$m' AS method,
+                  count(DISTINCT a.qid) AS n_queries,
+                  count(*) AS n_pairs,
+                  CAST(count(t.qid) AS BIGINT) AS n_hits
+           FROM ${m}_ann a LEFT JOIN truth t
+             ON t.qid = a.qid AND t.vec_id = a.vec_id""")
+      s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $ivfTopkSqlCte,
+          $lshTopkSqlCte, $truthSqlCte,
+          scored AS (${scored.mkString(" UNION ALL ")})
         SELECT method, n_queries, n_pairs, n_hits FROM scored
         ORDER BY method"""
     })
@@ -1082,7 +1019,7 @@ object Similarity {
     * rescans — and the tiny post-window top-k frame is persisted so the
     * truth self-join reads 120 rows, not the corpus. Every similarity
     * is the same fused sequential kernel on a prefix slice, bit-identical
-    * to the oracle's list_slice + list_cosine_similarity by the
+    * to the oracle's list_slice + [[cosineSql]] by the
     * q_sim_lsh_topk argument, so the rank-3 boundary (ties → vec_id)
     * reproduces exactly — including dim 64, whose hits are 30/30 by
     * construction (the self-consistency control row). Honest quality
@@ -1096,21 +1033,16 @@ object Similarity {
     "q_sim_dim_sweep",
     (s, d) => {
       val dims = Seq(8, 16, 32, 64)
-      val e = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val e = vectors(s, d)
       val sims = array(dims.map { dd =>
         struct(lit(dd.toLong).as("dim"),
           cosine(slice(col("qv"), 1, dd), slice(col("v"), 1, dd)).as("sim"))
       }: _*)
-      val w = Window.partitionBy(col("dim"), col("qid"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      val topk = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), explode(sims).as("ds"))
-        .select(col("qid"), col("vec_id"), col("ds.dim"), col("ds.sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      val topk = topK(e.join(broadcast(queries(e, col("v").as("qv"))),
+            col("vec_id") =!= col("qid"))
+          .select(col("qid"), col("vec_id"), explode(sims).as("ds"))
+          .select(col("qid"), col("vec_id"), col("ds.dim"), col("ds.sim")),
+          3, col("sim").desc, Seq("dim"))
         .select("dim", "qid", "vec_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val truth = topk.filter(col("dim") === 64L)
@@ -1120,26 +1052,19 @@ object Similarity {
         .agg(count(col("hit")).as("n_hits"), count(lit(1)).as("n_pairs"))
         .orderBy("dim")
     },
-    Some(s"""WITH dims AS (SELECT CAST(dim AS BIGINT) AS dim
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, $queryPairsSqlCte,
+             dims AS (SELECT CAST(dim AS BIGINT) AS dim
                FROM (VALUES (8), (16), (32), (64)) t(dim)),
-             pairs AS (SELECT d.dim, q.vec_id AS qid, e.vec_id AS vid,
-                 list_cosine_similarity(
-                   CAST(list_slice(q.embedding, 1, d.dim) AS DOUBLE[]),
-                   CAST(list_slice(e.embedding, 1, d.dim) AS DOUBLE[]))
-                   AS sim
-               FROM embeddings q
-               JOIN embeddings e ON e.vec_id <> q.vec_id
-               CROSS JOIN dims d
-               WHERE q.vec_id < 10),
-             topk AS (SELECT dim, qid, vid FROM (
-                 SELECT dim, qid, vid, row_number() OVER (
-                     PARTITION BY dim, qid ORDER BY sim DESC, vid) AS rn
-                 FROM pairs) WHERE rn <= 3),
-             truth AS (SELECT qid, vid, 1 AS hit
-                       FROM topk WHERE dim = 64)
-           SELECT t.dim, count(tr.hit) AS n_hits, count(*) AS n_pairs
-           FROM topk t LEFT JOIN truth tr
-             ON t.qid = tr.qid AND t.vid = tr.vid
+             pairs AS (SELECT d.dim, p.qid, p.vec_id,
+                 ${cosineSql("list_slice(p.qv, 1, d.dim)",
+                   "list_slice(p.v, 1, d.dim)")} AS sim
+               FROM qpairs p CROSS JOIN dims d),
+             ${topKSql("topk", "pairs", 3, "sim DESC", Seq("dim"))},
+             full_dim AS (SELECT qid, vec_id, 1 AS hit
+                          FROM topk WHERE dim = 64)
+           SELECT t.dim, count(f.hit) AS n_hits, count(*) AS n_pairs
+           FROM topk t LEFT JOIN full_dim f
+             ON t.qid = f.qid AND t.vec_id = f.vec_id
            GROUP BY t.dim ORDER BY t.dim"""))
 
   /** IVF nprobe CALIBRATION sweep — the tuning curve every IVF
@@ -1161,28 +1086,13 @@ object Similarity {
     "q_sim_nprobe_sweep",
     (s, d) => {
       val (cells, cents) = ivfIndex(s, d, 16)
-      val centroids = cents.withColumnRenamed("cell", "pcell")
-      val q = cells.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val wp = Window.partitionBy(col("qid"))
-        .orderBy(col("pdist"), col("pcell"))
-      val probes = q.join(broadcast(centroids))
-        .withColumn("pdist",
-          -graft.functions.VectorFunctions.dot(col("qv"), col("cv"))
-            + graft.functions.VectorFunctions.dot(col("cv"), col("cv")) / 2)
-        .withColumn("prank", row_number().over(wp))
-        .filter(col("prank") <= 8)
+      val probes = ivfProbes(cells, cents, 8, rank = "prank")
         .select(col("qid"), col("qv"), col("pcell"), col("prank"))
-      val w = Window.partitionBy(col("np"), col("qid"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      val swept = broadcast(probes)
-        .join(cells, col("pcell") === col("cell") &&
-          col("vec_id") =!= col("qid"))
-        .withColumn("sim", cosine(col("qv"), col("v")))
-        .withColumn("np", explode(typedLit(Seq(1L, 2L, 4L, 8L))))
-        .filter(col("prank") <= col("np"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      val swept = topK(probed(probes, cells)
+          .withColumn("sim", cosine(col("qv"), col("v")))
+          .withColumn("np", explode(typedLit(Seq(1L, 2L, 4L, 8L))))
+          .filter(col("prank") <= col("np")),
+          3, col("sim").desc, Seq("np"))
         .select("np", "qid", "vec_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val truth = qSimCosineTopk.fn(s, d)
@@ -1192,32 +1102,16 @@ object Similarity {
         .agg(count(col("hit")).as("n_hits"), count(lit(1)).as("n_pairs"))
         .orderBy("np")
     },
-    Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                        FROM embeddings),
-             ${ivfCellsSqlCte()},
-             ${ivfProbesSqlCte(8)},
-             tsims AS (SELECT q.qid, e.vec_id,
-                         ${cosineSql("q.qv", "e.v")} AS sim
-                       FROM q JOIN e ON e.vec_id <> q.qid),
-             truth AS (SELECT qid, vec_id FROM (
-                         SELECT qid, vec_id, row_number() OVER (
-                           PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                         FROM tsims) WHERE rn <= 3),
-             scand AS (SELECT p.qid, p.qv, p.prank, a.vec_id, a.v
-                       FROM iprobes p JOIN iasg a
-                         ON a.cell = p.pcell AND a.vec_id <> p.qid),
+    Some(s"""WITH ${vectorsSqlCte()}, $queriesSqlCte, ${ivfCandSqlCte(8)},
+             $truthSqlCte,
              ssims AS (SELECT qid, vec_id, prank,
                          ${cosineSql("qv", "v")} AS sim
-                       FROM scand),
+                       FROM icand),
              sw AS (SELECT np.np, s.qid, s.vec_id, s.sim
                     FROM ssims s
                     JOIN (SELECT unnest([1, 2, 4, 8]::BIGINT[]) AS np) np
                       ON s.prank <= np.np),
-             swtop AS (SELECT np, qid, vec_id FROM (
-                         SELECT np, qid, vec_id, row_number() OVER (
-                           PARTITION BY np, qid
-                           ORDER BY sim DESC, vec_id) AS rn
-                         FROM sw) WHERE rn <= 3)
+             ${topKSql("swtop", "sw", 3, "sim DESC", Seq("np"))}
            SELECT t.np, CAST(count(tr.qid) AS BIGINT) AS n_hits,
                   count(*) AS n_pairs
            FROM swtop t LEFT JOIN truth tr

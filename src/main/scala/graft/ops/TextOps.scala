@@ -173,15 +173,6 @@ object TextOps {
              AS n_bpe_vocab
            FROM documents ORDER BY doc_id"""))
 
-  /** Subword token counts via the [[graft.functions.BpeEncode]] codegen
-    * expression — the token budget a real training pipeline plans with
-    * (whitespace and regex counts under-count morphology; subword merges
-    * are what tokenizers actually do). `toks_sig` pins the exact token
-    * SEQUENCE, not just counts: the DuckDB oracle replays the identical
-    * merge table as a chain of delimiter-guarded `replace` calls
-    * (`BpeEncode.oracleEncodeSql`), so any divergence in merge order,
-    * overlap handling, or word splitting hash-mismatches at the gate.
-    * One map-side pass, no shuffle except the output sort. */
   /** Pre-sort BPE-count frame, split out so PlanSpec can pin the
     * one-scan map-side shape the report boundary's localCheckpoint
     * otherwise truncates to an ExistingRDD. */
@@ -197,6 +188,15 @@ object TextOps {
         md5(concat_ws("|", col("tk")).cast("binary")).as("toks_sig"))
   }
 
+  /** Subword token counts via the [[graft.functions.BpeEncode]] codegen
+    * expression — the token budget a real training pipeline plans with
+    * (whitespace and regex counts under-count morphology; subword merges
+    * are what tokenizers actually do). `toks_sig` pins the exact token
+    * SEQUENCE, not just counts: the DuckDB oracle replays the identical
+    * merge table as a chain of delimiter-guarded `replace` calls
+    * (`BpeEncode.oracleEncodeSql`), so any divergence in merge order,
+    * overlap handling, or word splitting hash-mismatches at the gate.
+    * One map-side pass, no shuffle except the output sort. */
   val qTextTokensBpe = Q(
     "q_text_tokens_bpe",
     (s, d) => tokensBpeFrame(s, d).sortedOnce("doc_id"),

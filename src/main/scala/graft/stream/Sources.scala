@@ -23,11 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Sources {
 
-  /** Streaming Kafka source configured like the reference's reader:
-    * `batchSize` caps records per partition per micro-batch, the analogue
-    * of `KafkaReader(batch_size=...)` (`core.py:12`, applied `core.py:111`)
-    * via `maxOffsetsPerTrigger`; cold start from earliest mirrors
-    * `auto.offset.reset='earliest'` (`core.py:23`). */
   /** The option map [[kafkaStream]] hands the Kafka source — factored out
     * so the wiring is unit-testable without a broker (the format itself
     * can't load in this offline image, so an option typo would otherwise
@@ -49,6 +44,11 @@ object Sources {
     minPartitions.fold(base)(n => base + ("minPartitions" -> n.toString))
   }
 
+  /** Streaming Kafka source configured like the reference's reader:
+    * `batchSize` caps records per partition per micro-batch, the analogue
+    * of `KafkaReader(batch_size=...)` (`core.py:12`, applied `core.py:111`)
+    * via `maxOffsetsPerTrigger`; cold start from earliest mirrors
+    * `auto.offset.reset='earliest'` (`core.py:23`). */
   def kafkaStream(
       spark: SparkSession,
       bootstrap: String,

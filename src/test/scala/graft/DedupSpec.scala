@@ -346,6 +346,18 @@ class DedupSpec extends SparkSpec {
       assert(n >= 0 && n < corpus, s"eps $e prunes $n of $corpus") }
   }
 
+  test("semantic sweep: each eps prunes exactly what semantic dedup prunes") {
+    val swept = Dedup.qDedupSemanticSweep.fn(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val vectors = Tables.embeddings(spark, sf)
+      .withColumn("v", col("embedding").cast("array<double>"))
+    Dedup.SemanticSweepEps.foreach { eps =>
+      val pruned = Dedup.semanticDedup(vectors, "vec_id", "v", eps = eps)
+        .filter(!col("kept")).count()
+      assert(swept((eps * 100).round) === pruned, s"eps $eps")
+    }
+  }
+
   test("dedup agreement: planted corpus surfaces all three verdicts") {
     val s = spark
     import s.implicits._
@@ -489,7 +501,30 @@ class DedupSpec extends SparkSpec {
       "oracle hot-key set" -> "HAVINGcount(*)>$",
       // the train/val/test split the contamination scans protect
       "engine split law" -> "<\"cc\"",
-      "oracle split law" -> "<'cc'")
+      "oracle split law" -> "<'cc'",
+      // the vector-search laws of Similarity and the embedding dedups
+      "engine query set" -> "filter(col(\"vec_id\")<",
+      "oracle query set" -> "WHEREvec_id<",
+      "engine embedding frame" -> "col(\"embedding\").cast(\"array<double>\")",
+      "oracle embedding frame" -> "CAST(embeddingASDOUBLE[])",
+      "engine top-k tail" -> "row_number().over(w)).filter(col(rank)<=k)",
+      "oracle top-k tail" -> "qidORDERBY",
+      "engine IVF probe ranking" -> "dot(col(\"cv\"),col(\"cv\"))/2",
+      "oracle IVF distance" -> "list_inner_product(c.cv,c.cv)/2",
+      "engine IVF candidate join" -> "col(\"pcell\")===col(\"cell\")",
+      "oracle IVF candidate join" -> "ONa.cell=p.pcellANDa.vec_id<>p.qid",
+      "multi-probe flip set" -> "yield(1L<<i)|(1L<<j)",
+      "oracle LSH probes" -> ",f.flip)",
+      "oracle PQ query LUT" -> "FROMqCROSSJOINmsCROSSJOINseedss",
+      "engine stride seeds" -> "%stride===0",
+      "oracle stride seeds" -> "%p.stride=0",
+      "engine semantic cells" -> "min(struct(col(\"negsim\")",
+      "oracle semantic cells" -> "ORDERBYsimDESC,cell)=1",
+      "oracle label-blocked pairs" -> "ONx.label=y.labelANDx.vec_id<y.vec_id",
+      "oracle brute-force truth" -> "JOINeONe.vec_id<>q.qid")
+    // spellings with no place in src/main at all: the oracle cosine is
+    // Similarity.cosineSql, never DuckDB's own kernel
+    val banned = Seq("list_cosine_similarity")
     val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val sources = try main.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
@@ -504,5 +539,7 @@ class DedupSpec extends SparkSpec {
     }.filter(_._2.size != 1)
     assert(respelled.isEmpty, respelled.map { case (law, sites) =>
       s"$law spelled ${sites.size} times (${sites.mkString(", ")})" }.mkString("; "))
+    val used = banned.filter(b => sources.exists(_._2.contains(b)))
+    assert(used.isEmpty, s"banned in src/main: ${used.mkString(", ")}")
   }
 }
